@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every declared query on SPARK_GRAFT_SF_DIR and
   * emits ONE JSON line on stdout — also written to bench.json so the
@@ -12,25 +12,24 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(functions.TopKAgg.FallbackConfKey, functions.TopKAgg.FallbackThreshold.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
+    warmUp(spark, SparkEntry.queries.values)
+    timedPass(spark, sfDir)
+  }
+
+  /** Bench's untimed warm-up, shared with `tools.Probe`. */
+  def warmUp(spark: SparkSession, fns: Iterable[(SparkSession, String) => DataFrame]): Unit = {
     // Untimed warmup: run every query once at the smallest SF so the timed
     // pass measures steady-state execution, not JIT + whole-stage-codegen
     // compilation (plan structures are SF-independent, so the codegen cache
     // carries over; ~4s of the r1 per-query numbers was compile cost).
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try fn(spark, warmDir).count() catch { case _: Throwable => }
-    }
+    fns.foreach { fn => try fn(spark, warmDir).count() catch { case _: Throwable => } }
     spark.catalog.clearCache() // drop warmup-SF persisted subplans
     System.gc() // warmup allocation debt collected before anything is timed
+  }
+
+  private def timedPass(spark: SparkSession, sfDir: String): Unit = {
     // min of two timed runs per query (adaptive third below): one-off
     // GC/JIT hiccups otherwise dominate sub-second queries and wobble
     // round-to-round comparisons. Cache is cleared BETWEEN queries

@@ -1,0 +1,22 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one session a graft JVM runs on: `local[n]` with `n` shuffle
+  * partitions, UTC session time, no UI, and the object-hash fallback
+  * threshold set explicitly (so `TopKAgg.tune` leaves it alone). `n`
+  * defaults to SPARK_GRAFT_CPUS, or 4 when that is unset.
+  */
+object Session {
+  def apply(n: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$n]")
+      .config("spark.sql.shuffle.partitions", n.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config(functions.TopKAgg.FallbackConfKey, functions.TopKAgg.FallbackThreshold.toString)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}

@@ -38,12 +38,12 @@ import org.apache.spark.storage.StorageLevel
   * (a SparkConf setting, default false) — a cluster deployment running
   * many iterative queries per context should set it, or point
   * `setCheckpointDir` at storage with a TTL/lifecycle rule.
-  * `tools.CkptProbe` measures the reliable-vs-local wall and byte cost.
+  * SCALE.md round 7 records the reliable-vs-local wall and byte cost.
   */
 object Ckpt {
 
   /** rdd id → creating call site, recorded by `truncate` on the local
-    * path. Leak attribution only (`tools.ResidentProbe` joins a pinned
+    * path. Leak attribution only (`tools.Probe` joins a pinned
     * id back to the builder line that made it): the bench_detail
     * `resident_rdds` counter says HOW MANY frames a query left pinned,
     * this says WHICH `truncated()` call — every RDD otherwise reports

@@ -261,7 +261,7 @@ object Metrics {
   def cohenKappa(predictions: DataFrame, truth: DataFrame): DataFrame =
     // persisted via `materialized`: three downstream aggregates (totals
     // + both marginals) would otherwise each recompute the full
-    // classify pipeline (PlanAudit showed 59 exchanges unpersisted);
+    // classify pipeline (the plan sweep showed 59 exchanges unpersisted);
     // the intermediate is released before return (round-9, ADVICE r8)
     materialized(predictions.join(truth, predictions("q_id") === truth("vec_id"))
         .select(col("label"), col("predicted"))) { j =>
@@ -283,7 +283,7 @@ object Metrics {
     */
   def mcc(predictions: DataFrame, truth: DataFrame): DataFrame =
     // persisted via `materialized`: five downstream aggregates over j
-    // (PlanAudit showed 101 exchanges / 18 BNLJ shapes with the
+    // (the plan sweep showed 101 exchanges / 18 BNLJ shapes with the
     // classify pipeline recomputed per marginal); released before
     // return (round-9, ADVICE r8)
     materialized(predictions.join(truth, predictions("q_id") === truth("vec_id"))

@@ -1101,7 +1101,7 @@ object AnnSearch {
     * broadcast: one linear scan of the code table per batch, no shuffle
     * of the corpus.
     *
-    * Where the gain actually is (GeoAnnProbe, MEASURED — not the naive
+    * Where the gain actually is (SCALE.md round 8, MEASURED — not the naive
     * bytes-ratio story): over STORED codes at production embedding
     * widths — dim = 768, 80 M pairs: code scan 1.43 s vs float scan
     * 12.19 s (8.5×), code row 16 B vs 6 KB. At dim = 64 the scans TIE
@@ -1117,13 +1117,13 @@ object AnnSearch {
   }
 
   /** Core of `ann_hamming` over (vec_id, v) query/target frames — the
-    * probe (`tools.GeoAnnProbe`) drives this against the float scan at
+    * round-8 scale run (SCALE.md) drove this against the float scan at
     * 10⁵-10⁶ codes.
     */
   /** (vec_id, lo, hi) sign-code table for a (vec_id, v) frame — the
     * BUILD step. At scale this is what gets persisted: the scan-rate
     * gain of binary codes exists only against a STORED code table
-    * (deriving codes inline still reads every float — GeoAnnProbe
+    * (deriving codes inline still reads every float — SCALE.md round 8
     * measured the inline form no faster than the float scan, 2.3 vs
     * 1.4 s at 20 M pairs, both parquet-IO-bound; over stored codes the
     * same scan is ~4×+ faster and the table 32× smaller).
@@ -1140,7 +1140,7 @@ object AnnSearch {
     // same small-input re-spread as the float kernel (Knn.pairwise):
     // a one-footer parquet corpus arrives as 1 scan partition, and a
     // broadcast-streamed scan over 1 partition runs on 1 core — the
-    // GeoAnnProbe found the code scan 36× SLOWER than the float scan
+    // SCALE.md round 8: the code scan ran 36× SLOWER than the float scan
     // (34.3 s vs 0.94 s at 20 M pairs) for exactly this reason
     val t = Knn.ensureParallelism(
       tc.select(col("vec_id").as("t_id"), col("lo").as("t_lo"), col("hi").as("t_hi")))
@@ -1456,7 +1456,7 @@ object AnnSearch {
     * What appends do NOT do: re-rank stored nodes' original top-k
     * against the new vectors (a stored node whose true k-NN set now
     * includes a new vector keeps its stale list until a rebuild).
-    * `tools.GraphSearchProbe`'s append leg measures exactly that decay;
+    * SCALE.md round 14 (navigation-graph lifecycle) measures that decay;
     * the SCALE.md table is the rebuild-cadence guidance.
     */
   def appendToKnnGraph(s: SparkSession, newVecs: DataFrame, path: String,
@@ -1539,7 +1539,7 @@ object AnnSearch {
     * cosine distance, id); the final top-3 is the answer. The beam
     * only improves monotonically (candidates = beam ∪ neighbors), so
     * revisit tracking is unnecessary. (The fixed-single-entry form was
-    * measured by GraphSearchProbe at recall ≈ 0 on 100 k unclustered
+    * measured (SCALE.md round 13) at recall ≈ 0 on 100 k unclustered
     * vectors — a k-NN graph has no long-range links to navigate from
     * one fixed node to an arbitrary query region; bucket seeding is
     * what makes the walk a REFINEMENT of the coarse index.)
@@ -1564,7 +1564,7 @@ object AnnSearch {
   }
 
   /** Core of `graphSearch` over arbitrary query/target frames
-    * ((q_id, q_v) / (t_id, t_v)) — `tools.GraphSearchProbe` drives the
+    * ((q_id, q_v) / (t_id, t_v)) — SCALE.md round 13 records the
     * beam/hops recall-cost trade at generated scale through this.
     */
   def graphSearchOf(q0: DataFrame, t0: DataFrame, beam: Int, hops: Int,
@@ -1583,7 +1583,7 @@ object AnnSearch {
     val t = if (tOwned) Ckpt.truncate(t0) else t0
     // `edges0`: a PREBUILT (src, dst) navigation graph — production
     // persists the graph and amortizes the build across query batches
-    // (GraphSearchProbe measures the two stages separately through
+    // (SCALE.md round 13 times the two stages separately through
     // this); the declared row rebuilds per run (row convention).
     val eOwned = edges0.forall(e => !Ckpt.isTruncated(e))
     val edges = edges0 match {
@@ -1596,7 +1596,7 @@ object AnnSearch {
     val wBeam = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("t_id"))
     // ENTRY = the best target sharing the query's sign-LSH bucket (the
     // library's own coarse quantizer seeding the walk — how production
-    // graph-ANN descends into the graph; GraphSearchProbe measured the
+    // graph-ANN descends into the graph; SCALE.md round 13 measured the
     // single-global-entry form at recall ≈ 0 on 100 k unclustered
     // vectors: a k-NN graph has no long-range links, so a fixed entry
     // cannot navigate to an arbitrary query's region in O(hops)).

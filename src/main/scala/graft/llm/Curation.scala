@@ -550,13 +550,22 @@ object Curation {
     * cardinality (the gram list is already distinct per source), never
     * by corpus size, so a shared boilerplate gram costs |sources|²
     * pairs, not docs². Counts exact; Jaccard is the one closing double.
+    *
+    * Eager: the call materializes the result as a `Ckpt.truncate`
+    * checkpoint before it returns, and that checkpoint stays pinned
+    * (`clearCache()` does not drop it). Inside a `Ckpt.scoped` build it
+    * is released with the scope's other intermediates; a caller outside
+    * a scope owns it and must `Ckpt.release` the returned frame when
+    * done, or it stays resident until the ContextCleaner reclaims the
+    * unreferenced frame.
     */
   def sourceOverlapMatrix(docs: DataFrame, gram: Int = 3): DataFrame = {
     // the distinct (source, gram) projection is truncated ONCE (round
     // 17 — the `noveltyDocs` rule): it feeds THREE consumers (both
     // self-join legs and the per-source totals), and lazy it re-ran the
-    // corpus-cardinality gram explode per consumer — HotJobProbe read
-    // 2-3 repeated single-task explode stages per run at sf0.1. Values
+    // corpus-cardinality gram explode per consumer — 2-3 repeated
+    // single-task explode stages per run at sf0.1 (OPTIMIZATION_r17.md
+    // change 5). Values
     // unchanged; the corpus-sized checkpoint is released once the
     // result is materialized (eager-fold + release, the family
     // discipline).

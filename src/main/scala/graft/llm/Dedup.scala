@@ -400,7 +400,7 @@ object Dedup {
     * near-identical template content whose band signatures collapse
     * into buckets past `maxBandBucket`, where the deployed search's cap
     * excludes them and their true pairs go unfound. Re-banding cannot
-    * fix that (`tools.LshMaintProbe` measured it: a mutual near-dup
+    * fix that (SCALE.md round 16 measured it: a mutual near-dup
     * clique shares its signatures at ANY banding — 8×2 → 16×2 moved
     * recall 0.1037 → 0.1042), because the hot bucket IS a duplicate
     * cluster. The fix is what the index exists for: DEDUP the flood —
@@ -621,7 +621,7 @@ object Dedup {
     val oldToks = TextOps.docTokens(
       liveIndexTable(s, path, "docs")
         .join(cand.select(col("d2").as("doc_id")).distinct(), "doc_id"))
-    // eager-fold + release (round 14 — ResidentProbe): the verified
+    // eager-fold + release (round 14): the verified
     // pair set is collision-bounded and read repeatedly by the ingest
     // funnel's stage counts; returned lazy it PINNED the candidate
     // checkpoint past the call (one leaked blockset per streamed
@@ -876,7 +876,7 @@ object Dedup {
     // Materialize the pair derivation ONCE before symmetrizing: the two
     // union branches are separate subtrees to Spark, so un-truncated
     // they each recompute the caller's whole upstream pipeline (the
-    // TimeQuery job trace showed the LSH signature+verify chain running
+    // a job trace (SCALE.md round 6) showed the LSH signature+verify chain running
     // 2×32 tasks inside the first CC job — half of dedup_cluster's wall
     // was upstream recompute, not CC)
     val p = pairs.select(col("doc_id1").as("a"), col("doc_id2").as("b")).truncated()
@@ -1119,7 +1119,7 @@ object Dedup {
     * argument; DedupSpec pins filtered ≡ unfiltered). So the sorted
     * stream is bounded by the corpus's actual duplicated-span coverage,
     * not its size — at 100 TB the rank input is the boilerplate, which
-    * is the thing being measured (`tools.SuffixProbe` reports the
+    * is the thing being measured (SCALE.md round 16 records the
     * ratio). xxhash64 seed collisions can only RETAIN extra positions
     * (a superset keeps the equivalence), never drop one. The adjacency
     * join is a shuffle equi-join on rank; the LCP evaluation runs only

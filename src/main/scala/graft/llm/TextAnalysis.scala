@@ -688,7 +688,7 @@ object TextAnalysis {
     * entry broadcast map; the M-step is a keyed sum over emitted pieces
     * (≤ |word| per word). The two rank windows run over the substring-
     * count and trained-piece frames (vocab-sized, the corpus_zipf rule
-    * — PlanAudit-whitelisted). Inter-round vocab frames (≤ SeedV +
+    * — PlanAuditSpec-whitelisted). Inter-round vocab frames (≤ SeedV +
     * alphabet rows) are truncated so round r+1 plans against a constant
     * tree, and the registration is `Ckpt.scopedQ` so only the final
     * vocabulary survives the row.

@@ -33,7 +33,7 @@ object Graph {
     * — `custSuppEdges` (orders⋈lineitem → distinct → symmetrize) or
     * `coOrderEdges` (the quadratic-per-order pair expansion) — and
     * checkpoint-truncating its own copy. Measured at sf0.1
-    * (`tools.EdgeBuildProbe`): ~1.1-1.4 s per build, repaid by 21 rows
+    * (OPTIMIZATION_r16.md change 1): ~1.1-1.4 s per build, repaid by 21 rows
     * = ~25 s of the 68.9 s family. The memo materializes each list ONCE
     * per (session, dir); the cold build is charged visibly as Bench's
     * `build_graph_edges` line (the round-11 cold-build accounting rule),
@@ -48,7 +48,7 @@ object Graph {
     .empty[(SparkSession, String, String), DataFrame]
 
   /** Round-17 MEASURED AND REJECTED — memo checkpoints at the
-    * session's shuffle width: `tools.PartProbe` found AQE freezes the
+    * session's shuffle width: SCALE.md round 17 found AQE freezes the
     * coOrder memo at 3 partitions (custSupp at 10) and the hypothesis
     * was that consumers' map stages are parallelism-capped. A
     * hash-repartition to 32 before the truncate REGRESSED the whole
@@ -112,7 +112,7 @@ object Graph {
     * `Ckpt.truncate`d so each round plans against a constant-size
     * tree and downstream actions never re-derive earlier rounds —
     * WITHOUT this, a 349-node / 3-round run spent 6.3 s in repeated
-    * analysis/planning of the unrolled lineage (CcProbe pr leg); with
+    * analysis/planning of the unrolled lineage (SCALE.md round 5); with
     * it, 2.2 s. `Ckpt.truncate` picks reliable `checkpoint()` when a
     * checkpoint dir is configured (cluster) else `localCheckpoint()`.
     * Checkpointing changes no values, so the DuckDB oracle's
@@ -129,7 +129,7 @@ object Graph {
     // shape kept separate checkpointed nodes/deg frames, re-joined deg
     // every round, and re-ran the n1 broadcast subquery every round —
     // on a 349-node sf0.1 graph that was most of the query's 2.8 s
-    // (TimeQuery job trace: ~15 sub-0.3 s scheduling-bound jobs around
+    // (a job trace: ~15 sub-0.3 s scheduling-bound jobs around
     // 0.9 s of real edge-building work). Same arithmetic, same values:
     // r/od uses the same od, teleport/n the same n.
     val deg = edges.groupBy("src").agg(count(lit(1)).as("od"))
@@ -792,7 +792,7 @@ object Graph {
   }
 
   /** The declared row's budgeted seed set over any edge frame — split
-    * out (round 15, VERDICT r14 missing #3) so `tools.BtwAccProbe` can
+    * out (round 15, VERDICT r14 missing #3) so the SCALE.md round-15 run could
     * sweep the budget ladder {24, 64, 128} through EXACTLY the declared
     * refinement (md5-u16 hash-mod, ceil(n/budget) modulus) instead of a
     * reimplementation. Identity whenever the seed rule yields ≤ budget.
@@ -831,7 +831,7 @@ object Graph {
     * practice made a knob: the sketch row (`harmonicHll`, O(|V|) state)
     * is the production path, and the exact form spot-checks it on a
     * deterministically-refined seed SAMPLE, since exact state is
-    * |seeds|·|reach| (CcProbe: the uncapped exact form OOMs an 8 GiB
+    * |seeds|·|reach| (SCALE.md round 9: the uncapped exact form OOMs an 8 GiB
     * heap at 10× seed density). `maxSeeds > 0` keeps ~that many seeds
     * via hash-mod refinement — `xxhash64(node) % ceil(n/maxSeeds) = 0`,
     * deterministic and id-structure-independent (a raw `node % m`
@@ -982,11 +982,11 @@ object Graph {
     * halves the per-round message shuffle AND the per-row sketch
     * objects the 3 `ObjectHashAggregate` hops churn through — the
     * allocation pressure behind the row's 29 s driver-bench outlier
-    * at lgK 10 — and `tools.HllAccProbe` measures the lgK 7 estimates
+    * at lgK 10 — and SCALE.md round 14 records the lgK 7 estimates
     * within 5.7 % of exact at sf0.001 and 2.4 % at sf0.01 (theoretical
     * dense RSE 1.04/√2⁷ ≈ 9.2 %; lgK 6 degrades to 17 %, rejected).
-    * GraphSpec pins the 10 % envelope. `tools.CcProbe`'s harmonic
-    * leg measures per-round state rows at two seed densities — O(|V|)
+    * GraphSpec pins the 10 % envelope. SCALE.md round 9's harmonic
+    * leg measured per-round state rows at two seed densities — O(|V|)
     * both, the scaling claim made measurable.
     */
   def harmonicHll(edgesIn: DataFrame, seedMod: Int = BfsSeedMod,
@@ -1062,7 +1062,7 @@ object Graph {
     // explicit width on the center-key exchange (round 17, guide §2.5):
     // the guard window and the pair self-join both key on `u`, and AQE
     // coalesced that few-MB exchange to ~10 partitions — the Σ deg(u)²
-    // wedge expansion (the row's dominant stage, HotJobProbe: 2.4 s)
+    // wedge expansion (the row's dominant stage, 2.4 s: OPTIMIZATION_r17.md change 4)
     // then ran at a third of the session's cores. A user-specified
     // repartition pins the session's shuffle width; the window and the
     // self-join reuse it (one exchange, as before). Pair values and
@@ -1384,7 +1384,7 @@ object Graph {
       // checkpoints the plan grows by one join per step AND each lazy
       // step in the output union re-evaluates its chain from the last
       // checkpoint — the probe measures where that trade breaks even
-      // (WalkCorpusProbe table in SCALE.md); corpus bit-identical at
+      // (SCALE.md round 12 walk-corpus table); corpus bit-identical at
       // any K (the step draw is a deterministic join off checkpointed
       // adjacency). Declared rows keep K = 1.
       state = if (s % ckptEvery == 0 || s == steps) next.truncated() else next
@@ -1448,7 +1448,7 @@ object Graph {
     * bigger nodes take the closed form — the two draws are
     * bit-identical (GraphSpec pins both pure modes and a mid-corpus
     * threshold against each other), so the output is invariant to the
-    * setting; only the physical plan changes. WalkHubProbe measured
+    * setting; only the physical plan changes. SCALE.md round 11 measured
     * why: on THIS 32-thread box the window form wins wall-clock
     * (10⁶-degree hub: 23 s vs 89 s — the closed form's extra fixed
     * exchanges dominate while a 10⁶-row in-task sort is still cheap),

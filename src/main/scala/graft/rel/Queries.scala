@@ -1105,8 +1105,8 @@ object Queries {
         col("c_custkey").as("id"), col("c_acctbal").as("x"),
         (pmod(col("c_custkey"), lit(89)) * 50.0).as("y")), r)
 
-  /** Core of `join_spatial_grid` over any (id, x, y) frame — the probe
-    * (`tools.GeoAnnProbe`) drives this at 10⁵-10⁶ points.
+  /** Core of `join_spatial_grid` over any (id, x, y) frame — the round-8
+    * scale run (SCALE.md) drove this at 10⁵-10⁶ points.
     */
   private[graft] def spatialGridJoinPts(pts: DataFrame, r: Double): DataFrame = {
     val cell = pts
@@ -2465,7 +2465,7 @@ object Queries {
     * component is its own declared row's builder (one corpus pass,
     * single-row output), and everything after the union is arithmetic
     * over a 6-row frame — the global-order window is bounded at m rows
-    * by construction (PlanAudit whitelist entry carries the bound).
+    * by construction (the PlanAuditSpec whitelist entry carries the bound).
     */
   /** The BH critical grid Φ⁻¹(1 − 0.05·i/(2·6)), i = 1..6 — ONE
     * definition shared by the Spark builder, the spliced oracle, and

@@ -2061,7 +2061,7 @@ object TimeSeries {
     * named: the distributed rank selection bounded the RANKING, but pair
     * GENERATION is inherently O(T²) in the hourly-bucket count, so a
     * feed whose calendar grows 10× pays 100× in the pair self-join
-    * (SuiteScaleProbe: 12.6 s at 2× → 226.5 s at 10×, 18× wall for 5×
+    * (SCALE.md round 10 sweep: 12.6 s at 2× → 226.5 s at 10×, 18× wall for 5×
     * data). The standard scale move is POINT subsampling (Theil-Sen
     * over a random subset of points is a consistent estimator of the
     * same median slope — its breakdown/efficiency degrade smoothly with
@@ -2109,7 +2109,7 @@ object TimeSeries {
     // — hot keys in joins): `event_type` is an O(1)-cardinality key, so
     // the exact row's pair self-join hashed every type's whole bucket
     // series into one partition and the O(T²) pair generation +
-    // map-side slope counts ran on ≤ |types| tasks (HotJobProbe at
+    // map-side slope counts ran on ≤ |types| tasks (OPTIMIZATION_r17.md change 2, at
     // sf0.1-local[32]: one 1.2 s single-task stage = a third of the
     // row) — and at a 10-year calendar that one task generates 3.8 B
     // pairs. Standard salt: the left side keys each bucket by

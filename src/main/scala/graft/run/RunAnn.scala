@@ -110,7 +110,7 @@ object RunAnn {
     *   2. if the ratio crosses `maxRatio`, RETRAIN — Lloyd's seeded by
     *      a deterministic hash-stride RESEED over the LIVE vectors
     *      (~one seed per current cell-size average). NOT a warm start
-    *      from the stored centroids: `tools.IvfMaintProbe` measured the
+    *      from the stored centroids: SCALE.md round 13 measured the
     *      warm start at 51.15 → 47.62 max/median on a shifted-corpus
     *      drift — Lloyd's cannot SPLIT a drift cluster that one old
     *      centroid owns, because every other centroid keeps owning its
@@ -237,7 +237,7 @@ object RunAnn {
     // approximation honesty (the pqTopK precedent): near-uniform
     // corpora are graph navigation's documented worst case — a k-NN
     // graph over structureless vectors has no long-range geometry to
-    // walk (GraphSearchProbe: recall ≈ 0 uniform vs 0.57-0.71
+    // walk (SCALE.md round 13: recall ≈ 0 uniform vs 0.57-0.71
     // clustered at 100 k) — so the recall line carries the context a
     // reader needs to judge it
     val report =
@@ -251,7 +251,7 @@ object RunAnn {
          |${stages.map(st => f"  ${st.name} ${st.metric} ${st.wall}%.3f").mkString("\n")}
          |recall_at_$k: ${f"$recallPct%.4f"} ($hitRows exact rows)
          |note: recall on near-uniform corpora is the method's documented floor
-         |      (tools.GraphSearchProbe clustered leg is the structure reference)
+         |      (SCALE.md round 13's clustered leg is the structure reference)
          |""".stripMargin
     Files.createDirectories(Paths.get(outDir))
     Files.writeString(Paths.get(s"$outDir/graph_run_report.txt"), report)
@@ -264,9 +264,9 @@ object RunAnn {
     * compaction and the IVF retrain trigger already have):
     * `appendToKnnGraph` never re-ranks stored nodes' out-edges, so a
     * stored node whose TRUE k-NN set now includes appended vectors
-    * keeps its stale list until a rebuild — the decay
-    * `tools.GraphSearchProbe`'s append leg measures. This promotes that
-    * observable into the retrain DECISION:
+    * keeps its stale list until a rebuild — the decay SCALE.md round
+    * 14 measured. This promotes that observable into the retrain
+    * DECISION:
     *
     *   1. measure ADJACENCY RECALL over a deterministic hash-stride
     *      sample of stored nodes: |stored out-edges ∩ true top-k| /
@@ -324,72 +324,31 @@ object RunAnn {
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.length >= 1 && args(0) == "--graph") {
-      require(args.length >= 3,
-        "usage: RunAnn --graph <sfdir> <outdir> [k] [beam] [hops]")
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config(graft.functions.TopKAgg.FallbackConfKey,
-          graft.functions.TopKAgg.FallbackThreshold.toString)
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      val k = if (args.length > 3) args(3).toInt else 3
-      val beam = if (args.length > 4) args(4).toInt else 8
-      val hops = if (args.length > 5) args(5).toInt else 3
-      print(runGraph(spark, args(1), args(2), k, beam, hops))
-      spark.stop()
-      return
+    val spark = graft.Session()
+    args.headOption match {
+      case Some("--graph") =>
+        require(args.length >= 3,
+          "usage: RunAnn --graph <sfdir> <outdir> [k] [beam] [hops]")
+        val k = if (args.length > 3) args(3).toInt else 3
+        val beam = if (args.length > 4) args(4).toInt else 8
+        val hops = if (args.length > 5) args(5).toInt else 3
+        print(runGraph(spark, args(1), args(2), k, beam, hops))
+      case Some("--maintain-graph") =>
+        require(args.length >= 2,
+          "usage: RunAnn --maintain-graph <outdir> [minRecall] [k]")
+        val floor = if (args.length > 2) args(2).toDouble else 0.8
+        val k = if (args.length > 3) args(3).toInt else 3
+        print(maintainGraph(spark, args(1), floor, k))
+      case Some("--maintain") =>
+        require(args.length >= 2, "usage: RunAnn --maintain <outdir> [maxRatio]")
+        val ratio = if (args.length > 2) args(2).toDouble else 4.0
+        print(maintain(spark, args(1), ratio))
+      case _ =>
+        require(args.length >= 2, "usage: RunAnn <sfdir> <outdir> [k] [nprobe]")
+        val k = if (args.length > 2) args(2).toInt else 5
+        val nprobe = if (args.length > 3) args(3).toInt else 2
+        print(run(spark, args(0), args(1), k, nprobe))
     }
-    if (args.length >= 1 && args(0) == "--maintain-graph") {
-      require(args.length >= 2,
-        "usage: RunAnn --maintain-graph <outdir> [minRecall] [k]")
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      val floor = if (args.length > 2) args(2).toDouble else 0.8
-      val k = if (args.length > 3) args(3).toInt else 3
-      print(maintainGraph(spark, args(1), floor, k))
-      spark.stop()
-      return
-    }
-    if (args.length >= 1 && args(0) == "--maintain") {
-      require(args.length >= 2, "usage: RunAnn --maintain <outdir> [maxRatio]")
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      val ratio = if (args.length > 2) args(2).toDouble else 4.0
-      print(maintain(spark, args(1), ratio))
-      spark.stop()
-      return
-    }
-    require(args.length >= 2, "usage: RunAnn <sfdir> <outdir> [k] [nprobe]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.functions.TopKAgg.FallbackConfKey,
-        graft.functions.TopKAgg.FallbackThreshold.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val k = if (args.length > 2) args(2).toInt else 5
-    val nprobe = if (args.length > 3) args(3).toInt else 2
-    print(run(spark, args(0), args(1), k, nprobe))
     spark.stop()
   }
 }

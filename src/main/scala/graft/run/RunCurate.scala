@@ -112,16 +112,7 @@ object RunCurate {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: RunCurate <sfdir> <outdir> [dupJaccard]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.functions.TopKAgg.FallbackConfKey,
-        graft.functions.TopKAgg.FallbackThreshold.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     val thr = if (args.length > 2) args(2).toDouble else 0.8
     print(run(spark, args(0), args(1), thr))
     spark.stop()

@@ -102,7 +102,7 @@ object RunEmbed {
     * the two-clique fixture, where boundary recall is a real quality
     * measurement (on the uniform harness graph the corpus is sparse
     * and communities don't exist, so embedding-vs-cooccurrence overlap
-    * is honest noise — measured 0.01-0.02 by `tools.EmbedNnProbe`;
+    * is honest noise — measured at 0.01-0.02;
     * the fixture pin is the gate, the harness row is the surface).
     */
   private[graft] def embedNnOf(spark: SparkSession, walksAll: DataFrame,
@@ -146,7 +146,7 @@ object RunEmbed {
     // norm folds per PAIR — 2/3 of the HOF work recomputed |vocab|
     // (resp. |seeds|) times — while the streamed vocab side inherited
     // the temp-parquet scan's 1-2 partitions, so ~4 M interpreted HOF
-    // evals ran in ONE task (HotJobProbe: a single 2.6 s single-task
+    // evals ran in ONE task (OPTIMIZATION_r17.md change 3: a single 2.6 s single-task
     // job = the whole row's wall). Norms are now computed once per row
     // on each side (same fold over the same values — bit-identical
     // doubles), the seed side is broadcast explicitly (≤ seedBudget
@@ -242,14 +242,7 @@ object RunEmbed {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: RunEmbed <sfdir> <outdir> [steps] [walksPerSeed] [dim]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     val steps = if (args.length > 2) args(2).toInt else 8
     val wps = if (args.length > 3) args(3).toInt else 4
     val dim = if (args.length > 4) args(4).toInt else 16

@@ -141,16 +141,7 @@ object RunFknn {
       distType = if (args.length > 4) args(4) else "l2",
       version = if (args.length > 5) args(5) else "global",
       blocks = if (args.length > 6) args(6).toInt else 4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.functions.TopKAgg.FallbackConfKey,
-        graft.functions.TopKAgg.FallbackThreshold.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     print(run(spark, cfg))
     spark.stop()
   }

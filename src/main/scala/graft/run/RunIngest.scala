@@ -122,7 +122,7 @@ object RunIngest {
     // survivor counts read from ONE aggregate job — previously four
     // persist+count actions, each re-evaluating a progressively longer
     // join chain (~0.9 s/micro-batch of pure scheduling at slice
-    // scale, StreamRowProbe). Flag ≡ anti-join equivalences:
+    // scale, OPTIMIZATION_r16.md change 2). Flag ≡ anti-join equivalences:
     //  - id_new:     left join on unique standing doc_ids; no match ≡
     //                anti-join survivor (null keys match nothing in
     //                both forms).
@@ -497,7 +497,7 @@ object RunIngest {
     *      re-measure over the now-live content.
     *
     * "collapsed: false" runs cost the sampled truth join — the cadence
-    * observable. `tools.LshMaintProbe` drives the trigger under planted
+    * observable. SCALE.md round 16 drove the trigger under planted
     * template-boilerplate drift; RunIngestSpec pins the loop.
     */
   def maintainLsh(spark: SparkSession, outDir: String,
@@ -531,55 +531,27 @@ object RunIngest {
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.length >= 1 && args(0) == "--maintain") {
-      require(args.length >= 2,
-        "usage: RunIngest --maintain <outdir> [minRecall] [sampleMod] [maxBandBucket]")
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      val floor = if (args.length > 2) args(2).toDouble else 0.9
-      val mod = if (args.length > 3) args(3).toInt else 8
-      val cap = if (args.length > 4) args(4).toInt else 1000
-      print(maintainLsh(spark, args(1), floor, mod, cap))
-      spark.stop()
-      return
+    val spark = graft.Session()
+    args.headOption match {
+      case Some("--maintain") =>
+        require(args.length >= 2,
+          "usage: RunIngest --maintain <outdir> [minRecall] [sampleMod] [maxBandBucket]")
+        val floor = if (args.length > 2) args(2).toDouble else 0.9
+        val mod = if (args.length > 3) args(3).toInt else 8
+        val cap = if (args.length > 4) args(4).toInt else 1000
+        print(maintainLsh(spark, args(1), floor, mod, cap))
+      case Some("--retract") =>
+        require(args.length == 3, "usage: RunIngest --retract <outdir> <idsParquet>")
+        print(retract(spark, args(1), args(2)))
+      case _ =>
+        require(args.length >= 2,
+          "usage: RunIngest <sfdir> <outdir> [batchMod] [batchRem] [dupJaccard] | --retract <outdir> <idsParquet>")
+        val bm = if (args.length > 2) args(2).toInt else 5
+        val br = if (args.length > 3) args(3).toInt else 3
+        val thr = if (args.length > 4) args(4).toDouble else 0.8
+        val eps = if (args.length > 5) args(5).toDouble else 0.75
+        print(run(spark, args(0), args(1), bm, br, thr, eps))
     }
-    if (args.length >= 1 && args(0) == "--retract") {
-      require(args.length == 3, "usage: RunIngest --retract <outdir> <idsParquet>")
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      print(retract(spark, args(1), args(2)))
-      spark.stop()
-      return
-    }
-    require(args.length >= 2,
-      "usage: RunIngest <sfdir> <outdir> [batchMod] [batchRem] [dupJaccard] | --retract <outdir> <idsParquet>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.functions.TopKAgg.FallbackConfKey,
-        graft.functions.TopKAgg.FallbackThreshold.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val bm = if (args.length > 2) args(2).toInt else 5
-    val br = if (args.length > 3) args(3).toInt else 3
-    val thr = if (args.length > 4) args(4).toDouble else 0.8
-    val eps = if (args.length > 5) args(5).toDouble else 0.75
-    print(run(spark, args(0), args(1), bm, br, thr, eps))
     spark.stop()
   }
 }

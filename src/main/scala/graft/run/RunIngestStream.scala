@@ -127,14 +127,13 @@ object RunIngestStream {
 
   /** Shuffle parallelism for the slice-bounded GATE rows below (round
     * 16, VERDICT r15 #1): the declared stream rows drive ≤ 500 docs/
-    * vectors through ~190 jobs per micro-batch, and
-    * `tools.StreamRowProbe` attributed the wall to per-stage scheduling
-    * — 32 shuffle tasks per exchange for a few hundred rows is pure
-    * overhead. The gate rows scope the session's shuffle parallelism
-    * down to this while they run (bootstrap + drops + both drains) and
-    * restore it after; the PRODUCTION runners (`run`/`runVec`/
-    * `runRetract`) are untouched — a deployment sizes its session to
-    * its drop volume.
+    * vectors through ~190 jobs per micro-batch, and SCALE.md round 16
+    * attributed the wall to per-stage scheduling — 32 shuffle tasks
+    * per exchange for a few hundred rows is pure overhead. The gate
+    * rows scope the session's shuffle parallelism down to this while
+    * they run (bootstrap + drops + both drains) and restore it after;
+    * the PRODUCTION runners (`run`/`runVec`/`runRetract`) are untouched
+    * — a deployment sizes its session to its drop volume.
     */
   private val SliceShufflePartitions = 4
 
@@ -146,18 +145,22 @@ object RunIngestStream {
     * pure-write thunks (no `Ckpt` state — checkpoint scopes are
     * thread-local and a pool thread would escape the query's scope).
     */
-  private def bothInParallel(a: => Unit, b: => Unit): Unit = {
+  private[run] def bothInParallel(a: => Unit, b: => Unit): Unit = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
-      val fa = pool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = a })
-      val fb = pool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = b })
-      try { fa.get(); fb.get() }
-      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      val fs = Seq(pool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = a }),
+        pool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = b }))
+      // wait for BOTH before rethrowing: a failed sibling must not leave
+      // the other still writing into the output while the caller unwinds
+      val failures = fs.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach(e => throw e)
     } finally pool.shutdown()
   }
 
   private def withSliceShuffle[T](spark: SparkSession)(body: => T): T = {
-    if (sys.env.get("GRAFT_SLICE_SHUFFLE").contains("off")) return body // A/B probe knob
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, SliceShufflePartitions.toString)
@@ -594,49 +597,21 @@ object RunIngestStream {
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.length >= 1 && args(0) == "--retract") {
-      require(args.length >= 3, "usage: RunIngestStream --retract <streamDir> <outDir>")
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      print(runRetract(spark, args(1), args(2)))
-      spark.stop()
-      return
+    val spark = graft.Session()
+    args.headOption match {
+      case Some("--retract") =>
+        require(args.length >= 3, "usage: RunIngestStream --retract <streamDir> <outDir>")
+        print(runRetract(spark, args(1), args(2)))
+      case Some("--vec") =>
+        require(args.length >= 3, "usage: RunIngestStream --vec <streamDir> <outDir> [eps]")
+        val eps = if (args.length > 3) args(3).toDouble else 0.75
+        print(runVec(spark, args(1), args(2), eps))
+      case _ =>
+        require(args.length >= 2,
+          "usage: RunIngestStream <streamDir> <outDir> [dupJaccard] | --vec <streamDir> <outDir> [eps]")
+        val thr = if (args.length > 2) args(2).toDouble else 0.95
+        print(run(spark, args(0), args(1), thr))
     }
-    if (args.length >= 1 && args(0) == "--vec") {
-      require(args.length >= 3, "usage: RunIngestStream --vec <streamDir> <outDir> [eps]")
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      val eps = if (args.length > 3) args(3).toDouble else 0.75
-      print(runVec(spark, args(1), args(2), eps))
-      spark.stop()
-      return
-    }
-    require(args.length >= 2,
-      "usage: RunIngestStream <streamDir> <outDir> [dupJaccard] | --vec <streamDir> <outDir> [eps]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.functions.TopKAgg.FallbackConfKey,
-        graft.functions.TopKAgg.FallbackThreshold.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val thr = if (args.length > 2) args(2).toDouble else 0.95
-    print(run(spark, args(0), args(1), thr))
     spark.stop()
   }
 }

@@ -132,14 +132,7 @@ object RunMonitor {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: RunMonitor <sfdir> <outdir>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     // replay the events table through the streaming file-source ingest —
     // the batch table becomes "the stream so far", drained and reported.
     // File sources watch DIRECTORIES; the harness table is a single

@@ -100,14 +100,7 @@ object RunProfile {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: RunProfile <sfdir> <outdir>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     print(run(spark, args(0), args(1)))
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.llm.Curation
@@ -15,13 +14,8 @@ import graft.llm.Curation
 object CurationScaleProbe {
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.nonEmpty) args(0).toInt else 200000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
+    val tally = Tally.on(spark)
 
     val docPath = s"/tmp/scale_cur_$nDocs"
     spark.range(nDocs)
@@ -36,21 +30,13 @@ object CurationScaleProbe {
 
     // shuffle-write accounting (TsScaleProbe precedent): local in-memory
     // shuffles barely move wall time, so the number that predicts cluster
-    // behavior is BYTES SHUFFLED — summed per leg by a stage listener
-    val shuffled = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffled.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
-
+    // behavior is BYTES SHUFFLED — summed per leg by the tally
     def legMb(name: String)(body: => Long): (Double, Double) = {
-      shuffled.set(0)
+      tally.take()
       val t0 = System.nanoTime()
       val rows = body
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // listener bus drain (probe-grade wait)
-      val mb = shuffled.get / 1e6
+      val mb = tally.take().shuffleMb
       println(f"[scale] $name nDocs=$nDocs rows=$rows wall=$wall%.1f s " +
         f"(${nDocs / wall}%.0f docs/s) shuffleMB=$mb%.1f")
       (wall, mb)
@@ -73,7 +59,7 @@ object CurationScaleProbe {
     // sum (round 8). 8 sources means the window form funnels the WHOLE
     // corpus through 8 sort partitions — a parallelism ceiling no
     // executor count lifts; the two-pass form range-partitions into
-    // `cpus` slices regardless of source cardinality. Forced through an
+    // shuffle-width slices regardless of source cardinality. Forced through an
     // agg over both outputs (count() lets ColumnPruning drop unused
     // window exprs — the forceDup lesson below).
     def forcePack(df: org.apache.spark.sql.DataFrame): Long =

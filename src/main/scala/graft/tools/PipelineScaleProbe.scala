@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.Ckpt.TruncateSyntax
@@ -22,14 +21,7 @@ object PipelineScaleProbe {
     val nDocs = if (args.nonEmpty) args(0).toInt else 50000
     val nVecs = if (args.length > 1) args(1).toInt else 100000
     val nQ = if (args.length > 2) args(2).toInt else 1000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.TopKAgg.tune(spark)
+    val spark = graft.Session()
 
     // ---- dedup: MinHash-LSH over N docs --------------------------------
     val docPath = s"/tmp/scale_docs_$nDocs"

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.Fknn
@@ -9,22 +8,20 @@ import graft.core.Fknn
   * table (written to /tmp) to check the O(N²) pair stage scales linearly
   * in pairs with the bounded-heap top-k (no driver collect, no full-sort).
   * usage: tools/run.sh graft.tools.ScaleProbe [nRows] [dim]
+  *
+  * The per-layer split of the kernel (forced distance scan vs top-k) is
+  * perfbench's `distance.scan_s` / `topk.self_s`, not timed here: a bare
+  * `count()` over the pair frame prunes the distance column, so it times
+  * a scan that never runs (perfbench/NOTES.md).
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 20000
     val dim = if (args.length > 1) args(1).toInt else 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // kNN-sized group counts need the raised object-hash fallback
-    // threshold or ObjectHashAggregate sort-falls-back (the 4-8×
-    // regression this probe exists to measure the absence of)
-    graft.functions.TopKAgg.tune(spark)
+    // the factory sets the raised object-hash fallback threshold that
+    // kNN-sized group counts need, or ObjectHashAggregate sort-falls-back
+    // (the 4-8× regression this probe exists to measure the absence of)
+    val spark = graft.Session()
 
     val path = s"/tmp/scale_emb_${n}_$dim"
     // deterministic synthetic vectors: hash-seeded, no RNG state
@@ -38,19 +35,6 @@ object ScaleProbe {
     val train = e.filter(col("vec_id") % 10 =!= 0)
     val queries = e.filter(col("vec_id") % 10 === 0)
 
-    if (sys.env.contains("GRAFT_STAGES")) {
-      val pairs = graft.core.Knn.pairwise(train, train, hintBroadcastQ = false)
-        .filter(col("q_id") =!= col("t_id"))
-      var t = System.nanoTime()
-      val np = pairs.count()
-      println(f"[stage] pairs.count: $np rows in ${(System.nanoTime()-t)/1e9}%.1f s")
-      t = System.nanoTime()
-      val nk = graft.core.Knn.topK(pairs, 5).count()
-      println(f"[stage] topK(agg).count: $nk rows in ${(System.nanoTime()-t)/1e9}%.1f s")
-      t = System.nanoTime()
-      val nw = graft.core.Knn.topKWindow(pairs, 5).count()
-      println(f"[stage] topK(window).count: $nw rows in ${(System.nanoTime()-t)/1e9}%.1f s")
-    }
     var t0 = System.nanoTime()
     val mem = Fknn.membershipInit(train, 5, 10)
     val memRows = mem.count()

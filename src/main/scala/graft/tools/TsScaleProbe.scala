@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.Ckpt.TruncateSyntax
@@ -17,13 +16,8 @@ import graft.rel.{BloomPrune, TimeSeries}
 object TsScaleProbe {
   def main(args: Array[String]): Unit = {
     val nEvents = if (args.nonEmpty) args(0).toInt else 2000000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
+    val tally = Tally.on(spark)
 
     // 100 versions per user key; value hash-seeded, ts strides 1s
     val evPath = s"/tmp/scale_ts_$nEvents"
@@ -39,22 +33,14 @@ object TsScaleProbe {
 
     // shuffle-write accounting: wall time barely moves on an in-memory
     // local shuffle, so the number that predicts cluster behavior is
-    // BYTES SHUFFLED — a stage-completion listener sums them per leg
-    val shuffled = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffled.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
-
+    // BYTES SHUFFLED — the tally sums them per leg
     def legN(name: String, n: Long)(body: => Long): Unit = {
-      shuffled.set(0)
+      tally.take()
       val t0 = System.nanoTime()
       val rows = body
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // listener bus drain (private API; probe-grade wait)
       println(f"[scale] $name nEvents=$n rows=$rows wall=$wall%.1f s " +
-        f"(${n / wall}%.0f ev/s) shuffleMB=${shuffled.get / 1e6}%.1f")
+        f"(${n / wall}%.0f ev/s) shuffleMB=${tally.take().shuffleMb}%.1f")
     }
     def leg(name: String)(body: => Long): Unit = legN(name, nEvents)(body)
 

@@ -375,7 +375,7 @@ class GraphSpec extends SparkSpecBase {
   test("harmonicHll: declared-row lgK 7 estimates stay within the 10% dense-mode envelope") {
     // the DECLARED row runs lgK = HarmonicHllLgK = 7 (round 14 — the 8x
     // cheaper sketch the 100 TB path actually ships; VERDICT r13 #1).
-    // tools.HllAccProbe measured max rel-error 5.66% at sf0.001 / 2.33%
+    // SCALE.md round 14 (lgK 7 A/B) records max rel-error 5.66% at sf0.001 / 2.33%
     // at sf0.01 vs exact harmonicPerSeed (theoretical dense RSE
     // 1.04/sqrt(2^7) = 9.2%); the pin is 10% — deterministic estimator
     // (fixed hash, order-independent union) on fixed fixtures, so this
@@ -639,7 +639,7 @@ class GraphSpec extends SparkSpecBase {
     // and pair dependencies are non-negative, so budgeted pairs ⊆ exact
     // pairs ⇒ per-node budgeted score ≤ exact score and budgeted broker
     // set ⊆ exact broker set — the direction the estimate can be wrong
-    // in is pinned here; tools.BtwAccProbe measures HOW wrong the
+    // in is pinned here; SCALE.md round 14/15 records HOW wrong the
     // ranking gets (sf0.001 identity — budget inactive; sf0.01 with 15
     // of 30 seeds: Spearman 0.66, overlap@10 0.60 — the SCALE.md table)
     val ring = (0L until 40L).map(i => (i, (i + 1) % 40))
@@ -662,7 +662,7 @@ class GraphSpec extends SparkSpecBase {
   test("betweenness budget ladder (sf0.01): rank fidelity improves with budget; budget >= n is identity") {
     // the ε-cost curve of VERDICT r14 missing #3, pinned at its cheap
     // end (sf0.01: 30 mod-rule seeds, exact ≈ 18 s; the sf0.1 ladder
-    // {24, 64, 128} is tools.BtwAccProbe's — SCALE.md table). All
+    // {24, 64, 128} is the SCALE.md round-15 budget sweep). All
     // inputs are md5-hash-seeded, so every number here is
     // deterministic: budget 6 keeps 9 seeds (Spearman 0.5201 vs
     // exact), the declared 24 keeps 13 (0.6645) — monotone — and a

@@ -1,6 +1,6 @@
 package graft
 
-/** The tools/PlanAudit sweep promoted to a CI gate (round 10, VERDICT r9
+/** The round-7 plan sweep (SCALE.md) promoted to a CI gate (round 10, VERDICT r9
   * #6): every declared query's plan is audited for the three shapes that
   * sink a 100 TB run, so the next window-key trap or accidental cross
   * join cannot land silently.

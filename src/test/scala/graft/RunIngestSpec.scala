@@ -536,7 +536,7 @@ class RunIngestSpec extends SparkSpecBase {
   }
 
   test("streamed ingest kill-window replay: a lost commit file replays the batch and the id guard makes it a no-op") {
-    // the StreamSoakProbe replay leg at spec scale (round 16, VERDICT
+    // the soak's replay leg at spec scale (round 16, VERDICT
     // r15 #3): after a drain, deleting the checkpoint's latest
     // commits/<id> is EXACTLY the state a crash between a batch's side
     // effects and its commit leaves — offsets written, commit missing.
@@ -574,7 +574,7 @@ class RunIngestSpec extends SparkSpecBase {
   }
 
   test("RunIngest.maintainLsh: drift floods buckets past the cap, collapse dedups the flood and restores recall") {
-    // the LshMaintProbe loop at spec scale (round 16 — LSH's maintain
+    // the LSH maintenance loop at spec scale (round 16 — LSH's maintain
     // leg): a healthy index reads "collapsed: false"; a planted
     // template-boilerplate flood drops banded recall under the floor,
     // the trigger fires, and the hot-bucket clique collapse (exact-

@@ -7,12 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * getOrCreate returns the same session; torn down at JVM exit).
   */
 trait SparkSpecBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session(4)
 
   /** sf0.001 driver test data (read-only, deterministic, seed=42). */
   val sfDir = "/root/testdata/sf0.001"
