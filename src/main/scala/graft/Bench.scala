@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.SharedFrames
+
 /** Benchmark main: times every declared query on SPARK_GRAFT_SF_DIR and
   * emits ONE JSON line on stdout — also written to bench.json so the
   * result survives any log-prefixing wrapper (r1's sbt "[info] " prefix
@@ -29,6 +31,26 @@ object Bench {
     System.gc() // warmup allocation debt collected before anything is timed
   }
 
+  /** Cold-build accounting (round 11, VERDICT r10 #5): nine shared
+    * frames (`graft.core.SharedFrames`) are built once per (session,
+    * dir), so their dependents' per-query numbers are warm-hit reads and
+    * the build cost would otherwise vanish into whichever query ran
+    * first (where min-of-2 hides it). Each line is (line name, cold
+    * query): run in this order after every memo is released, each query
+    * builds the memos no earlier line built — `BuildLinesSpec` checks
+    * that — and every family row after reads warm, which is the
+    * library's actual steady state.
+    */
+  val buildLines: Seq[(String, String)] = Seq(
+    "build_shared_scores" -> "accuracy",
+    "build_dedup_clusters" -> "dedup_cluster",
+    "build_graph_edges" -> "graph_degree_dist",
+    "build_graph_edges_co" -> "graph_kcore_fixpoint",
+    "build_graph_walks" -> "graph_random_walk",
+    "build_ingest_pairs" -> "ingest_manifest",
+    "build_subword_vocab" -> "tokenizer_wordpiece",
+    "build_bpe_merges" -> "tokenizer_bpe")
+
   private def timedPass(spark: SparkSession, sfDir: String): Unit = {
     // min of two timed runs per query (adaptive third below): one-off
     // GC/JIT hiccups otherwise dominate sub-second queries and wobble
@@ -41,43 +63,18 @@ object Bench {
     // runs of identical code) were neighbors absorbing the persist-heavy
     // pipelines' collection debt, which min-of-2 can't dodge because it
     // hits both runs.
-    // Cold-build accounting (round 11, VERDICT r10 #5): three families
-    // memoize a shared frame per (session, dir) — FkNN scores, the
-    // LSH→CC dedup clusters, the walk corpus — so their per-query
-    // numbers below are warm-hit reads and the build cost would
-    // otherwise vanish into whichever query ran first (where min-of-2
-    // hides it). Release each memo and charge ONE cold dependent run,
-    // visibly, as its own `build_*` line; every family row after reads
-    // warm, which is the library's actual steady state.
-    val builds = Seq[(String, () => Unit, String)](
-      ("build_shared_scores", () => SparkEntry.releaseShared(), "accuracy"),
-      ("build_dedup_clusters", () => graft.llm.Dedup.releaseShared(), "dedup_cluster"),
-      // edges BEFORE walks: the walk corpus reads the edge memo, so its
-      // cold line prices the walk loop, not a second edge build. Two
-      // lines because there are two memoized lists: the first releases
-      // BOTH and its query rebuilds custSupp; the second's query then
-      // cold-builds coOrder (its release is a no-op by construction —
-      // order is load-bearing, same as walks-after-edges)
-      ("build_graph_edges", () => graft.rel.Graph.releaseSharedEdges(), "graph_degree_dist"),
-      ("build_graph_edges_co", () => (), "graph_kcore_fixpoint"),
-      ("build_graph_walks", () => graft.rel.Graph.releaseShared(), "graph_random_walk"),
-      ("build_ingest_pairs", () => graft.llm.Curation.releaseShared(), "ingest_manifest"),
-      ("build_subword_vocab", () => graft.llm.TextAnalysis.releaseShared(), "tokenizer_wordpiece"),
-      // round 17: the BPE training memo (rules + merged word table) —
-      // three rows (tokenizer_bpe/encode/fertility) read it warm
-      ("build_bpe_merges", () => graft.llm.TextAnalysis.releaseBpeShared(), "tokenizer_bpe"))
-      .map { case (name, release, q) =>
-        release()
-        val t0 = System.nanoTime()
-        // -1 sentinel on failure (round-12 ADVICE): a broken build query
-        // must not publish a plausible-looking elapsed time
-        val t =
-          try { SparkEntry.queries(q)(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-          catch { case _: Throwable => -1.0 }
-        spark.catalog.clearCache()
-        System.gc()
-        name -> t
-      }
+    SharedFrames.releaseAll() // so every `buildLines` query runs cold
+    val builds = buildLines.map { case (name, q) =>
+      val t0 = System.nanoTime()
+      // -1 sentinel on failure (round-12 ADVICE): a broken build query
+      // must not publish a plausible-looking elapsed time
+      val t =
+        try { SparkEntry.queries(q)(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+        catch { case _: Throwable => -1.0 }
+      spark.catalog.clearCache()
+      System.gc()
+      name -> t
+    }
     // Per-run detail (round 13, VERDICT r12 #1's "instrument Bench"
     // alternative): every sample's wall + the resident persisted/
     // checkpointed RDD blockset count AFTER the query (before this

@@ -3,9 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import scala.collection.concurrent.TrieMap
-
-import graft.core.{Ckpt, Distance, Fknn, Knn, Metrics}
+import graft.core.{Ckpt, Distance, Fknn, Knn, Metrics, SharedFrames}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -45,20 +43,15 @@ object SparkEntry {
     * builder), and the memo retains only the checkpoint-backed RESULT —
     * bounded at |queries| × nClasses rows (≈ 6 k at sf0.1), the one
     * deliberate retention that buys the family its amortization.
-    * `Ckpt.truncate` blocks are RDD-level persists, so
-    * `spark.catalog.clearCache()` between bench queries does not evict
-    * them; long-lived library sessions call `releaseShared()`.
     */
-  private val sharedScores = TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def scoresShared(s: SparkSession, d: String): DataFrame =
-    sharedScores.getOrElseUpdate((s, d), Ckpt.untracked {
+    SharedFrames(s, d, "scores") {
       val t = embTrain(s, d)
       val mem = Fknn.membershipInit(t, K, NClasses).persist()
       val out = Ckpt.truncate(Fknn.classifyScores(mem, t, embQueries(s, d), K))
       mem.unpersist(blocking = false)
       out
-    })
+    }
 
   /** Predictions derived from the shared score frame —
     * `predictedFromScores(classifyScores(...))` ≡ `classifyPipeline(...)`
@@ -67,20 +60,13 @@ object SparkEntry {
     * Memoized + truncated like the scores (five consumers would each
     * re-run the argmax window otherwise); |queries| rows.
     */
-  private val sharedPred = TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def predShared(s: SparkSession, d: String): DataFrame =
-    sharedPred.getOrElseUpdate((s, d), Ckpt.untracked {
+    SharedFrames(s, d, "pred") {
       Ckpt.truncate(Fknn.predictedFromScores(scoresShared(s, d)))
-    })
+    }
 
-  /** Release the memoized shared frames (test hygiene / long sessions). */
-  def releaseShared(): Unit = {
-    sharedPred.values.foreach(Ckpt.release)
-    sharedPred.clear()
-    sharedScores.values.foreach(Ckpt.release)
-    sharedScores.clear()
-  }
+  /** Release the shared score and prediction frames. */
+  def releaseShared(): Unit = SharedFrames.release("pred", "scores")
 
   // ---- DuckDB SQL fragments (shared across oracle twins) ---------------
 

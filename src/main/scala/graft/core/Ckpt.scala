@@ -1,6 +1,8 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** The ONE checkpoint seam for every iterative/fan-out lineage truncation
@@ -74,10 +76,10 @@ object Ckpt {
     * promoted to a wrapper so an operator family (Rank helpers, BPE
     * rounds, power iterations) cannot leak per-round blocks through ANY
     * of its query rows: bench_detail r13 measured 36 rows leaving more
-    * than the ambient 6 blocksets, each a hand-missed tail. Frames
-    * built through `untracked` (the cross-query memos) are exempt —
-    * they outlive the query by design and their lifecycle is
-    * `releaseShared()`'s. Only meaningful around builders that
+    * than the ambient 6 blocksets, each a hand-missed tail. Frames a
+    * `SharedFrames` build creates (through `untracked`) are exempt —
+    * they outlive the query by design and the registry's release owns
+    * them. Only meaningful around builders that
     * checkpoint internally: wrapping a pure lazy scan would just
     * materialize its output for nothing.
     */
@@ -93,12 +95,7 @@ object Ckpt {
           // leave its collected checkpoints pinned until ContextCleaner
           // GC — drain the buffer before rethrowing, same release the
           // success path does below
-          buf.foreach { r =>
-            if (r.getStorageLevel != StorageLevel.NONE) {
-              r.unpersist(blocking = false)
-              sites.remove(r.id)
-            }
-          }
+          buf.foreach(unpin)
           throw t
       }
       finally scopes.set(scopes.get().tail)
@@ -117,21 +114,8 @@ object Ckpt {
     if (buf.isEmpty &&
       res.sparkSession.sparkContext.getCheckpointDir.isEmpty) return res
     val out = if (isTruncated(res)) res else truncate(res)
-    val keep: Int = out.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-      case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
-        p.child match {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-          case _ => -1
-        }
-      case _ => -1
-    }
-    buf.foreach { r =>
-      if (r.id != keep && r.getStorageLevel != StorageLevel.NONE) {
-        r.unpersist(blocking = false)
-        sites.remove(r.id)
-      }
-    }
+    val keep = out match { case Checkpoint(lr) => lr.rdd.id; case _ => -1 }
+    buf.foreach { r => if (r.id != keep) unpin(r) }
     out
   }
 
@@ -145,14 +129,13 @@ object Ckpt {
       (org.apache.spark.sql.SparkSession, String) => DataFrame =
     (s, d) => scoped(fn(s, d))
 
-  /** Shield for cross-query memo builders (`SparkEntry.scoresShared`,
-    * the dedup-cluster / walk-corpus / ingest-pair / subword-vocab
-    * memos): checkpoints created inside `body` are NOT collected by an
-    * enclosing `scoped`, so a cold memo built during a scoped query
-    * survives the query — its blocks are the memo's value and
-    * `releaseShared()` owns them.
+  /** Shield for `SharedFrames` builds: checkpoints created inside
+    * `body` are NOT collected by an enclosing `scoped`, so a cold memo
+    * built during a scoped query survives the query — its blocks are
+    * the memo's value. Package-private: a frame built here outside the
+    * registry would have no owner to release it.
     */
-  def untracked[T](body: => T): T = {
+  private[core] def untracked[T](body: => T): T = {
     scopes.set(None :: scopes.get())
     try body finally scopes.set(scopes.get().tail)
   }
@@ -180,7 +163,7 @@ object Ckpt {
     } else {
       val out = df.localCheckpoint()
       out.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        case lr: LogicalRDD =>
           sites.put(lr.rdd.id, callerSite())
           scopes.get() match {
             case Some(buf) :: _ => buf += lr.rdd
@@ -214,21 +197,9 @@ object Ckpt {
     * unpersisted inside `truncate`), and non-checkpoint plans have
     * nothing to release — both are no-ops here.
     */
-  def release(df: DataFrame): Unit = {
-    def unp(lr: org.apache.spark.sql.execution.LogicalRDD): Unit =
-      if (lr.rdd.getStorageLevel != StorageLevel.NONE) {
-        lr.rdd.unpersist(blocking = false)
-        sites.remove(lr.rdd.id)
-      }
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => unp(lr)
-      case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
-        p.child match {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => unp(lr)
-          case _ => ()
-        }
-      case _ => ()
-    }
+  def release(df: DataFrame): Unit = df match {
+    case Checkpoint(lr) => unpin(lr.rdd)
+    case _ => ()
   }
 
   /** True when `df` IS a truncation result — a bare `LogicalRDD` or one
@@ -238,12 +209,21 @@ object Ckpt {
     * of the blocks and leave the first one unreleased — the lazy-pinning
     * leak class `release` exists to prevent).
     */
-  def isTruncated(df: DataFrame): Boolean =
-    df.queryExecution.analyzed match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => true
-      case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
-        p.child.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-      case _ => false
+  def isTruncated(df: DataFrame): Boolean = Checkpoint.unapply(df).isDefined
+
+  private object Checkpoint {
+    def unapply(df: DataFrame): Option[LogicalRDD] = df.queryExecution.analyzed match {
+      case lr: LogicalRDD => Some(lr)
+      case Project(_, lr: LogicalRDD) => Some(lr)
+      case _ => None
+    }
+  }
+
+  /** Free a local checkpoint's blocks and forget its creation site. */
+  private def unpin(r: org.apache.spark.rdd.RDD[_]): Unit =
+    if (r.getStorageLevel != StorageLevel.NONE) {
+      r.unpersist(blocking = false)
+      sites.remove(r.id)
     }
 
   /** Postfix syntax so call sites keep the `.localCheckpoint()` shape:

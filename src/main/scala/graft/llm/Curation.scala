@@ -639,9 +639,6 @@ object Curation {
 
   // ---- ingest_manifest: the incremental-recuration funnel --------------
 
-  private val sharedPairs = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** Memoized J ≥ 0.95 near-dup pair set over the 500-doc dedup slice —
     * the standing "signature table" all three ingest rows
     * (`ingest_manifest`, `ingest_manifest2`, `ingest_retract`) consume,
@@ -653,24 +650,20 @@ object Curation {
     * the three consumers' drop-stage needs; corp×corp pairs are verify
     * waste no consumer reads): a new consumer needing corp-internal
     * pairs must widen the predicate. `Bench` charges the cold build as
-    * its own `build_ingest_pairs` line via `releaseShared`.
+    * its own `build_ingest_pairs` line.
     */
   private[graft] def slicePairs(s: SparkSession, d: String): DataFrame =
-    sharedPairs.getOrElseUpdate((s, d), graft.core.Ckpt.untracked {
-      import graft.core.Ckpt
+    graft.core.SharedFrames(s, d, "ingest_pairs") {
       val isB = (c: org.apache.spark.sql.Column) => c % 5 === 1 || c % 5 === 3
-      Ckpt.truncate(
+      graft.core.Ckpt.truncate(
         Dedup.minhashLshPairs(s,
             Tables.documents(s, d).filter(col("doc_id") < 500)
               .select(col("doc_id"), col("text")),
             candPredicate = isB(col("d1")) || isB(col("d2")))
           .filter(col("jaccard") >= 0.95))
-    })
+    }
 
-  def releaseShared(): Unit = {
-    sharedPairs.values.foreach(graft.core.Ckpt.release)
-    sharedPairs.clear()
-  }
+  def releaseShared(): Unit = graft.core.SharedFrames.release("ingest_pairs")
 
   /** ingest_manifest — the per-stage delta funnel a RECURRING crawl's
     * ingest run publishes (round 11, VERDICT r10 #1): a new batch
@@ -873,8 +866,8 @@ object Curation {
         "6_decontam_13")))
     // eager-fold + release (the graph_harmonic round-12 discipline at a
     // smaller scale): the 7-row result must not pin the survivor/
-    // annotation checkpoints across bench runs (the pair memo is
-    // releaseShared's lifetime, not this row's)
+    // annotation checkpoints across bench runs (the pair memo's
+    // lifetime is the registry's, not this row's)
     val out = Ckpt.truncate(folded)
     Ckpt.release(surv1)
     Ckpt.release(ann1)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.core.Ckpt
+import graft.core.{Ckpt, SharedFrames}
 import graft.core.Ckpt.TruncateSyntax
 import graft.rel.Queries.rnd
 
@@ -833,24 +833,16 @@ object Dedup {
     * (2 × ~3.3 s driver at sf0.1). `connectedComponents` returns a
     * checkpoint-backed result (lineage already truncated, blocks RDD-
     * level persists `clearCache()` does not evict), so the memo retains
-    * only the bounded assignment frame (clustered docs, not pairs);
-    * long-lived sessions call `releaseShared()`.
+    * only the bounded assignment frame (clustered docs, not pairs).
     */
-  private val sharedClusters =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   def minhashClusters(s: SparkSession, d: String): DataFrame =
-    sharedClusters.getOrElseUpdate((s, d), Ckpt.untracked {
+    SharedFrames(s, d, "dedup_clusters") {
       connectedComponents(
         minhashLsh(s, d).select(col("doc_id1"), col("doc_id2")))
-    })
+    }
 
-  /** Release the memoized cluster assignments (test hygiene / long
-    * sessions — the `SparkEntry.releaseShared` contract). */
-  def releaseShared(): Unit = {
-    sharedClusters.values.foreach(Ckpt.release)
-    sharedClusters.clear()
-  }
+  /** Release the memoized cluster assignments. */
+  def releaseShared(): Unit = SharedFrames.release("dedup_clusters")
 
   /** Distributed connected components by iterative min-label propagation:
     * each round every vertex takes the min of its own label and its

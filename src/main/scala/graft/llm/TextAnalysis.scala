@@ -423,31 +423,21 @@ object TextAnalysis {
     * read the final merged word table), and each re-ran the whole loop
     * (~12 jobs) per bench sample. The memo trains once per (session,
     * dir); `Bench` charges the cold build as its own `build_bpe_merges`
-    * line via `releaseBpeShared` (the round-11 cold-build accounting
-    * rule). The per-round one-row `best` checkpoints are released once
-    * the rule table is folded — the memo keeps exactly two frames
-    * (rules, merged word table). Values are identical to a fresh
-    * training (deterministic corpus, deterministic tie-break;
-    * TextAnalysisSpec pins memo ≡ fresh).
+    * line (the round-11 cold-build accounting rule). The per-round
+    * one-row `best` checkpoints are released once the rule table is
+    * folded — the memo keeps exactly two frames (rules, merged word
+    * table). Values are identical to a fresh training (deterministic
+    * corpus, deterministic tie-break; TextAnalysisSpec pins memo ≡ fresh).
     */
-  private val sharedBpe = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-
   private[graft] def bpeShared(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    sharedBpe.getOrElseUpdate((s, d), graft.core.Ckpt.untracked {
+    graft.core.SharedFrames(s, d, "bpe") {
       val (rules, seqs, bests) = bpeTrain(Tables.documents(s, d), 4)
       val rulesT = graft.core.Ckpt.truncate(rules)
       bests.foreach(graft.core.Ckpt.release)
       (rulesT, seqs)
-    })
-
-  def releaseBpeShared(): Unit = {
-    sharedBpe.values.foreach { case (r, sq) =>
-      graft.core.Ckpt.release(r)
-      graft.core.Ckpt.release(sq)
     }
-    sharedBpe.clear()
-  }
+
+  def releaseBpeShared(): Unit = graft.core.SharedFrames.release("bpe")
 
   def bpe(s: SparkSession, d: String): DataFrame =
     bpeShared(s, d)._1
@@ -587,21 +577,14 @@ object TextAnalysis {
   /** Memoized per (session, dir) — both tokenizer rows read the SAME
     * vocab + dual-segmenter table (the `minhashClusters` precedent;
     * round-13 review: each row rebuilt it independently). `Bench`
-    * charges the cold build as its own `build_subword_vocab` line via
-    * `releaseShared`.
+    * charges the cold build as its own `build_subword_vocab` line.
     */
-  private val sharedWordTokens = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   private def wordTokensShared(s: SparkSession, d: String): DataFrame =
-    sharedWordTokens.getOrElseUpdate((s, d), graft.core.Ckpt.untracked {
+    graft.core.SharedFrames(s, d, "subword_vocab") {
       graft.core.Ckpt.truncate(wordTokenCounts(Tables.documents(s, d)))
-    })
+    }
 
-  def releaseShared(): Unit = {
-    sharedWordTokens.values.foreach(graft.core.Ckpt.release)
-    sharedWordTokens.clear()
-  }
+  def releaseShared(): Unit = graft.core.SharedFrames.release("subword_vocab")
 
   def wordpieceEncode(s: SparkSession, d: String): DataFrame =
     wordpieceEncodeDocs(Tables.documents(s, d), Some(wordTokensShared(s, d)))

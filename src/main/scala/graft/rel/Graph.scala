@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.core.Ckpt
+import graft.core.{Ckpt, SharedFrames}
 import graft.core.Ckpt.TruncateSyntax
 import graft.rel.Queries.rnd
 
@@ -38,16 +38,12 @@ object Graph {
     * per (session, dir); the cold build is charged visibly as Bench's
     * `build_graph_edges` line (the round-11 cold-build accounting rule),
     * and every consumer reads the checkpoint. Retention is the edge
-    * list itself (|E| rows, ~1 M at sf0.1); long-lived sessions call
-    * `releaseSharedEdges()`. Values are identical to the per-query
-    * builds — operators receive an already-truncated frame and adopt it
-    * (`adoptTruncated`) instead of copying, and NEVER release a frame
-    * they did not truncate (the memo's lifecycle is this object's).
-    */
-  private val sharedEdges = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-
-  /** Round-17 MEASURED AND REJECTED — memo checkpoints at the
+    * list itself (|E| rows, ~1 M at sf0.1). Values are identical to the
+    * per-query builds — operators receive an already-truncated frame and
+    * adopt it (`adoptTruncated`) instead of copying, and NEVER release a
+    * frame they did not truncate (the memo's lifecycle is the registry's).
+    *
+    * Round-17 MEASURED AND REJECTED — memo checkpoints at the
     * session's shuffle width: SCALE.md round 17 found AQE freezes the
     * coOrder memo at 3 partitions (custSupp at 10) and the hypothesis
     * was that consumers' map stages are parallelism-capped. A
@@ -65,22 +61,13 @@ object Graph {
     * explodes and the embed_nn nested-loop — fixed separately).
     */
   private[graft] def custSuppEdgesShared(s: SparkSession, d: String): DataFrame =
-    sharedEdges.getOrElseUpdate((s, d, "cs"), Ckpt.untracked {
-      Ckpt.truncate(custSuppEdges(s, d))
-    })
+    SharedFrames(s, d, "edges_cs")(Ckpt.truncate(custSuppEdges(s, d)))
 
   private[graft] def coOrderEdgesShared(s: SparkSession, d: String): DataFrame =
-    sharedEdges.getOrElseUpdate((s, d, "co"), Ckpt.untracked {
-      Ckpt.truncate(coOrderEdges(s, d))
-    })
+    SharedFrames(s, d, "edges_co")(Ckpt.truncate(coOrderEdges(s, d)))
 
-  /** Release the memoized edge lists (Bench's `build_graph_edges` line;
-    * test hygiene / long sessions).
-    */
-  def releaseSharedEdges(): Unit = {
-    sharedEdges.values.foreach(Ckpt.release)
-    sharedEdges.clear()
-  }
+  /** Release both memoized edge lists. */
+  def releaseSharedEdges(): Unit = SharedFrames.release("edges_cs", "edges_co")
 
   /** Adopt an already-truncated edge frame (the shared memo) or
     * truncate a derived one. The flag says whether THIS call site owns
@@ -1672,22 +1659,16 @@ object Graph {
     * precedent: `graph_random_walk` emits the corpus,
     * `graph_walk_cooccur` consumes it; one build instead of two. The
     * memo retains only the checkpoint-backed result (≈ |seeds|·5
-    * rows); long-lived sessions call `releaseShared()`. */
-  private val sharedWalks = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
+    * rows). */
   def walksShared(s: SparkSession, d: String): DataFrame =
     // randomWalks eagerly folds its own result since round 13 — a
     // second truncate would duplicate the corpus blocks
-    sharedWalks.getOrElseUpdate((s, d), Ckpt.untracked {
+    SharedFrames(s, d, "walks") {
       val w = randomWalks(custSuppEdgesShared(s, d))
       if (Ckpt.isTruncated(w)) w else Ckpt.truncate(w)
-    })
+    }
 
-  def releaseShared(): Unit = {
-    sharedWalks.values.foreach(Ckpt.release)
-    sharedWalks.clear()
-  }
+  def releaseShared(): Unit = SharedFrames.release("walks")
 
   def randomWalkQuery(s: SparkSession, d: String): DataFrame =
     walksShared(s, d)

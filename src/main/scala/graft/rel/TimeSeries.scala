@@ -1,6 +1,6 @@
 package graft.rel
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -2087,6 +2087,11 @@ object TimeSeries {
     * bounding the pair join at 168²/2 ≈ 14k rows per type FOREVER. */
   private[graft] val TheilSenSampleBuckets = 168
 
+  /** Theil-Sen pair-join salt: the integral hour index of bucket `hs`
+    * mod k (`hs` itself is a multiple of 3600, near-constant mod k). */
+  private[graft] def theilSenSalt(hs: Column, k: Int): Column =
+    pmod(call_function("div", hs, lit(3600L)), lit(k.toLong))
+
   private def theilSenImpl(events: DataFrame, maxBucketsPerType: Int): DataFrame = {
     val bAll = events
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).cast("long").as("hs"))
@@ -2113,7 +2118,7 @@ object TimeSeries {
     // sf0.1-local[32]: one 1.2 s single-task stage = a third of the
     // row) — and at a 10-year calendar that one task generates 3.8 B
     // pairs. Standard salt: the left side keys each bucket by
-    // pmod(hs, k), the right side is replicated k ways, the join keys
+    // `theilSenSalt`, the right side is replicated k ways, the join keys
     // on (event_type, salt) — each (h1, h2) pair still meets EXACTLY
     // once (h1 determines the one replica it can match), so the pair
     // multiset and every slope value are unchanged. k rides the
@@ -2135,7 +2140,7 @@ object TimeSeries {
           b.select(col("event_type"), col("hs").as("h2"), col("vu").as("v2")))
       else
         (b.select(col("event_type"), col("hs").as("h1"), col("vu").as("v1"),
-            pmod(col("hs"), lit(nSalt.toLong)).as("ps"))
+            theilSenSalt(col("hs"), nSalt).as("ps"))
           .repartition(nSalt, col("event_type"), col("ps")),
           b.select(col("event_type"), col("hs").as("h2"), col("vu").as("v2"))
             .withColumn("ps", explode(array((0 until nSalt).map(i => lit(i.toLong)): _*)))

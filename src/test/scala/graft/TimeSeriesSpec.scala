@@ -494,6 +494,15 @@ class TimeSeriesSpec extends SparkSpecBase {
     assert(math.abs(rob - 2.0) < 0.1, s"robust slope was $rob")
   }
 
+  test("ts_theil_sen salt: k consecutive hour buckets take k distinct salts") {
+    // hour-truncated epoch seconds are multiples of 3600, so salting the
+    // seconds themselves mod k collapsed to one or two salts
+    val k = 4
+    val hs = (0 until 2 * k).map(i => 1704067200L + i * 3600L).toDF("hs")
+    val salts = hs.select(TimeSeries.theilSenSalt(col("hs"), k)).as[Long].collect()
+    assert(salts.distinct.sorted.toSeq === (0L until k.toLong))
+  }
+
   test("ts_theil_sen: bucketed rank selection ≡ the row-rank window form (round-9 rewrite pin)") {
     // the old form ranked every pair through one window per event_type;
     // the rewrite selects the median by bucket histogram + in-bucket
