@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one session a graft JVM runs on: `local[n]` with `n` shuffle
   * partitions, UTC session time, no UI, and the object-hash fallback
@@ -19,4 +19,11 @@ object Session {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** The shuffle width operators size their explicit exchanges by: the
+    * session's `spark.sql.shuffle.partitions`, which `apply` sets to the
+    * core count. The one place that reads it, so a width rule changes
+    * here and nowhere else.
+    */
+  def width(df: DataFrame): Int = df.sparkSession.sessionState.conf.numShufflePartitions
 }

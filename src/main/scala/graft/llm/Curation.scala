@@ -100,62 +100,36 @@ object Curation {
       .agg(count(lit(1)).as("n_hits"))
   }
 
+  /** Keyed prefix-sum packer: `Rank.prefixSum` of `size` within each
+    * `key` group ordered by `ord` — no per-key ordered window, which
+    * would serialize each key's whole history through one task (fatal
+    * when key cardinality is O(1) — source, modality — while the corpus
+    * is 100 TB). Emits (key, ord, size, pack_id, pack_off);
+    * `CurationSpec`/`MultimodalSpec` assert ≡ the window twins.
+    */
+  def prefixPackBy(df: DataFrame, key: String, ord: String, size: String,
+                   budget: Int): DataFrame = {
+    val start = col("_cum") - col(size)
+    graft.rel.Rank.prefixSum(df.select(col(key), col(ord), col(size)),
+        Seq(key), Seq(col(ord)), col(size), "_cum")
+      .select(col(key), col(ord), col(size),
+        floor(start / budget).cast("long").as("pack_id"),
+        (start % budget).as("pack_off"))
+  }
+
   /** seq_pack — fixed-budget sequence packing (2048-char budget):
     * concatenate each source's docs in doc_id order and assign every
     * doc the sequence its first character lands in, plus its offset
     * within the running stream modulo the budget. One running sum per
     * source — the standard "concat then split at budget boundaries"
     * packing a trainer's data loader performs, made deterministic.
-    */
-  /** Generic two-pass KEYED prefix-sum packer: the running sum of
-    * `size` within each `key` group ordered by `ord`, computed WITHOUT
-    * a per-key ordered window. A `Window.partitionBy(key)` serializes
-    * each key's whole history through one task — fatal when key
-    * cardinality is O(1) (source, modality) while the corpus is 100 TB.
-    * Here: range-repartition on (key, ord) → per-Spark-partition local
-    * running sums → per-(key, partition) totals (a ≤ parts×|keys| frame,
-    * where the ordered window is free) → broadcast the cross-partition
-    * base offsets back. Emits (key, ord, size, pack_id, pack_off);
-    * `CurationSpec`/`MultimodalSpec` assert ≡ the window twins.
-    */
-  def prefixPackBy(df: DataFrame, key: String, ord: String, size: String,
-                   budget: Int, partitions: Int = 0): DataFrame = {
-    val parts =
-      if (partitions > 0) partitions
-      else df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(parts, col(key), col(ord))
-      .select(col(key), col(ord), col(size), spark_partition_id().as("pid"))
-    val inPart = Window.partitionBy(col("pid"), col(key)).orderBy(col(ord))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // materialized before the offsets/join fan-out — the two subtrees
-    // otherwise re-evaluate the range exchange independently, and the
-    // boundary sample is only deterministic off stable input order
-    // (the Rank.globalRank lesson: re-evaluated upstream shuffles
-    // fetch in varying order)
-    val local = ranged.withColumn("cum_in", sum(col(size)).over(inPart))
-      .truncated()
-    val offsets = local.groupBy(col(key), col("pid"))
-      .agg(max(col("cum_in")).as("tot"))
-      .withColumn("base",
-        coalesce(sum(col("tot")).over(
-          Window.partitionBy(col(key)).orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col(key), col("pid"), col("base"))
-    local.join(broadcast(offsets), Seq(key, "pid"))
-      .select(col(key), col(ord), col(size),
-        floor((col("base") + col("cum_in") - col(size)) / budget)
-          .cast("long").as("pack_id"),
-        ((col("base") + col("cum_in") - col(size)) % budget).as("pack_off"))
-  }
-
-  /** seq_pack — the declared query ships the two-pass keyed prefix sum
-    * (`prefixPackBy`); `seqPackDocsWindow` is the oracle-literal window
-    * twin (spec-asserted ≡). Source cardinality does not grow with the
+    * The declared query ships the keyed prefix sum (`prefixPackBy`);
+    * `seqPackDocsWindow` is the oracle-literal window twin
+    * (spec-asserted ≡). Source cardinality does not grow with the
     * corpus, so the window form is NOT the 100-TB plan.
     */
   def seqPackDocs(docs: DataFrame, budget: Int = 2048): DataFrame =
-    prefixPackBy(docs.select(col("source"), col("doc_id"), col("n_chars")),
-      "source", "doc_id", "n_chars", budget)
+    prefixPackBy(docs, "source", "doc_id", "n_chars", budget)
       .select(col("source"), col("doc_id"),
         col("pack_id").as("seq_id"), col("pack_off"))
 
@@ -175,37 +149,6 @@ object Curation {
 
   def seqPack(s: SparkSession, d: String): DataFrame =
     seqPackDocs(Tables.documents(s, d))
-
-  /** Global (cross-source) packing WITHOUT a one-partition window: the
-    * two-pass distributed prefix sum. Pass 1 range-partitions by the
-    * pack order and takes per-partition running sums; pass 2 computes
-    * each partition's starting offset from the (num-partitions-sized)
-    * totals table — tiny, so its one-partition window is free — and
-    * broadcast-joins it back. Output is identical to a global-order
-    * running sum, but no task ever sees more than its own range slice.
-    * Same shape as `Metrics.aucBinaryBucketed`'s rank statistic.
-    */
-  def seqPackGlobal(docs: DataFrame, budget: Int = 2048, partitions: Int = 0): DataFrame = {
-    val parts =
-      if (partitions > 0) partitions
-      else docs.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = docs.repartitionByRange(parts, col("doc_id"))
-      .select(col("doc_id"), col("n_chars"), spark_partition_id().as("pid"))
-    val inPart = Window.partitionBy(col("pid")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = ranged.withColumn("cum_in", sum(col("n_chars")).over(inPart))
-    // per-partition totals: numShufflePartitions rows — the one global
-    // ordered window in the plan runs over THIS frame only
-    val offsets = local.groupBy(col("pid")).agg(max(col("cum_in")).as("tot"))
-      .withColumn("base",
-        coalesce(sum(col("tot")).over(
-          Window.orderBy(col("pid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("base"))
-    local.join(broadcast(offsets), "pid")
-      .select(col("doc_id"),
-        floor((col("base") + col("cum_in") - col("n_chars")) / budget).cast("long").as("seq_id"),
-        ((col("base") + col("cum_in") - col("n_chars")) % budget).as("pack_off"))
-  }
 
   /** quality_repetition — Gopher-style repetition signals: token count,
     * unique-token count, duplicate-token fraction, and top-token

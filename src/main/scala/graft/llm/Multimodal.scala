@@ -632,13 +632,11 @@ object Multimodal {
     *
     * SCALE SHAPE: modality cardinality is O(1) — a `Window.partitionBy
     * (modality)` running sum streams the whole corpus through a handful
-    * of window partitions at 100 TB. So the declared query ships the
-    * two-pass distributed prefix sum (the `Curation.seqPackGlobal`
-    * shape, per modality): range-repartition on (modality, media_id),
-    * a per-Spark-partition local running sum, then per-(modality,
-    * partition) totals — a tiny frame, numShufflePartitions ×
-    * |modalities| rows — carry the cross-partition base offsets through
-    * a broadcast join. `MultimodalSpec` asserts ≡ the window form
+    * of window partitions at 100 TB. So the declared query ships
+    * `Rank.prefixSum` keyed on modality (through `Curation.prefixPackBy`):
+    * no task sorts more than its range slice, and the cross-partition
+    * offsets come from a tiny (partitions × |modalities|)-row frame.
+    * `MultimodalSpec` asserts ≡ the window form
     * (`mediaPackWindow`) row-for-row; `PipelineScaleProbe` measures the
     * window form's single-partition ceiling vs this shape's scaling.
     */
@@ -648,12 +646,12 @@ object Multimodal {
         .select(col("media_id"), col("modality"),
           length(col("bytes")).cast("long").as("n_bytes")))
 
-  /** Two-pass prefix-sum pack over a (media_id, modality, n_bytes)
-    * frame (`Curation.prefixPackBy` keyed on modality); output ≡
+  /** Prefix-sum pack over a (media_id, modality, n_bytes) frame
+    * (`Curation.prefixPackBy` keyed on modality); output ≡
     * `mediaPackWindow` (spec-asserted).
     */
-  def mediaPackScalable(sized: DataFrame, budget: Int = 4096, partitions: Int = 0): DataFrame =
-    Curation.prefixPackBy(sized, "modality", "media_id", "n_bytes", budget, partitions)
+  def mediaPackScalable(sized: DataFrame, budget: Int = 4096): DataFrame =
+    Curation.prefixPackBy(sized, "modality", "media_id", "n_bytes", budget)
       .select(col("media_id"), col("modality"), col("n_bytes"),
         col("pack_id").as("shard_id"), col("pack_off").as("shard_off"))
 
@@ -678,7 +676,7 @@ object Multimodal {
   /** multimodal_manifest — the per-shard manifest a packed media store
     * ships next to its shards (what a reader opens FIRST): per
     * (modality, shard), item count, payload bytes, first/last item id
-    * and the tail offset. Derived from the same two-pass
+    * and the tail offset. Derived from the same
     * `mediaPackScalable` placement the pack row emits, collapsed by one
     * (modality, shard)-keyed aggregate — shard cardinality output,
     * BIGINT throughout.

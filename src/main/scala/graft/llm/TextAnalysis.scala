@@ -219,41 +219,12 @@ object TextAnalysis {
   def corpusZipfDocs(docs: DataFrame): DataFrame = {
     val counts = tokenCounts(docs)
     // vocab-sized global window (documented: rank over vocab, not
-    // corpus; `corpusZipfScalable` is the distributed-rank twin for
-    // vocabularies too big for one sort task)
+    // corpus; `Rank.globalRank` on (n DESC, tok) is the distributed
+    // form for vocabularies too big for one sort task — RankSpec pins
+    // its ranks ≡ this window's)
     val ranked = counts
       .withColumn("r", row_number().over(Window.orderBy(col("n").desc, col("tok"))))
       .select(log(col("n").cast("double")).as("y"), log(col("r").cast("double")).as("x"))
-    zipfRegression(ranked)
-  }
-
-  /** The at-scale form of `corpusZipfDocs`: the vocab-sized global rank
-    * window replaced by the two-pass distributed rank — range-partition
-    * by the sort key, per-partition `row_number`, per-partition counts
-    * prefix-summed over a partitions-count-sized frame and broadcast
-    * back (the `Curation.seqPackGlobal` / `Metrics.aucBinaryBucketed`
-    * shape: no task ever sorts more than its range slice). Rank values
-    * are identical because the sort key (n DESC, tok) is unique per
-    * row; TextAnalysisSpec pins the twin.
-    */
-  def corpusZipfScalable(docs: DataFrame, partitions: Int = 0): DataFrame = {
-    val parts =
-      if (partitions > 0) partitions
-      else docs.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = tokenCounts(docs)
-      .repartitionByRange(parts, col("n").desc, col("tok"))
-      .select(col("tok"), col("n"), spark_partition_id().as("pid"))
-    val inPart = Window.partitionBy(col("pid")).orderBy(col("n").desc, col("tok"))
-    // materialized before the offsets/join fan-out (Rank.globalRank lesson)
-    val local = ranged.withColumn("r_in", row_number().over(inPart))
-      .truncated()
-    val offsets = local.groupBy(col("pid")).agg(count(lit(1)).as("cnt"))
-      .withColumn("base", coalesce(sum(col("cnt")).over(
-        Window.orderBy(col("pid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("base"))
-    val ranked = local.join(broadcast(offsets), "pid")
-      .select(log(col("n").cast("double")).as("y"),
-        log((col("base") + col("r_in")).cast("double")).as("x"))
     zipfRegression(ranked)
   }
 
@@ -1220,57 +1191,36 @@ object TextAnalysis {
     * still exceeds the token budget the scaling law asks for.
     *
     * Scale shape: the greedy prefix is a GLOBAL running sum, computed
-    * as the two-pass distributed prefix sum (`seqPackGlobal`'s shape —
-    * range-repartition on the rank keys, per-partition local cumsum,
-    * per-partition totals (≤ #partitions rows, where the one global-
-    * order window is free) broadcast back); no task ever holds more
-    * than its range slice. The ranked frame is truncated before the
-    * offsets/join fan-out (the `prefixPackBy` determinism rule: the
-    * range boundary sample must not be re-evaluated per subtree).
+    * by unkeyed `Rank.prefixSum` over the rank keys — no task ever holds
+    * more than its range slice. The declared row binds through
+    * `Ckpt.scopedQ`, so only its result stays pinned.
     */
   def tokenBudgetDocs(docs: DataFrame, frac: Double = 0.25): DataFrame = {
-    import graft.core.Ckpt
     val sc0 = docs.select(col("doc_id"), col("lang"), split(col("text"), " ").as("a"))
       .select(col("doc_id"), col("lang"),
         size(col("a")).cast("long").as("n_tok"),
         size(filter(col("a"), t => t.isin(ContentStopwords: _*))).cast("long").as("n_stop"))
       .filter(col("n_tok") > 0)
       .withColumn("score", col("n_stop").cast("double") / col("n_tok"))
-    val parts = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = Ckpt.truncate(
-      sc0.repartitionByRange(parts, col("score").desc, col("doc_id"))
-        .withColumn("pid", spark_partition_id()))
-    val inPart = Window.partitionBy(col("pid"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = Ckpt.truncate(
-      ranged.withColumn("cum_in", sum(col("n_tok")).over(inPart)))
-    Ckpt.release(ranged)
-    val offsets = local.groupBy(col("pid")).agg(max(col("cum_in")).as("tot"))
-      .withColumn("base", coalesce(sum(col("tot")).over(
-        Window.orderBy(col("pid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("base"))
-    // budget from the materialized frame — not sc0, whose re-evaluation
-    // would be a second corpus scan for one scalar
-    val budget = broadcast(local.agg(
+    val ranked = graft.rel.Rank.prefixSum(sc0, Nil,
+      Seq(col("score").desc, col("doc_id")), col("n_tok"), "cum")
+    // budget from the prefix-sum frame (a checkpoint read) — not sc0,
+    // whose re-evaluation would be a second corpus scan for one scalar
+    val budget = broadcast(ranked.agg(
       floor(lit(frac) * sum(col("n_tok"))).cast("long").as("budget")))
-    val kept = local.join(broadcast(offsets), "pid")
-      .crossJoin(budget)
-      .filter(col("base") + col("cum_in") <= col("budget"))
+    val kept = ranked.crossJoin(budget)
+      .filter(col("cum") <= col("budget"))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs_kept"), sum(col("n_tok")).as("n_tokens_kept"))
-    val tot = local.groupBy(col("lang"))
+    val tot = ranked.groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs_total"), sum(col("n_tok")).as("n_tokens_total"))
-    val out = Ckpt.truncate(
-      tot.join(kept, Seq("lang"), "left")
-        .select(col("lang"),
-          coalesce(col("n_docs_kept"), lit(0L)).as("n_docs_kept"),
-          coalesce(col("n_tokens_kept"), lit(0L)).as("n_tokens_kept"),
-          col("n_docs_total"), col("n_tokens_total"),
-          rnd(coalesce(col("n_tokens_kept"), lit(0L)).cast("double") /
-            col("n_tokens_total"), 6).as("kept_token_frac")))
-    Ckpt.release(local)
-    out
+    tot.join(kept, Seq("lang"), "left")
+      .select(col("lang"),
+        coalesce(col("n_docs_kept"), lit(0L)).as("n_docs_kept"),
+        coalesce(col("n_tokens_kept"), lit(0L)).as("n_tokens_kept"),
+        col("n_docs_total"), col("n_tokens_total"),
+        rnd(coalesce(col("n_tokens_kept"), lit(0L)).cast("double") /
+          col("n_tokens_total"), 6).as("kept_token_frac"))
   }
 
   def tokenBudget(s: SparkSession, d: String): DataFrame =
@@ -1279,7 +1229,7 @@ object TextAnalysis {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "text_rake" -> graft.core.Ckpt.scopedQ(rake),
     "text_textrank" -> textrank,
-    "corpus_token_budget" -> tokenBudget,
+    "corpus_token_budget" -> graft.core.Ckpt.scopedQ(tokenBudget),
     "text_readability" -> readability,
     "quality_ks_drift" -> ksDrift,
     "quality_psi_drift" -> psiDrift,

@@ -1056,8 +1056,7 @@ object Graph {
     // counts are unchanged.
     val adjRaw = edges.select(col("p1").as("u"), col("p2").as("x"))
       .unionAll(edges.select(col("p2").as("u"), col("p1").as("x")))
-      .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
-        col("u"))
+      .repartition(graft.Session.width(edges), col("u"))
     val adj = adjRaw
       .withColumn("du", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("u")))
@@ -1302,9 +1301,9 @@ object Graph {
     * the `row_number().over(Window.partitionBy(src))` shape that
     * buffers and sorts one hub's whole adjacency through a single task
     * (harmless on the uniform purchase graph, a 10⁷-row single-task
-    * sort on a power-law graph at 100×). The `Rank.globalRank`
-    * two-pass discipline instead: range-repartition on (src, dst)
-    * spreads a hub across range slices, per-partition row numbers +
+    * sort on a power-law graph at 100×). `Rank.globalRank` (a
+    * `Rank.prefixSum` count) instead: range-repartition on (src, dst)
+    * spreads a hub across range slices, per-partition running counts +
     * prefix-summed offsets give the GLOBAL rank, and because unique
     * (src, dst) pairs of one src are contiguous in that total order,
     * r = grank − min(grank per src) + 1 is bit-identical to the window

@@ -4,55 +4,74 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Exact GLOBAL ranks without a single-partition window.
+/** Exact GLOBAL ranks and running sums without a single-partition
+  * window.
   *
   * `Window.orderBy(...)` with no partition key moves the whole frame
   * through ONE task — acceptable when the frame is domain- or
   * calendar-bounded (distinct prices, hourly buckets, eval slices),
   * fatal when it scales with the corpus (per-USER frames under
-  * `events_rfm` / `events_power_users`). This is the general container
-  * for that case, the `corpusZipfScalable` shape promoted to a shared
-  * seam: range-repartition on the sort key (each task sorts only its
-  * range slice), per-partition `row_number`, then per-partition counts
-  * prefix-summed over a partitions-count-sized frame and broadcast back
-  * as base offsets. Ranks are IDENTICAL to the global window whenever
-  * the sort key is a total order (every caller here ends its key in a
-  * unique id) — partition boundaries shift which pid a row lands in,
-  * never its rank.
+  * `events_rfm` / `events_power_users`). `prefixSum` is the one
+  * container for that case: range-repartition on the order (each task
+  * sorts only its range slice), a per-partition running sum, then
+  * per-(key, partition) totals prefix-summed over a ≤ #partitions frame
+  * and broadcast back as base offsets. Results are IDENTICAL to the
+  * window form whenever the order is total within each group (every
+  * caller here ends its order in a unique id or a distinct value) —
+  * partition boundaries shift which pid a row lands in, never its sum.
+  * `globalRank`, `midranks`/`midranksBy`, `Curation.prefixPackBy` and
+  * `TextAnalysis.tokenBudgetDocs` are all this one primitive.
   */
 object Rank {
 
-  /** Append `grank` (1-based global row_number by `sort`) to `df`.
-    * `sort` must be a total order for cross-run determinism.
+  /** Append `as`: the inclusive running sum of `measure` within each
+    * `keys` group, in `order` (which must be a total order within the
+    * group). `parts` overrides the range width (`Session.width` when 0);
+    * the result never depends on it.
+    *
+    * Offsets: an unkeyed call prefix-sums the per-partition totals with
+    * an unpartitioned window — its input is ≤ #partitions rows, the
+    * bound `PlanAuditSpec`'s global-window whitelist names; a keyed call
+    * partitions that window by key. `measure` is evaluated inside the
+    * window and totals expressions only, so a count (`lit(1L)`) adds no
+    * shuffle column.
     */
-  def globalRank(df: DataFrame, sort: Seq[Column], parts: Int = 0): DataFrame = {
+  def prefixSum(df: DataFrame, keys: Seq[String], order: Seq[Column],
+      measure: Column, as: String, parts: Int = 0): DataFrame = {
     import graft.core.Ckpt.TruncateSyntax
-    val n =
-      if (parts > 0) parts
-      else df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(n, sort: _*)
-      .withColumn("pid", spark_partition_id())
-    val inPart = Window.partitionBy(col("pid")).orderBy(sort: _*)
+    val n = if (parts > 0) parts else graft.Session.width(df)
+    val ks = keys.map(col)
+    val pid = col("_ps_pid")
     // MATERIALIZED once (Ckpt seam) before fanning out to the offsets
     // aggregate AND the join back: the two subtrees otherwise
     // re-evaluate the range exchange independently, and
     // RangePartitioner's boundary SAMPLE depends on the input rows'
     // within-partition order — deterministic off a parquet scan, but
     // NOT across re-evaluations of upstream shuffles (reduce-side fetch
-    // order varies run to run). Found live: three chained globalRanks
+    // order varies run to run). Found live: three chained global ranks
     // in events_rfm produced pid assignments that disagreed between the
     // offsets and join evaluations at 4 threads — unique-but-wrong
     // ranks, 63 misplaced quartile scores at sf0.1.
-    val local = ranged.withColumn("r_in", row_number().over(inPart).cast("long"))
+    val local = df.repartitionByRange(n, ks ++ order: _*)
+      .withColumn("_ps_pid", spark_partition_id())
+      .withColumn("_ps_cum", sum(measure).over(
+        Window.partitionBy(pid +: ks: _*).orderBy(order: _*)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .truncated()
-    val offsets = local.groupBy(col("pid")).agg(count(lit(1)).as("cnt"))
-      .withColumn("base", coalesce(sum(col("cnt")).over(
-        Window.orderBy(col("pid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("base"))
-    local.join(broadcast(offsets), "pid")
-      .withColumn("grank", col("base") + col("r_in"))
-      .drop("pid", "r_in", "base")
+    val offsets = local.groupBy(ks :+ pid: _*).agg(sum(measure).as("_ps_tot"))
+      .select(ks :+ pid :+ coalesce(sum(col("_ps_tot")).over(
+        Window.partitionBy(ks: _*).orderBy(pid)
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("_ps_base"): _*)
+    local.join(broadcast(offsets), keys :+ "_ps_pid")
+      .select(df.columns.map(c => col(s"`$c`")) :+
+        (col("_ps_base") + col("_ps_cum")).as(as): _*)
   }
+
+  /** Append `grank` (1-based global row_number by `sort`) to `df`.
+    * `sort` must be a total order for cross-run determinism.
+    */
+  def globalRank(df: DataFrame, sort: Seq[Column]): DataFrame =
+    prefixSum(df, Nil, sort, lit(1L), "grank")
 
   /** Per-distinct-value MIDRANKS without ranking the row stream: the
     * tied-rank primitive under `stats_spearman` / `stats_kruskal`.
@@ -61,11 +80,9 @@ object Rank {
     * 2·midrank = 2·cum_before + t + 1, the `stats_mannwhitney`
     * algebra). Scale shape: the corpus collapses FIRST through a keyed
     * count (map-side combinable, output = |distinct values| rows), and
-    * only that distinct frame rides the range exchange + prefix sum —
-    * for a 50-distinct-values column the exchange carries 50 rows no
-    * matter the corpus. Same two-pass offsets discipline as
-    * `globalRank`/`prefixPackBy` (Ckpt-truncated before the fan-out;
-    * the offsets window is over a ≤ partitions-count frame).
+    * only that distinct frame rides `prefixSum` — for a
+    * 50-distinct-values column the range exchange carries 50 rows no
+    * matter the corpus.
     *
     * NULL values: callers filter them first — Spark sorts NULL FIRST
     * ascending where DuckDB defaults NULLS LAST, so a null group's
@@ -73,27 +90,11 @@ object Rank {
     * `midranksBy`/`groupMedian`/`groupQuantiles` too). Every wired
     * caller ranks non-null measure columns.
     */
-  def midranks(df: DataFrame, v: Column, parts: Int = 0): DataFrame = {
-    import graft.core.Ckpt.TruncateSyntax
+  def midranks(df: DataFrame, v: Column): DataFrame = {
     val counts = df.groupBy(v.as("mr_v")).agg(count(lit(1)).as("mr_t"))
-    val n =
-      if (parts > 0) parts
-      else df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = counts.repartitionByRange(n, col("mr_v"))
-      .withColumn("pid", spark_partition_id())
-    val inPart = Window.partitionBy(col("pid")).orderBy(col("mr_v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = ranged.withColumn("cum_in", sum(col("mr_t")).over(inPart))
-      .truncated()
-    val offsets = local.groupBy(col("pid")).agg(max(col("cum_in")).as("tot"))
-      .withColumn("base", coalesce(sum(col("tot")).over(
-        Window.orderBy(col("pid")).rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select(col("pid"), col("base"))
-    local.join(broadcast(offsets), "pid")
+    prefixSum(counts, Nil, Seq(col("mr_v")), col("mr_t"), "mr_cum")
       .select(col("mr_v"), col("mr_t"),
-        (lit(2L) * (col("base") + col("cum_in") - col("mr_t")) +
-          col("mr_t") + 1).as("mr_r2"))
+        (lit(2L) * (col("mr_cum") - col("mr_t")) + col("mr_t") + 1).as("mr_r2"))
   }
 
   /** KEYED `midranks`: per-(key, distinct value) tie counts, inclusive
@@ -102,33 +103,13 @@ object Rank {
     * A `Window.partitionBy(key).orderBy(v)` would serialize each
     * group's whole distinct-value history through one task — fatal
     * when key cardinality is O(1) (event types) while the corpus
-    * scales; this is the `prefixPackBy` two-pass shape on the distinct
-    * frame instead: range-repartition on (key, v), per-partition local
-    * cumsum, per-(key, pid) totals prefix-summed over a bounded frame
-    * and broadcast back. Returns (mr_k, mr_v, mr_t, mr_cum, mr_r2).
+    * scales; this is keyed `prefixSum` on the distinct frame instead.
+    * Returns (mr_k, mr_v, mr_t, mr_cum, mr_r2).
     */
-  def midranksBy(df: DataFrame, key: Column, v: Column,
-      parts: Int = 0): DataFrame = {
-    import graft.core.Ckpt.TruncateSyntax
+  def midranksBy(df: DataFrame, key: Column, v: Column): DataFrame = {
     val counts = df.groupBy(key.as("mr_k"), v.as("mr_v"))
       .agg(count(lit(1)).as("mr_t"))
-    val n =
-      if (parts > 0) parts
-      else df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = counts.repartitionByRange(n, col("mr_k"), col("mr_v"))
-      .withColumn("pid", spark_partition_id())
-    val inPart = Window.partitionBy(col("pid"), col("mr_k")).orderBy(col("mr_v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = ranged.withColumn("cum_in", sum(col("mr_t")).over(inPart))
-      .truncated()
-    val offsets = local.groupBy(col("mr_k"), col("pid"))
-      .agg(max(col("cum_in")).as("tot"))
-      .withColumn("base", coalesce(sum(col("tot")).over(
-        Window.partitionBy(col("mr_k")).orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("mr_k"), col("pid"), col("base"))
-    local.join(broadcast(offsets), Seq("mr_k", "pid"))
-      .withColumn("mr_cum", col("base") + col("cum_in"))
+    prefixSum(counts, Seq("mr_k"), Seq(col("mr_v")), col("mr_t"), "mr_cum")
       .select(col("mr_k"), col("mr_v"), col("mr_t"), col("mr_cum"),
         (lit(2L) * (col("mr_cum") - col("mr_t")) + col("mr_t") + 1).as("mr_r2"))
   }

@@ -1810,11 +1810,11 @@ object TimeSeries {
   def eventsPowerUsers(events: DataFrame): DataFrame = {
     val per = events.groupBy(col("user_id")).agg(count(lit(1)).as("n"))
     // decile = closed-form ntile over a DISTRIBUTED global rank
-    // (Rank.globalRank — range-repartitioned row_number + broadcast
-    // offsets): the user frame scales with the corpus, so the previous
-    // single-partition ntile window was this family's one remaining
-    // corpus-scaled global sort. Same (n DESC, user_id) total order,
-    // identical tiles (oracle unchanged, hash-green at 3 SFs).
+    // (Rank.globalRank, a Rank.prefixSum count): the user frame scales
+    // with the corpus, so the previous single-partition ntile window
+    // was this family's one remaining corpus-scaled global sort. Same
+    // (n DESC, user_id) total order, identical tiles (oracle unchanged,
+    // hash-green at 3 SFs).
     val tot = broadcast(per.agg(count(lit(1)).as("n_total")))
     Rank.globalRank(per, Seq(col("n").desc, col("user_id")))
       .crossJoin(tot)
@@ -2133,7 +2133,7 @@ object TimeSeries {
     // salt machinery as pure overhead there (+0.5 s on a 0.7 s row).
     val nSalt =
       if (maxBucketsPerType > 0) 1
-      else events.sparkSession.sessionState.conf.numShufflePartitions
+      else graft.Session.width(events)
     val (a, c) =
       if (nSalt <= 1)
         (b.select(col("event_type"), col("hs").as("h1"), col("vu").as("v1")),

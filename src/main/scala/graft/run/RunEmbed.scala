@@ -157,7 +157,7 @@ object RunEmbed {
         expr("sqrt(aggregate(vector, 0d, (acc, x) -> acc + x * x))").as("nrm1")))
     val t = vecs.select(col("word").as("w2"), col("vector").as("v2"),
         expr("sqrt(aggregate(vector, 0d, (acc, x) -> acc + x * x))").as("nrm2"))
-      .repartition(spark.sessionState.conf.numShufflePartitions)
+      .repartition(graft.Session.width(vecs))
     val dot = expr("aggregate(zip_with(v1, v2, (x, y) -> x * y), 0d, (acc, x) -> acc + x)")
     val out = Ckpt.truncate(
       q.join(t, col("w1") =!= col("w2"))

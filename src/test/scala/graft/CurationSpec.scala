@@ -126,22 +126,6 @@ class CurationSpec extends SparkSpecBase {
     assert(got.nonEmpty)
   }
 
-  test("seqPackGlobal (two-pass prefix sum) ≡ one-partition global window") {
-    import org.apache.spark.sql.expressions.Window
-    val docs = Tables.documents(spark, sfDir)
-    val got = Curation.seqPackGlobal(docs, partitions = 7)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val w = Window.orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val twin = docs
-      .select(col("doc_id"), (sum(col("n_chars")).over(w) - col("n_chars")).as("start"))
-      .select(col("doc_id"), floor(col("start") / 2048).cast("long").as("seq_id"),
-        (col("start") % 2048).as("pack_off"))
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(got == twin)
-    assert(got.size == docs.count())
-  }
-
   test("quality_repetition computes the hand-checked signals") {
     import spark.implicits._
     val docs = Seq(

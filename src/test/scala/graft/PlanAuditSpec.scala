@@ -17,7 +17,7 @@ package graft
   *      here deliberately, with the same justification.
   *  (c) A global-order window (empty partitionSpec + orderSpec) — the
   *      single-task sort. Legal ONLY over provably bounded input (the
-  *      Rank.scala:9 rule: bin counts, per-class/per-type rows,
+  *      Rank.scala header rule: bin counts, per-class/per-type rows,
   *      top-k-limited frames, eval-set-scoped metrics) — whitelisted
   *      per query with the bound named.
   *
@@ -98,11 +98,11 @@ class PlanAuditSpec extends SparkSpecBase {
     "ann_pq_distortion",   // quantile edges over ≤ codebook-sized distortion rows
     "auc_binary",          // eval-set-scoped rank statistic (aucBinaryBucketed is the scale twin)
     "corpus_apportion",    // source-count frame (≤ |sources| rows)
-    "corpus_token_budget", // two-pass prefix-sum offsets frame (≤ #partitions rows, the Rank rule)
+    "corpus_token_budget", // Rank.prefixSum offsets frame (≤ #partitions rows)
     "tokenizer_wordpiece", // vocab top-64 rank over the substring-count frame (corpus_zipf rule)
     "tokenizer_viterbi",   // same shared vocab build
     "tokenizer_unigram_train", // seed + trained-piece ranks over vocab-sized frames (≤ SeedV + alphabet rows)
-    "corpus_zipf",         // vocab rank on the declared slice (corpusZipfScalable is the scale twin)
+    "corpus_zipf",         // vocab rank on the declared slice (Rank.prefixSum is the scale form)
     "dedup_suffix",        // Rank.globalRank offsets frame (≤ #partitions rows)
     "embedding_outliers",  // quantile edges over ≤ bins rows (×3)
     "events_paths",        // top-k-limited path frame
@@ -161,7 +161,7 @@ class PlanAuditSpec extends SparkSpecBase {
     assert(offenders.isEmpty,
       s"unwhitelisted global-order window in: ${offenders.toSeq.sorted} — " +
         "either partition the window, use the distributed twin pattern " +
-        "(Rank.prefixPackBy / aucBinaryBucketed / corpusZipfScalable), or " +
+        "(Rank.prefixSum / aucBinaryBucketed), or " +
         "whitelist with the input bound named")
   }
 

@@ -71,21 +71,6 @@ class TextAnalysisSpec extends SparkSpecBase {
     assert(got(1L)._2 > got(2L)._2)
   }
 
-  test("corpusZipfScalable (distributed rank) ≡ global-window form") {
-    // several partitions so the prefix-sum offsets actually matter
-    val docs = Tables.documents(spark, sfDir)
-    assert(collectSet(TextAnalysis.corpusZipfScalable(docs, partitions = 7)) ===
-      collectSet(TextAnalysis.corpusZipfDocs(docs)))
-    // and on the exact power-law corpus from the first test
-    import spark.implicits._
-    val words = (1 to 50).flatMap(r => Seq.fill(math.round(1000.0 / r).toInt)(s"w$r"))
-    val pl = words.grouped(100).zipWithIndex
-      .map { case (g, i) => (i.toLong, g.mkString(" ")) }.toSeq
-      .toDF("doc_id", "text")
-    assert(collectSet(TextAnalysis.corpusZipfScalable(pl, partitions = 5)) ===
-      collectSet(TextAnalysis.corpusZipfDocs(pl)))
-  }
-
   test("quality_classifier: score bounds, kept ⇔ threshold, exact partition invariance") {
     val docs = Tables.documents(spark, sfDir)
     val rows = TextAnalysis.qualityClassifierDocs(docs).collect()
