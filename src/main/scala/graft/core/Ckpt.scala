@@ -76,10 +76,10 @@ object Ckpt {
     * promoted to a wrapper so an operator family (Rank helpers, BPE
     * rounds, power iterations) cannot leak per-round blocks through ANY
     * of its query rows: bench_detail r13 measured 36 rows leaving more
-    * than the ambient 6 blocksets, each a hand-missed tail. Frames a
-    * `SharedFrames` build creates (through `untracked`) are exempt —
-    * they outlive the query by design and the registry's release owns
-    * them. Only meaningful around builders that
+    * than the ambient 6 blocksets, each a hand-missed tail. Frames made
+    * through `untracked` (`SharedFrames` builds, a fitted FkNN model's
+    * memberships) are exempt — they outlive the query by design and
+    * their owner frees them. Only meaningful around builders that
     * checkpoint internally: wrapping a pure lazy scan would just
     * materialize its output for nothing.
     */
@@ -129,13 +129,15 @@ object Ckpt {
       (org.apache.spark.sql.SparkSession, String) => DataFrame =
     (s, d) => scoped(fn(s, d))
 
-  /** Shield for `SharedFrames` builds: checkpoints created inside
-    * `body` are NOT collected by an enclosing `scoped`, so a cold memo
-    * built during a scoped query survives the query — its blocks are
-    * the memo's value. Package-private: a frame built here outside the
-    * registry would have no owner to release it.
+  /** Shield for frames that outlive the query building them: checkpoints
+    * created inside `body` are NOT collected by an enclosing `scoped`.
+    * Two owners use it: `SharedFrames` builds (a cold memo built during a
+    * scoped query survives the query; the registry's release frees it)
+    * and `FknnClassifier.fit` (the model's membership table; ContextCleaner
+    * frees it with the model). Graft-private: a frame built here needs
+    * an owner that keeps it reachable for as long as it is read.
     */
-  private[core] def untracked[T](body: => T): T = {
+  private[graft] def untracked[T](body: => T): T = {
     scopes.set(None :: scopes.get())
     try body finally scopes.set(scopes.get().tail)
   }

@@ -7,12 +7,15 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
-import graft.core.Fknn
+import graft.core.{Ckpt, Fknn}
 
 /** spark.ml Pipeline wrapper for the FkNN core — the "MLlib pipeline +
-  * DataFrame operations" surface named in BASELINE.json. `fit` runs
-  * stage 1 (Keller class-membership degrees over train) and caches it in
-  * the model; `transform` runs stage 2 against any query frame.
+  * DataFrame operations" surface named in BASELINE.json. `fit` is eager,
+  * as spark.ml estimators are: it runs stage 1 (Keller class-membership
+  * degrees over train) once and materializes the table through
+  * `Ckpt.truncate`; `transform` runs only stage 2 against any query
+  * frame. This is the reference's fit-once serving shape (SURVEY §4.1
+  * row 5): one train-side pass amortised over every query batch.
   *
   * Parameter parity with the reference's CLI surface (SURVEY §3.1
   * [LINEAGE]): `k`, `nClasses`, plus `version` ("global" exact /
@@ -69,13 +72,21 @@ class FknnClassifier(override val uid: String) extends Estimator[FknnModel] with
   def setNumIterations(value: Int): this.type = set(numIterations, value)
   def setDistType(value: String): this.type = set(distType, value)
 
+  /** Runs stage 1 now. The membership table is a checkpoint the model
+    * owns: a local one, or a reliable one when a checkpoint dir is set.
+    * It is built outside any enclosing `Ckpt.scoped`, so a model fitted
+    * inside a scope still transforms after the scope ends. ContextCleaner
+    * frees the local blocks once the model is unreachable; reliable
+    * checkpoint files follow the file-lifetime rule in `Ckpt`'s scaladoc.
+    */
   override def fit(dataset: Dataset[_]): FknnModel = {
     val train = dataset.select(col("vec_id"), col("v"), col("label"))
-    val memberships =
+    val stage1 =
       if (getNumIterations != 1)
         Fknn.membershipInitChunked(train, getK, getNClasses, blocks = getNumIterations,
           dist = distFn)
       else Fknn.membershipInit(train, getK, getNClasses, dist = distFn)
+    val memberships = Ckpt.untracked(Ckpt.truncate(stage1))
     val model = new FknnModel(uid, train, memberships)
     copyValues(model.setParent(this))
   }
@@ -84,6 +95,11 @@ class FknnClassifier(override val uid: String) extends Estimator[FknnModel] with
   override def copy(extra: ParamMap): FknnClassifier = defaultCopy(extra)
 }
 
+/** A fitted FkNN classifier: the train frame stage 2 searches, and the
+  * stage-1 membership table. After `fit` that table is a materialized
+  * checkpoint (after `FknnModel.load`, a parquet scan), so `transform`
+  * never recomputes stage 1.
+  */
 class FknnModel(
     override val uid: String,
     private val train: DataFrame,

@@ -24,7 +24,8 @@ import graft.rel.Graph
   *
   * Determinism: fixed seed + one trainer partition — Spark's Word2Vec
   * is only run-to-run stable at `numPartitions = 1` (Hogwild-style
-  * updates race across partitions otherwise). That serializes the
+  * updates race across partitions otherwise) — over sentences in
+  * walk-id order (`walkSentences`). That serializes the
   * TRAINING reduce; the corpus build, the co-occurrence ranking, and
   * the vector k-NN read-out stay fully distributed, and a production
   * run that can live with trainer nondeterminism raises
@@ -40,12 +41,21 @@ object RunEmbed {
     * walk id: sort by step INSIDE the struct collect (the house
     * deterministic-fold idiom — `sort_array(collect_list(struct))`,
     * never a window over an unordered agg).
+    *
+    * The sentences come out in walk-id order in one partition, because
+    * this frame is the trainer's input and Word2Vec's vocabulary order
+    * and training order follow its input order, even at
+    * `numPartitions = 1`. Straight out of the group-by, that order would
+    * be the hash-partition layout of the session's shuffle width, and the
+    * trained vectors, so `graph_embed_nn`'s rows, would change with the
+    * core count (RunEmbedSpec pins widths 4 and 8 to the same rows).
     */
   private[graft] def walkSentences(walks: DataFrame): DataFrame =
     walks.groupBy(col("walk"))
       .agg(sort_array(collect_list(struct(col("step"), col("node")))).as("sn"))
       .select(col("walk"),
         expr("transform(sn, x -> cast(x.node AS string))").as("sentence"))
+      .orderBy(col("walk")).coalesce(1)
 
   /** Cosine top-`k` neighbors per word over the trained vectors —
     * brute-force pair ranking (the vocab is |nodes visited|, tiny next

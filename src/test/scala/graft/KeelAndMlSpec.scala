@@ -2,10 +2,18 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
+import scala.concurrent.duration._
 
-import graft.core.{Distance, Fknn}
-import graft.ml.FknnClassifier
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.Cross
+import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import org.scalatest.concurrent.Eventually._
+
+import graft.core.{Ckpt, Distance, Fknn}
+import graft.ml.{FknnClassifier, FknnModel}
 import graft.sources.KeelSource
 
 /** KEEL compatibility source (header-range min-max normalization, nominal
@@ -67,11 +75,21 @@ class KeelAndMlSpec extends SparkSpecBase {
     assert(pred === Map(10L -> 0, 11L -> 1))
   }
 
-  test("spark.ml FknnClassifier pipeline ≡ direct Fknn calls") {
+  /** The sf train/query split every classifier test uses. */
+  private def split(): (DataFrame, DataFrame) = {
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), Distance.asDouble(col("embedding")).as("v"), col("label"))
-    val train = e.filter(col("vec_id") % 10 =!= 0 && col("vec_id") < 300)
-    val queries = e.filter(col("vec_id") % 10 === 0 && col("vec_id") < 300)
+    (e.filter(col("vec_id") % 10 =!= 0 && col("vec_id") < 300),
+      e.filter(col("vec_id") % 10 === 0 && col("vec_id") < 300))
+  }
+
+  /** Cross joins in a frame's analyzed plan: one per `Knn.pairwise`
+    * search, plus stage 1's class densify. */
+  private def crossJoins(df: DataFrame): Int =
+    df.queryExecution.analyzed.collect { case j: Join if j.joinType == Cross => j }.size
+
+  test("spark.ml FknnClassifier pipeline ≡ direct Fknn calls") {
+    val (train, queries) = split()
 
     val model = new FknnClassifier().setK(5).setNClasses(10).fit(train)
     val viaMl = model.transform(queries)
@@ -84,10 +102,7 @@ class KeelAndMlSpec extends SparkSpecBase {
   }
 
   test("FknnClassifier version/numIterations params mirror the CLI variants") {
-    val e = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), Distance.asDouble(col("embedding")).as("v"), col("label"))
-    val train = e.filter(col("vec_id") % 10 =!= 0 && col("vec_id") < 300)
-    val queries = e.filter(col("vec_id") % 10 === 0 && col("vec_id") < 300)
+    val (train, queries) = split()
 
     // numIterations chunks both stages — output-invisible vs the default
     val chunked = new FknnClassifier().setK(5).setNClasses(10)
@@ -111,10 +126,7 @@ class KeelAndMlSpec extends SparkSpecBase {
   }
 
   test("FknnClassifier distType=l1 and numIterations=-1 (auto) mirror the CLI options") {
-    val e = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), Distance.asDouble(col("embedding")).as("v"), col("label"))
-    val train = e.filter(col("vec_id") % 10 =!= 0 && col("vec_id") < 300)
-    val queries = e.filter(col("vec_id") % 10 === 0 && col("vec_id") < 300)
+    val (train, queries) = split()
 
     // auto chunking (numIterations = -1) is output-invisible
     val auto = new FknnClassifier().setK(5).setNClasses(10)
@@ -136,11 +148,54 @@ class KeelAndMlSpec extends SparkSpecBase {
     intercept[IllegalArgumentException] { new FknnClassifier().setNumIterations(0) }
   }
 
+  test("FknnClassifier.fit is eager: it runs stage 1 and keeps the memberships as a checkpoint") {
+    val (train, _) = split()
+    val group = "fknn-eager-fit"
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, "FknnClassifier.fit")
+    val model =
+      try new FknnClassifier().setK(5).setNClasses(10).fit(train)
+      finally sc.clearJobGroup()
+    assert(Ckpt.isTruncated(model.memberships))
+    // the job records reach the status store through the listener bus
+    eventually(timeout(10.seconds), interval(50.millis)) {
+      assert(sc.statusTracker.getJobIdsForGroup(group).nonEmpty, "fit ran no job")
+    }
+  }
+
+  test("FknnModel.transform runs only stage 2: no train × train self-join, twice over") {
+    val (train, queries) = split()
+    val model = new FknnClassifier().setK(5).setNClasses(10).fit(train)
+    val direct = collectSet(Fknn.classify(Fknn.membershipInit(train, 5, 10), train, queries, 5))
+    // stage 1 alone plans two cross joins (the self-join and the densify)
+    assert(crossJoins(Fknn.membershipInit(train, 5, 10)) === 2)
+    (1 to 2).foreach { _ =>
+      val out = model.transform(queries)
+      assert(crossJoins(out) === 1, "only the query × train search: " +
+        out.queryExecution.analyzed.treeString)
+      assert(collectSet(out.select(col("vec_id").as("q_id"), col("predicted"))) === direct)
+    }
+  }
+
+  test("a model fitted inside Ckpt.scoped still transforms after the scope exits") {
+    val (train, queries) = split()
+    def preds(m: FknnModel) = m.transform(queries).select(col("vec_id"), col("predicted"))
+    var model: FknnModel = null
+    val inScope = collectSet(Ckpt.scoped {
+      model = new FknnClassifier().setK(5).setNClasses(10).fit(train)
+      preds(model)
+    })
+    // the scope released nothing the model reads: its membership blocks
+    // are still pinned, and a transform after the scope finds them
+    val rdd = model.memberships.queryExecution.analyzed.collectFirst {
+      case lr: LogicalRDD => lr.rdd
+    }.get
+    assert(rdd.getStorageLevel != StorageLevel.NONE)
+    assert(collectSet(preds(model)) === inScope)
+  }
+
   test("FknnModel save → load → transform ≡ the original fitted model") {
-    val e = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), Distance.asDouble(col("embedding")).as("v"), col("label"))
-    val train = e.filter(col("vec_id") % 10 =!= 0 && col("vec_id") < 300)
-    val queries = e.filter(col("vec_id") % 10 === 0 && col("vec_id") < 300)
+    val (train, queries) = split()
     val model = new FknnClassifier().setK(5).setNClasses(10)
       .setVersion("global").setNumIterations(3).setDistType("l2").fit(train)
     val path = java.nio.file.Files.createTempDirectory("fknnmodel").toString

@@ -101,6 +101,25 @@ class RunEmbedSpec extends SparkSpecBase {
     }
   }
 
+  test("graph_embed_nn core: the same walks give the same rows at shuffle widths 4 and 8") {
+    // the walk corpus is fixed (one checkpoint); only the width the
+    // sentence build and the read-out shuffle at changes. Word2Vec's
+    // vocabulary order and training order follow its input order, so the
+    // trainer must see the sentences in an order no shuffle width decides
+    val walks = graft.rel.Graph.walksShared(spark, sfDir)
+    def rowsAt(width: Int): Set[(Long, Long, Int, Double)] = {
+      val key = "spark.sql.shuffle.partitions"
+      val was = spark.conf.get(key)
+      spark.conf.set(key, width.toString)
+      try RunEmbed.embedNnOf(spark, walks).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
+      finally spark.conf.set(key, was)
+    }
+    val at4 = rowsAt(4)
+    assert(at4.nonEmpty)
+    assert(rowsAt(8) === at4)
+  }
+
   test("RunEmbed end-to-end: report reconciles with the persisted vectors") {
     val out = java.nio.file.Files.createTempDirectory("embed").toString
     val report = RunEmbed.run(spark, sfDir, out, steps = 4, walksPerSeed = 2, dim = 8)
