@@ -31,7 +31,7 @@ object Bench {
     System.gc() // warmup allocation debt collected before anything is timed
   }
 
-  /** Cold-build accounting (round 11, VERDICT r10 #5): nine shared
+  /** Cold-build accounting (round 11, VERDICT r10 #5): ten shared
     * frames (`graft.core.SharedFrames`) are built once per (session,
     * dir), so their dependents' per-query numbers are warm-hit reads and
     * the build cost would otherwise vanish into whichever query ran
@@ -42,6 +42,7 @@ object Bench {
     * library's actual steady state.
     */
   val buildLines: Seq[(String, String)] = Seq(
+    "build_fknn_memberships" -> "fknn_classify",
     "build_shared_scores" -> "accuracy",
     "build_dedup_clusters" -> "dedup_cluster",
     "build_graph_edges" -> "graph_degree_dist",

@@ -77,8 +77,8 @@ object Ckpt {
     * rounds, power iterations) cannot leak per-round blocks through ANY
     * of its query rows: bench_detail r13 measured 36 rows leaving more
     * than the ambient 6 blocksets, each a hand-missed tail. Frames made
-    * through `untracked` (`SharedFrames` builds, a fitted FkNN model's
-    * memberships) are exempt — they outlive the query by design and
+    * through `untracked` (`SharedFrames` builds, `Fknn.fit`'s membership
+    * table) are exempt — they outlive the query by design and
     * their owner frees them. Only meaningful around builders that
     * checkpoint internally: wrapping a pure lazy scan would just
     * materialize its output for nothing.
@@ -133,9 +133,9 @@ object Ckpt {
     * created inside `body` are NOT collected by an enclosing `scoped`.
     * Two owners use it: `SharedFrames` builds (a cold memo built during a
     * scoped query survives the query; the registry's release frees it)
-    * and `FknnClassifier.fit` (the model's membership table; ContextCleaner
-    * frees it with the model). Graft-private: a frame built here needs
-    * an owner that keeps it reachable for as long as it is read.
+    * and `Fknn.fit` (the stage-1 table; ContextCleaner frees it with the
+    * model, memo or frame holding it). Graft-private: a frame built here
+    * needs an owner that keeps it reachable for as long as it is read.
     */
   private[graft] def untracked[T](body: => T): T = {
     scopes.set(None :: scopes.get())
@@ -152,9 +152,9 @@ object Ckpt {
     * when a checkpoint dir is configured on the SparkContext, else
     * `localCheckpoint()`. Both eager — iterative callers need the round
     * computed NOW, not re-planned inside next round's tree. (Call sites
-    * that thread their own eagerness flag — `Fknn.topkBlocks`,
-    * `AnnSearch.pqSearchChunked` — skip truncation entirely on the lazy
-    * path: `if (eager) df.truncated() else df`.)
+    * that thread their own eagerness flag — `Fknn.membershipInitChunked`,
+    * `Fknn.classifyChunked`, `AnnSearch.pqSearchChunked` — skip the
+    * truncation on the lazy path: `if (eager) df.truncated() else df`.)
     */
   def truncate(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,6 +21,10 @@ import graft.core.Ckpt.TruncateSyntax
   *   (ties → lowest class index; d=0 guarded by w_i = 1/max(d_i,1e-12)² so
   *   an exact match dominates the vote — documented impl convention,
   *   identical in the DuckDB oracle SQL.)
+  *
+  * Stage 1 depends on the train set only: `fit` materializes it once and
+  * every stage-2 caller reads that table (`membershipInit` and
+  * `membershipInitChunked` stay lazy plans).
   *
   * Everything is one declarative DataFrame pipeline: join + bounded-heap
   * top-k + hash aggregations. No driver-side collect anywhere. Data
@@ -268,32 +272,26 @@ object Fknn {
       .select(col("q_id"), col("label").as("predicted"))
   }
 
-  /** The full two-stage pipeline with the stage-1 output persisted across
-    * stages — the reference's `cache()` of the fuzzified train set
-    * (SURVEY §4.1 row 5). Without it, the O(N²) membership subtree is
-    * re-evaluated inside stage 2's join (measured 8× slower at N=20k,
-    * `tools.ScaleProbe`); with it, stage 2 reads 10 rows/train-instance
-    * from memory.
-    *
-    * Cache lifecycle is the CALLER's: the returned frame is lazy, so this
-    * method cannot unpersist after the (not-yet-run) action. Bench/Verify
-    * `clearCache()` between queries; library users should unpersist (or
-    * clear) once the dependent action completes.
+  /** Stage 1, materialized now — the reference's `cache()` of the
+    * fuzzified train set (SURVEY §4.1 row 5). `blocks == 1` runs
+    * `membershipInit`, else `membershipInitChunked` (`-1` auto-sizes).
+    * The checkpoint is built outside any enclosing `Ckpt.scoped`, so its
+    * holder (a model, a `SharedFrames` memo, a pipeline frame) reads it
+    * after that scope ends; ContextCleaner frees it once unreferenced.
     */
-  def classifyPipeline(train: DataFrame, queries: DataFrame, k: Int, nClasses: Int,
+  def fit(train: DataFrame, k: Int, nClasses: Int, blocks: Int = 1,
       dist: Dist = graft.functions.ArrayDistance.l2): DataFrame = {
-    val mem = membershipInit(train, k, nClasses, dist).persist()
-    classify(mem, train, queries, k, dist)
+    val stage1 =
+      if (blocks == 1) membershipInit(train, k, nClasses, dist)
+      else membershipInitChunked(train, k, nClasses, blocks, dist = dist)
+    Ckpt.untracked(Ckpt.truncate(stage1))
   }
 
-  /** The full two-stage pipeline over the embeddings table with the
-    * standard split (query = vec_id % 10 == 0, train = rest).
+  /** The full two-stage pipeline. Stage 2 reads `fit`'s table instead of
+    * re-evaluating the O(N²) membership subtree inside its join (measured
+    * 8× slower at N=20k, `tools.ScaleProbe`); nothing is left cached.
     */
-  def classifyEmbeddings(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val e = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), Distance.asDouble(col("embedding")).as("v"), col("label"))
-    val q = e.filter(col("vec_id") % 10 === 0)
-    val t = e.filter(col("vec_id") % 10 =!= 0)
-    classifyPipeline(t, q, k, nClasses = 10)
-  }
+  def classifyPipeline(train: DataFrame, queries: DataFrame, k: Int, nClasses: Int,
+      dist: Dist = graft.functions.ArrayDistance.l2): DataFrame =
+    classify(fit(train, k, nClasses, dist = dist), train, queries, k, dist)
 }

@@ -8,9 +8,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** The cross-query memo for shared frames: a value several declared rows
-  * consume (the FkNN score table, dedup clusters, graph edge lists and
-  * walks, ingest pairs, the subword vocab, the BPE merges) is built once
-  * per (session, data dir, name) and read by every later caller.
+  * consume (FkNN memberships, scores and predictions, dedup clusters, graph
+  * edges and walks, ingest pairs, the subword vocab, the BPE merges) is
+  * built once per (session, data dir, name) and read by every later caller.
   *
   * Contract:
   *  - a build runs inside `Ckpt.untracked`, so the checkpoints it

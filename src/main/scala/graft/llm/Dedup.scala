@@ -158,9 +158,9 @@ object Dedup {
     // 32 s → 39-48 s) because caching materializes the full stream once
     // while recomputation lets each consumer push its own filters and
     // column pruning into the scan (the verify leg reads only candidate
-    // docs' tokens). Contrast classifyPipeline, where the shared subtree
-    // is O(N²) and persist wins 8× — persist the EXPENSIVE subtree, not
-    // every shared one.
+    // docs' tokens). Contrast FkNN stage 1, where the shared subtree is
+    // O(N²) and materializing it once (`Fknn.fit`) wins 8× — materialize
+    // the EXPENSIVE subtree, not every shared one.
     val toks = TextOps.docTokens(docs)
     val sigsAll = bandSigs(toks, numHashes, rowsPerBand)
     // round 10 (VERDICT r9 #2): the bucket-size test rides the ONE

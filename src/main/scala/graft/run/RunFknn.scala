@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Distance, Fknn, Metrics}
+import graft.core.{Ckpt, Distance, Fknn, Metrics}
 
 /** The reference's report-writing CLI runner (SURVEY.md §3.1 EP-1
   * [LINEAGE]; VERDICT r8 #3) — the last piece of reference-surface
@@ -23,7 +23,7 @@ import graft.core.{Distance, Fknn, Metrics}
   * `blocks = -1` auto-sizes the kNN-IS chunk count from Catalyst
   * statistics (`Fknn.autoBlocks` — the reference's
   * `numIterations = -1`). Stages mirror the reference run: stage 1 =
-  * Keller membership init over train (persisted across stages, the
+  * Keller membership init over train (materialized by `Fknn.fit`, the
   * reference's cache of the fuzzified train set), stage 2 = the fuzzy
   * classify through the chosen physical version, then the metric
   * read-outs. Timings are per-stage because each stage is forced
@@ -61,12 +61,8 @@ object RunFknn {
       (a, (System.nanoTime() - t0) / 1e9)
     }
 
-    // stage 1 — membership init (persisted across stages; released at end)
-    val (mem, t1) = timed {
-      val m = Fknn.membershipInit(train, cfg.k, cfg.nClasses, dist).persist()
-      m.count()
-      m
-    }
+    // stage 1 — membership init, materialized by fit (released at end)
+    val (mem, t1) = timed { Fknn.fit(train, cfg.k, cfg.nClasses, dist = dist) }
     // stage 2 — classify through the declared physical version
     val (pred, t2) = timed {
       val p = (cfg.version match {
@@ -103,7 +99,7 @@ object RunFknn {
 
     graft.sources.Sinks.writePartitioned(
       pred, s"${cfg.outDir}/predictions", Seq("predicted"))
-    mem.unpersist(blocking = false)
+    Ckpt.release(mem)
     pred.unpersist(blocking = false)
 
     val report =

@@ -42,7 +42,7 @@ object ScaleProbe {
     val memRows = Fknn.membershipInit(train, 5, 10)
       .agg(count(lit(1)), sum(col("membership"))).head().getLong(0)
     val tMem = (System.nanoTime() - t0) / 1e9
-    // production path: classifyPipeline persists stage 1 across stages
+    // production path: classifyPipeline materializes stage 1 once (Fknn.fit)
     t0 = System.nanoTime()
     val pred = Fknn.classifyPipeline(train, queries, 5, 10)
     val predRows = pred.count()

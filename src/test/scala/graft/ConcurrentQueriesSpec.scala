@@ -11,13 +11,14 @@ import graft.core.SharedFrames
 /** One library session running declared queries from several threads
   * must return what a serial run returns, and leave nothing pinned once
   * the shared frames are released. The rows are the memo consumers, in
-  * pairs that race on the same cold memo (scores, edges) or on memos
-  * that share inputs (dedup clusters and ingest pairs; BPE and the
-  * subword vocab).
+  * groups that race on the same cold memo (FkNN memberships, scores,
+  * edges) or on memos that share inputs (dedup clusters and ingest
+  * pairs; BPE and the subword vocab).
   */
 class ConcurrentQueriesSpec extends SparkSpecBase {
 
-  private val rows = Seq("accuracy", "metrics_logloss", "dedup_cluster_hist",
+  private val rows = Seq("fknn_classify", "fknn_classify_local", "accuracy",
+    "metrics_logloss", "dedup_cluster_hist",
     "graph_pagerank", "graph_walk_cooccur", "tokenizer_encode",
     "tokenizer_wordpiece", "ingest_manifest")
 
