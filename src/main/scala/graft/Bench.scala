@@ -10,6 +10,9 @@ import graft.core.SharedFrames
   * emits ONE JSON line on stdout — also written to bench.json so the
   * result survives any log-prefixing wrapper (r1's sbt "[info] " prefix
   * made the driver's parse return null).
+  * Each row reports its minimum sample; in bench_detail.json,
+  * `samples[0]` is the row's cold sample (shared frames aside, which
+  * the build lines build).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -55,10 +58,11 @@ object Bench {
   private def timedPass(spark: SparkSession, sfDir: String): Unit = {
     // min of two timed runs per query (adaptive third below): one-off
     // GC/JIT hiccups otherwise dominate sub-second queries and wobble
-    // round-to-round comparisons. Cache is cleared BETWEEN queries
-    // (pipelines persist intermediate frames and, being lazy, cannot
-    // unpersist themselves — lifecycle is this caller's job) but not
-    // between a query's runs. The explicit gc() after each query makes
+    // round-to-round comparisons. Cache is cleared BETWEEN queries but
+    // not between a query's runs: the library's builders and runners
+    // release what they persist, so the clear is a harness guard that
+    // keeps a row that leaks a persist from serving or slowing the
+    // rows after it. The explicit gc() after each query makes
     // the PREVIOUS query's reclamation untimed — round-4's outliers
     // (corpus_clean 3.94 s driver-run vs 0.83-1.11 s in 8 committed
     // runs of identical code) were neighbors absorbing the persist-heavy

@@ -151,10 +151,7 @@ object Ckpt {
   /** Materialize `df` and truncate its lineage: reliable `checkpoint()`
     * when a checkpoint dir is configured on the SparkContext, else
     * `localCheckpoint()`. Both eager — iterative callers need the round
-    * computed NOW, not re-planned inside next round's tree. (Call sites
-    * that thread their own eagerness flag — `Fknn.membershipInitChunked`,
-    * `Fknn.classifyChunked`, `AnnSearch.pqSearchChunked` — skip the
-    * truncation on the lazy path: `if (eager) df.truncated() else df`.)
+    * computed NOW, not re-planned inside next round's tree.
     */
   def truncate(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {

@@ -4,8 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Ckpt.TruncateSyntax
-
 /** Fuzzy k-Nearest Neighbors (Keller/Gray/Givens 1985), Spark-first.
   *
   * Reference semantics (SURVEY.md §2.1, fixed by the published papers —
@@ -93,30 +91,15 @@ object Fknn {
     * `numIterations` memory bound (SURVEY §3.2). Identical output to
     * `membershipInit` (FknnSpec asserts it); use when the train set is too
     * large for a single unhinted self-join's build side.
-    *
-    * `eager` (round-5): the LAZY union runs every block inside ONE job,
-    * so each block's broadcast is |Q|/blocks rows but all of them are
-    * LIVE CONCURRENTLY on the executors (disk-spillable, not OOM, but
-    * the per-stage bound is not a per-job bound). `eager = true`
-    * `Ckpt.truncate`s each block's (small, k-rows-per-query) top-k as
-    * its own job — the reference's sequential-iteration semantics: one
-    * broadcast EXECUTING at a time, and each completed block's
-    * broadcast becomes unreferenced (checkpoint truncates the plan), so
-    * it is eligible for ContextCleaner release — asynchronous, but
-    * executors can also evict it under pressure once nothing pins it.
-    * Output-identical (FknnSpec); on a cluster use `checkpoint()` for
-    * fault tolerance.
     */
   def membershipInitChunked(train: DataFrame, k: Int, nClasses: Int, blocks: Int,
-      eager: Boolean = false,
       dist: Dist = graft.functions.ArrayDistance.l2): DataFrame = {
     val nb = resolveBlocks(blocks, train)
     val nn = (0 until nb).map { b =>
       val qBlock = train.filter(col("vec_id") % nb === b)
       val pairs = Knn.pairwise(qBlock, train, dist = dist, hintBroadcastQ = true)
         .filter(col("q_id") =!= col("t_id"))
-      val topk = Knn.topK(pairs, k)
-      if (eager) topk.truncated() else topk
+      Knn.topK(pairs, k)
     }.reduce(_ unionAll _)
     membershipFromNn(nn, train, k, nClasses)
   }
@@ -166,17 +149,13 @@ object Fknn {
       queries: DataFrame,
       k: Int,
       blocks: Int,
-      eager: Boolean = false,
       dist: Dist = graft.functions.ArrayDistance.l2): DataFrame = {
     val nb = resolveBlocks(blocks, queries)
     val nn = (0 until nb).map { b =>
       // per-block query side is known-small by construction (|Q|/blocks) —
       // the one legitimate forced-broadcast site (kNN-IS chunk placement).
-      // `eager` sequences the blocks into separate jobs so only one
-      // broadcast is live at a time (see membershipInitChunked).
-      val topk = Knn.knn(queries.filter(col("vec_id") % nb === b), train, k,
+      Knn.knn(queries.filter(col("vec_id") % nb === b), train, k,
         dist = dist, hintBroadcastQ = true)
-      if (eager) topk.truncated() else topk
     }.reduce(_ unionAll _)
     argmaxPredicted(scoresFromNn(nn, memberships))
   }

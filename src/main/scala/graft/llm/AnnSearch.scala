@@ -690,20 +690,17 @@ object AnnSearch {
     * per-block distance-table side that is known-small by construction
     * (|Q|/blocks · m·K doubles — inside AQE's broadcast gate), and the
     * union is output-identical to one big run because per-query top-k
-    * never crosses blocks. `eager` sequences blocks into separate jobs
-    * (one table broadcast live at a time — the
-    * `membershipInitChunked` lesson). Encode runs per block here; a
+    * never crosses blocks. Encode runs per block here; a
     * long chunk loop would hoist `codes` behind a persist/checkpoint,
     * the same seam the fknn chunked paths expose for stage-1 state.
     */
   def pqSearchChunked(q: DataFrame, t: DataFrame, cb: DataFrame,
-      m: Int, k: Int, blocks: Int, eager: Boolean = false): DataFrame = {
+      m: Int, k: Int, blocks: Int): DataFrame = {
     // blocks = -1 → auto-size from the query side's estimated bytes
     // (the kNN-IS `numIterations = -1` parity, shared with Fknn)
     val nb = if (blocks == -1) graft.core.Fknn.autoBlocks(q) else blocks
     (0 until nb).map { b =>
-      val blk = pqSearch(q.filter(pmod(col("q_id"), lit(nb)) === b), t, cb, m, k)
-      if (eager) blk.truncated() else blk
+      pqSearch(q.filter(pmod(col("q_id"), lit(nb)) === b), t, cb, m, k)
     }.reduce(_ unionAll _)
   }
 

@@ -47,8 +47,6 @@ import graft.rel.Queries
   */
 object RunAbtest {
 
-  case class SectionResult(name: String, rows: Long, wall: Double)
-
   def run(spark: SparkSession, sfDir: String, outDir: String): String = {
     Files.createDirectories(Paths.get(outDir))
     val sections = Seq[(String, (SparkSession, String) => DataFrame)](
@@ -79,13 +77,7 @@ object RunAbtest {
           .select((col("arm") === "control").as("isa"),
             col("value"), col("event_id")))
       }))
-    val results = sections.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      val rows = spark.read.parquet(s"$outDir/$name").count()
-      SectionResult(name, rows, (System.nanoTime() - t0) / 1e9)
-    }
+    val results = Stages.sinkSections(spark, sfDir, outDir, sections)
 
     def head1(name: String) = spark.read.parquet(s"$outDir/$name").head()
     def d(name: String, col: String): Double =
@@ -128,7 +120,7 @@ object RunAbtest {
     val report =
       s"""a/b analysis report (click vs purchase)
          |sections: name rows sec
-         |${results.map(r => f"  ${r.name} ${r.rows} ${r.wall}%.3f").mkString("\n")}
+         |${Stages.table(results)}
          |levene_f: $levF (variance homogeneity ${call(levF, 2.37)})
          |anova_f: ${d("stats_anova", "f")} eta_sq: ${d("stats_anova", "eta_sq")}
          |kruskal_h_tie: ${d("stats_kruskal", "h_tie")}

@@ -27,60 +27,42 @@ import graft.llm.AnnSearch
   */
 object RunAnn {
 
-  case class StageResult(name: String, metric: Long, wall: Double)
-
   def run(spark: SparkSession, sfDir: String, outDir: String,
       k: Int = 5, nprobe: Int = 2): String = {
     val e = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), Distance.asDouble(col("embedding")).as("v"))
     val q = e.filter(col("vec_id") % 10 === 0)
       .select(col("vec_id").as("q_id"), col("v").as("q_v"))
-    val t = e.filter(col("vec_id") % 10 =!= 0)
-      .select(col("vec_id").as("t_id"), col("v").as("t_v")).persist()
+    val stages = new Stages
+    val t = stages.persist(e.filter(col("vec_id") % 10 =!= 0)
+      .select(col("vec_id").as("t_id"), col("v").as("t_v")))
     val nQ = q.count()
-
-    val stages = scala.collection.mutable.ArrayBuffer.empty[StageResult]
-    def stage[A](name: String)(body: => (A, Long)): A = {
-      val t0 = System.nanoTime()
-      val (out, metric) = body
-      stages += StageResult(name, metric, (System.nanoTime() - t0) / 1e9)
-      out
-    }
 
     // 1. coarse quantizer: Lloyd's from a deterministic stride seed
     //    (≈ one centroid per 40 train vectors — the ann_ivf_kmeans shape)
-    val cent = stage("build_centroids") {
+    val cent = stages.frame("build_centroids") {
       // stride ≡ 1 (mod 40): a ≡ 0 stride would be a subset of the
       // ≡ 0 (mod 10) QUERY split and leave the train-side seed empty
       val seed = t.filter(col("t_id") % 40 === 1)
         .select(col("t_id").as("c_id"), col("t_v").as("c_v"))
-      val c = AnnSearch.kmeansCentroids(t, seed, iters = 2).persist()
-      (c, c.count())
+      AnnSearch.kmeansCentroids(t, seed, iters = 2)
     }
     // 2. persist the index: cell-partitioned corpus + centroid table
     val indexPath = s"$outDir/index"
-    stage("save_index") {
+    stages("save_index") {
       AnnSearch.saveIvfIndex(t, cent, indexPath)
       ((), spark.read.parquet(s"$indexPath/cells").select("cell").distinct().count())
     }
     // 3. load + search the PERSISTED index (partition-prunable probes)
-    val results = stage("search_indexed") {
-      val r = AnnSearch.ivfSearchIndexed(spark, indexPath, q, k, nprobe).persist()
+    val results = stages("search_indexed") {
+      val r = stages.persist(AnnSearch.ivfSearchIndexed(spark, indexPath, q, k, nprobe))
       r.write.mode("overwrite").parquet(s"$outDir/results")
       (r, r.count())
     }
     // 4. recall@k vs the exact brute-force ranking (same L2 metric)
-    val (recallPct, hitRows) = {
-      val t0 = System.nanoTime()
-      val brute = Knn.knn(q.select(col("q_id").as("vec_id"), col("q_v").as("v")),
-        t.select(col("t_id").as("vec_id"), col("t_v").as("v")), k)
-        .select(col("q_id"), col("t_id"))
-      val hits = brute.join(results.select("q_id", "t_id"),
-        Seq("q_id", "t_id"), "left_semi").count()
-      val total = brute.count()
-      stages += StageResult("recall_vs_exact", hits, (System.nanoTime() - t0) / 1e9)
-      (hits.toDouble / total, total)
-    }
+    val (recallPct, hitRows) = recallVsExact(stages, results,
+      Knn.knn(q.select(col("q_id").as("vec_id"), col("q_v").as("v")),
+        t.select(col("t_id").as("vec_id"), col("t_v").as("v")), k))
 
     val report =
       s"""ann index run report
@@ -89,14 +71,28 @@ object RunAnn {
          |nprobe: $nprobe
          |n_queries: $nQ
          |stages: stage metric sec
-         |${stages.map(st => f"  ${st.name} ${st.metric} ${st.wall}%.3f").mkString("\n")}
+         |${Stages.table(stages.results)}
          |recall_at_$k: ${f"$recallPct%.4f"} ($hitRows exact rows)
          |""".stripMargin
     Files.createDirectories(Paths.get(outDir))
     Files.writeString(Paths.get(s"$outDir/report.txt"), report)
-    spark.catalog.clearCache()
+    stages.release()
     report
   }
+
+  /** The `recall_vs_exact` stage: how many of the exact top-k rows
+    * (`brute`, by q_id and t_id) the search `results` hold, recorded as
+    * the stage's count. Returns (recall, exact rows).
+    */
+  private def recallVsExact(stages: Stages, results: DataFrame,
+      brute: => DataFrame): (Double, Long) =
+    stages("recall_vs_exact") {
+      val truth = brute.select(col("q_id"), col("t_id"))
+      val hits = truth.join(results.select("q_id", "t_id"),
+        Seq("q_id", "t_id"), "left_semi").count()
+      val total = truth.count()
+      ((hits.toDouble / total, total), hits)
+    }
 
   /** Index-MAINTENANCE pass (round 13, VERDICT r12 "What's missing #2"):
     * `appendToIvfIndex` assigns against STORED centroids forever, so
@@ -140,7 +136,7 @@ object RunAnn {
     val retrain = ratio > maxRatio
     var retrainLine = f"cell_balance: max=$mx med=$med%.1f ratio=$ratio%.2f cells=$nCells (threshold $maxRatio%.1f)"
     if (retrain) {
-      val t0 = System.nanoTime()
+      val elapsed = Stages.clock()
       // live rows materialized BEFORE the overwrite (Sinks.compact's
       // no-overwrite-while-reading rule); tombstones are thereby
       // physically applied, so clear them with the rebuild
@@ -165,7 +161,7 @@ object RunAnn {
       val st2 = cells2.groupBy("cell").agg(count(lit(1)).as("n"))
         .agg(max(col("n")).as("mx"), expr("percentile(n, 0.5)").as("med")).head()
       val ratio2 = st2.getLong(0) / math.max(1.0, st2.getDouble(1))
-      retrainLine += f"\nretrained: ratio $ratio%.2f -> $ratio2%.2f in ${(System.nanoTime() - t0) / 1e9}%.1f s"
+      retrainLine += f"\nretrained: ratio $ratio%.2f -> $ratio2%.2f in ${elapsed()}%.1f s"
       graft.core.Ckpt.release(tMat)
       newCent.unpersist(blocking = false)
     } else retrainLine += "\nretrained: false"
@@ -198,41 +194,27 @@ object RunAnn {
     val t = graft.core.Ckpt.truncate(e.filter(col("vec_id") % 10 =!= 0))
     val nQ = q.count()
     val graphPath = s"$outDir/graph"
-    val stages = scala.collection.mutable.ArrayBuffer.empty[StageResult]
-    def stage[A](name: String)(body: => (A, Long)): A = {
-      val t0 = System.nanoTime()
-      val (out, metric) = body
-      stages += StageResult(name, metric, (System.nanoTime() - t0) / 1e9)
-      out
-    }
-    stage("build_graph") {
+    val stages = new Stages
+    stages("build_graph") {
       AnnSearch.saveKnnGraph(t, graphPath, k)
       ((), spark.read.parquet(s"$graphPath/edges").count())
     }
-    val results = stage("search_graph") {
+    val results = stages("search_graph") {
       val (_, edges) = AnnSearch.loadKnnGraph(spark, graphPath)
       val eT = graft.core.Ckpt.truncate(edges.select(col("src"), col("dst")))
-      val r = AnnSearch.graphSearchOf(q,
+      val r = stages.persist(AnnSearch.graphSearchOf(q,
           t.select(col("vec_id").as("t_id"), col("v").as("t_v")),
-          beam, hops, k, edges0 = Some(eT)).persist()
+          beam, hops, k, edges0 = Some(eT)))
       r.write.mode("overwrite").parquet(s"$outDir/graph_results")
       graft.core.Ckpt.release(eT)
       (r, r.count())
     }
-    val (recallPct, hitRows) = {
-      val t0 = System.nanoTime()
-      // the truth set uses the RUNNER's k (round-16 ADVICE): a hardcoded
-      // k=3 truth under k>3 search results inflates recall (k-sized
-      // result vs top-3 truth) and floor-limits it at k/3 under k<3
-      val brute = Knn.knn(q.select(col("q_id").as("vec_id"), col("q_v").as("v")),
-        t, k = k, dist = AnnSearch.cosineDist)
-        .select(col("q_id"), col("t_id"))
-      val hits = brute.join(results.select("q_id", "t_id"),
-        Seq("q_id", "t_id"), "left_semi").count()
-      val total = brute.count()
-      stages += StageResult("recall_vs_exact", hits, (System.nanoTime() - t0) / 1e9)
-      (hits.toDouble / total, total)
-    }
+    // the truth set uses the RUNNER's k (round-16 ADVICE): a hardcoded
+    // k=3 truth under k>3 search results inflates recall (k-sized
+    // result vs top-3 truth) and floor-limits it at k/3 under k<3
+    val (recallPct, hitRows) = recallVsExact(stages, results,
+      Knn.knn(q.select(col("q_id").as("vec_id"), col("q_v").as("v")),
+        t, k = k, dist = AnnSearch.cosineDist))
     graft.core.Ckpt.release(t)
     // approximation honesty (the pqTopK precedent): near-uniform
     // corpora are graph navigation's documented worst case — a k-NN
@@ -248,14 +230,14 @@ object RunAnn {
          |hops: $hops
          |n_queries: $nQ
          |stages: stage metric sec
-         |${stages.map(st => f"  ${st.name} ${st.metric} ${st.wall}%.3f").mkString("\n")}
+         |${Stages.table(stages.results)}
          |recall_at_$k: ${f"$recallPct%.4f"} ($hitRows exact rows)
          |note: recall on near-uniform corpora is the method's documented floor
          |      (SCALE.md round 13's clustered leg is the structure reference)
          |""".stripMargin
     Files.createDirectories(Paths.get(outDir))
     Files.writeString(Paths.get(s"$outDir/graph_run_report.txt"), report)
-    spark.catalog.clearCache()
+    stages.release()
     report
   }
 
@@ -299,7 +281,7 @@ object RunAnn {
     val recall = adjacencyRecall()
     var line = f"adjacency_recall: $recall%.4f (threshold $minRecall%.2f, sample 1/$sampleMod, k=$k)"
     if (recall < minRecall) {
-      val t0 = System.nanoTime()
+      val elapsed = Stages.clock()
       // LIVE nodes (tombstones filtered — the rebuild doubles as the
       // physical retraction pass, the IVF-maintain precedent),
       // materialized BEFORE the overwrite (never overwrite a directory
@@ -312,7 +294,7 @@ object RunAnn {
       AnnSearch.rebuildKnnGraph(nodes, graphPath, k)
       graft.core.Ckpt.release(nodes)
       line += f"\nrebuilt: recall $recall%.4f -> ${adjacencyRecall()}%.4f " +
-        f"in ${(System.nanoTime() - t0) / 1e9}%.1f s"
+        f"in ${elapsed()}%.1f s"
     } else line += "\nrebuilt: false"
     val report =
       s"""knn-graph maintenance report

@@ -2,7 +2,7 @@ package graft.run
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.llm.{Curation, Dedup, TextAnalysis}
@@ -33,30 +33,20 @@ import graft.llm.{Curation, Dedup, TextAnalysis}
   */
 object RunCurate {
 
-  case class StageResult(name: String, survivors: Long, wall: Double)
-
   def run(spark: SparkSession, sfDir: String, outDir: String,
       nearDupThreshold: Double = 0.8): String = {
-    val docs = graft.Tables.documents(spark, sfDir).persist()
+    val stages = new Stages
+    val docs = stages.persist(graft.Tables.documents(spark, sfDir))
     val total = docs.count()
 
-    val stages = scala.collection.mutable.ArrayBuffer.empty[StageResult]
-    def stage(name: String)(body: => DataFrame): DataFrame = {
-      val t0 = System.nanoTime()
-      val out = body.persist()
-      val n = out.count()
-      stages += StageResult(name, n, (System.nanoTime() - t0) / 1e9)
-      out
-    }
-
     // 1. Gopher quality rules (row-local; the cheap filter runs first)
-    val quality = stage("quality_gopher") {
+    val quality = stages.frame("quality_gopher") {
       docs.join(TextAnalysis.qualityGopherDocs(docs)
         .filter(col("keep")).select("doc_id"), "doc_id")
     }
     // 2. exact dedup: keep the lowest doc_id per md5 digest (digests on
     //    the exchange, never payloads)
-    val exact = stage("dedup_exact") {
+    val exact = stages.frame("dedup_exact") {
       quality.join(
         quality.groupBy(md5(col("text")).as("h"))
           .agg(min(col("doc_id")).as("doc_id")).select("doc_id"),
@@ -65,7 +55,7 @@ object RunCurate {
     // 3. near-dedup: LSH candidates → verified pairs → CC clusters →
     //    keep each cluster's min doc_id (the default hot-bucket cap is
     //    ON — cap-then-continue, the production mode)
-    val near = stage("dedup_minhash_lsh") {
+    val near = stages.frame("dedup_minhash_lsh") {
       val pairs = Dedup.minhashLshPairs(spark,
           exact.select(col("doc_id"), col("text")))
         .filter(col("jaccard") >= nearDupThreshold)
@@ -75,12 +65,12 @@ object RunCurate {
       exact.join(losers, Seq("doc_id"), "left_anti")
     }
     // 4. 13-gram decontamination against the eval slice
-    val clean = stage("decontaminate_13") {
+    val clean = stages.frame("decontaminate_13") {
       near.join(Curation.decontaminateDocs(near, gram = 13)
         .select(col("doc_id")), Seq("doc_id"), "left_anti")
     }
     // 5. domain cap: at most DomainCapN docs per source, longest first
-    val capped = stage("domain_cap") {
+    val capped = stages.frame("domain_cap") {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("source").orderBy(col("n_chars").desc, col("doc_id"))
       clean.withColumn("rn", row_number().over(w))
@@ -88,7 +78,7 @@ object RunCurate {
     }
 
     graft.sources.Sinks.writePartitioned(capped, s"$outDir/corpus", Seq("source"))
-    val kept = stages.last.survivors
+    val kept = stages.results.last.survivors
     val report =
       s"""curation run report
          |sfdir: $sfDir
@@ -97,16 +87,11 @@ object RunCurate {
          |docs_out: $kept
          |kept_ratio: ${f"${kept.toDouble / total}%.4f"}
          |funnel: stage survivors dropped sec
-         |${
-        stages.foldLeft((total, List.empty[String])) { case ((prev, acc), st) =>
-          (st.survivors, acc :+
-            f"  ${st.name} ${st.survivors} ${prev - st.survivors} ${st.wall}%.3f")
-        }._2.mkString("\n")
-      }
+         |${Stages.funnel(total, stages.results)}
          |""".stripMargin
     Files.createDirectories(Paths.get(outDir))
     Files.writeString(Paths.get(s"$outDir/report.txt"), report)
-    spark.catalog.clearCache() // release the per-stage persists
+    stages.release()
     report
   }
 

@@ -195,23 +195,21 @@ object RunEmbed {
       steps: Int = 8, walksPerSeed: Int = 4, dim: Int = 16,
       k: Int = 5): String = {
     Files.createDirectories(Paths.get(outDir))
+    val stages = new Stages
     val edges = Graph.custSuppEdges(spark, sfDir)
-    val walks = Graph.randomWalks(edges, steps = steps,
-      walksPerSeed = walksPerSeed).persist()
+    val walks = stages.persist(Graph.randomWalks(edges, steps = steps,
+      walksPerSeed = walksPerSeed))
     val nWalks = walks.select("walk").distinct().count()
     val sentences = walkSentences(walks)
 
-    val t0 = System.nanoTime()
     val w2v = new Word2Vec()
       .setInputCol("sentence").setOutputCol("v")
       .setVectorSize(dim).setMinCount(1).setSeed(13L)
       .setWindowSize(2).setNumPartitions(1)
-    val model = w2v.fit(sentences)
-    val trainSec = (System.nanoTime() - t0) / 1e9
-    val vecs = model.getVectors
+    val (model, trainSec) = Stages.timed(w2v.fit(sentences))
+    val vecs = stages.persist(model.getVectors
       .select(col("word"),
-        org.apache.spark.ml.functions.vector_to_array(col("vector"), "float64").as("vector"))
-      .persist()
+        org.apache.spark.ml.functions.vector_to_array(col("vector"), "float64").as("vector")))
     val vocab = vecs.count()
     vecs.write.mode("overwrite").parquet(s"$outDir/vectors")
 
@@ -244,8 +242,7 @@ object RunEmbed {
          |vectors: $outDir/vectors
          |""".stripMargin
     Files.writeString(Paths.get(s"$outDir/report.txt"), report)
-    walks.unpersist(blocking = false)
-    vecs.unpersist(blocking = false)
+    stages.release()
     report
   }
 

@@ -2,7 +2,7 @@ package graft.run
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.{Ckpt, Distance, Fknn, Metrics}
@@ -55,17 +55,12 @@ object RunFknn {
     val train = e.filter(col("vec_id") % 10 =!= 0)
     val truth = e.select(col("vec_id"), col("label"))
 
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
-
+    val stages = new Stages
     // stage 1 — membership init, materialized by fit (released at end)
-    val (mem, t1) = timed { Fknn.fit(train, cfg.k, cfg.nClasses, dist = dist) }
+    val (mem, t1) = Stages.timed { Fknn.fit(train, cfg.k, cfg.nClasses, dist = dist) }
     // stage 2 — classify through the declared physical version
-    val (pred, t2) = timed {
-      val p = (cfg.version match {
+    val pred = stages.frame("stage2_classify") {
+      cfg.version match {
         case "global" => Fknn.classify(mem, train, queries, cfg.k, dist)
         case "chunked" => Fknn.classifyChunked(mem, train, queries, cfg.k,
           blocks = cfg.blocks, dist = dist)
@@ -73,12 +68,11 @@ object RunFknn {
           blocks = cfg.blocks, dist = dist)
         case other => throw new IllegalArgumentException(
           s"version must be global, chunked or local, got $other")
-      }).persist()
-      p.count()
-      p
+      }
     }
+    val stage2 = stages.results.last
     // metrics — the reference's reported read-outs
-    val (lines, t3) = timed {
+    val (lines, t3) = Stages.timed {
       val acc = Metrics.accuracy(pred, truth).collect()(0).getDouble(0)
       val scores0 = Fknn.classifyScores(mem, train, queries, cfg.k, dist)
         .filter(col("class") === 0)
@@ -95,12 +89,11 @@ object RunFknn {
       (acc, auc, conf, rep)
     }
     val (acc, auc, conf, rep) = lines
-    val nTest = pred.count()
 
     graft.sources.Sinks.writePartitioned(
       pred, s"${cfg.outDir}/predictions", Seq("predicted"))
     Ckpt.release(mem)
-    pred.unpersist(blocking = false)
+    stages.release()
 
     val report =
       s"""fknn run report
@@ -110,9 +103,9 @@ object RunFknn {
          |nClasses: ${cfg.nClasses}
          |distType: ${cfg.distType}
          |blocks: ${cfg.blocks}
-         |n_test: $nTest
+         |n_test: ${stage2.survivors}
          |stage1_membership_sec: ${f"$t1%.3f"}
-         |stage2_classify_sec: ${f"$t2%.3f"}
+         |stage2_classify_sec: ${f"${stage2.wall}%.3f"}
          |metrics_sec: ${f"$t3%.3f"}
          |accuracy: ${f"$acc%.6f"}
          |auc_class0: ${if (auc.isNaN) "undefined" else f"$auc%.6f"}

@@ -60,21 +60,10 @@ import graft.llm.{AnnSearch, Curation, Dedup, TextAnalysis}
   */
 object RunIngest {
 
-  case class StageResult(name: String, survivors: Long, wall: Double)
-
   /** Sig-file count above which an ingest run compacts the LSH index
     * (one listing per run; compaction sizes outputs to 128 MiB files).
     */
   private[run] val CompactFileThreshold = 64
-
-  private def stageIn(buf: scala.collection.mutable.ArrayBuffer[StageResult])(
-      name: String)(body: => DataFrame): DataFrame = {
-    val t0 = System.nanoTime()
-    val out = body.persist()
-    val n = out.count()
-    buf += StageResult(name, n, (System.nanoTime() - t0) / 1e9)
-    out
-  }
 
   /** ONE ingest delta against the standing state already on disk at
     * `outDir` (LSH index + partitioned corpus): the text funnel —
@@ -108,11 +97,9 @@ object RunIngest {
       if (repaired > 0)
         println(s"[ingest] reconciled LSH index: re-appended $repaired doc_ids from delta")
     }
-    val standing = spark.read.parquet(s"$outDir/corpus")
-      .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
-      .persist()
-    val stages = scala.collection.mutable.ArrayBuffer.empty[StageResult]
-    val stage = stageIn(stages) _
+    val stages = new Stages
+    val standing = stages.persist(spark.read.parquet(s"$outDir/corpus")
+      .select(col("doc_id"), col("text"), col("source"), col("n_chars")))
 
     // Stages 0-3 as ONE annotated pass (round 16, guide §1.2 step 1):
     // each of these four gates only FILTERS batch rows by a predicate
@@ -154,29 +141,29 @@ object RunIngest {
               .partitionBy(md5(col("text")))))
         .select(col("doc_id"), col("text"), col("source"), col("n_chars"),
           col("f_id"), col("f_digest"), col("f_quality"), col("f_exact")))
-    val t0 = System.nanoTime()
-    val cnts = annotated.agg(
-      count(lit(1)).as("n_in"),
-      count(when(col("f_id"), 1)).as("n_id"),
-      count(when(col("f_digest"), 1)).as("n_digest"),
-      count(when(col("f_quality"), 1)).as("n_quality"),
-      count(when(col("f_exact"), 1)).as("n_exact")).head()
-    val cntWall = (System.nanoTime() - t0) / 1e9
-    stages += StageResult("batch_in", cnts.getAs[Long]("n_in"), cntWall)
-    stages += StageResult("id_new", cnts.getAs[Long]("n_id"), 0.0)
-    stages += StageResult("digest_new", cnts.getAs[Long]("n_digest"), 0.0)
-    stages += StageResult("quality_gopher", cnts.getAs[Long]("n_quality"), 0.0)
-    stages += StageResult("dedup_exact", cnts.getAs[Long]("n_exact"), 0.0)
+    val cnts = stages("batch_in") {
+      val r = annotated.agg(
+        count(lit(1)).as("n_in"),
+        count(when(col("f_id"), 1)).as("n_id"),
+        count(when(col("f_digest"), 1)).as("n_digest"),
+        count(when(col("f_quality"), 1)).as("n_quality"),
+        count(when(col("f_exact"), 1)).as("n_exact")).head()
+      (r, r.getAs[Long]("n_in"))
+    }
+    stages.record("id_new", cnts.getAs[Long]("n_id"), 0.0)
+    stages.record("digest_new", cnts.getAs[Long]("n_digest"), 0.0)
+    stages.record("quality_gopher", cnts.getAs[Long]("n_quality"), 0.0)
+    stages.record("dedup_exact", cnts.getAs[Long]("n_exact"), 0.0)
     val exact = annotated.filter(col("f_exact"))
       .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
     // 4. near-dedup against the PERSISTED index — the incremental path.
     // The returned pair frame is a local checkpoint (eager-fold inside
     // nearDupsAgainstIndex); captured here and released at the END of
-    // this delta, after the writes (round-15 ADVICE: the stream path's
-    // clearCache clears Dataset caches, not RDD checkpoint blocks, so
-    // un-released it pinned one blockset per micro-batch until GC —
-    // and releasing before the writes is unsafe because the persisted
-    // `near`/`clean` stage frames may recompute through it)
+    // this delta, after the writes (round-15 ADVICE: a checkpoint is an
+    // RDD-level persist that no Dataset unpersist frees, so un-released
+    // it pinned one blockset per micro-batch until GC — and releasing
+    // before the writes is unsafe because the persisted `near`/`clean`
+    // stage frames may recompute through it)
     var nearPairs: DataFrame = null
     // batch signatures built ONCE per delta (round 16): the near-dup
     // pass and the index append both need them; previously each ran its
@@ -184,7 +171,7 @@ object RunIngest {
     // append leg (which runs AFTER the corpus write) reads materialized
     // bytes, not a lineage through the pre-append state.
     var batchSigs: DataFrame = null
-    val near = stage("near_dup_vs_index") {
+    val near = stages.frame("near_dup_vs_index") {
       batchSigs = graft.core.Ckpt.truncate(Dedup.defaultBandSigs(exact))
       nearPairs = Dedup.nearDupsAgainstIndex(spark, indexPath, exact,
         threshold = nearDupThreshold, newSigs = Some(batchSigs))
@@ -195,7 +182,7 @@ object RunIngest {
     //    — the EXPLICIT-eval form, so no batch id residue can ever be
     //    mistaken for the eval set (the decontaminateDocs %10
     //    convention is for the declared rows' residue-safe slices)
-    val clean = stage("decontaminate_13") {
+    val clean = stages.frame("decontaminate_13") {
       val cont = Curation.decontaminateAgainst(
         near.select(col("doc_id"), col("text")),
         standing.filter(col("doc_id") % 10 === 0)
@@ -223,7 +210,7 @@ object RunIngest {
     // an EMPTY frame, losing the only copy of the un-indexed survivors.
     // With the guard a replay writes nothing, so the preserved delta
     // can still be re-fed to `Dedup.appendToLshIndex` by the operator.
-    if (stages.find(_.name == "id_new").exists(_.survivors > 0)) {
+    if (cnts.getAs[Long]("n_id") > 0) {
       clean.write.mode("overwrite").parquet(s"$outDir/delta")
       val delta = spark.read.parquet(s"$outDir/delta")
       delta.write.mode("append").partitionBy("source").parquet(s"$outDir/corpus")
@@ -234,7 +221,9 @@ object RunIngest {
       Dedup.appendToLshIndex(delta, indexPath,
         sigs = Some(batchSigs.join(delta.select("doc_id"), Seq("doc_id"), "left_semi")))
     }
-    standing.unpersist(blocking = false)
+    // the stage frames (`standing`, `near`, `clean`) are dead once the
+    // delta is on disk
+    stages.release()
     if (nearPairs != null) graft.core.Ckpt.release(nearPairs)
     if (batchSigs != null) graft.core.Ckpt.release(batchSigs)
     // the annotated prefix-funnel checkpoint is dead once the counts
@@ -242,7 +231,7 @@ object RunIngest {
     // pair checkpoint above (one leaked blockset per micro-batch
     // otherwise, the round-15 ADVICE mechanism)
     graft.core.Ckpt.release(annotated)
-    (stages.toSeq, stages.last.survivors)
+    (stages.results, stages.results.last.survivors)
   }
 
   def run(spark: SparkSession, sfDir: String, outDir: String,
@@ -252,8 +241,10 @@ object RunIngest {
     Files.createDirectories(Paths.get(outDir))
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
-    val corpus = docs.filter(col("doc_id") % batchMod =!= batchRem).persist()
-    val batch = docs.filter(col("doc_id") % batchMod === batchRem).persist()
+    // the vec funnel's recorder; it also owns this run's input persists
+    val vStages = new Stages
+    val corpus = vStages.persist(docs.filter(col("doc_id") % batchMod =!= batchRem))
+    val batch = vStages.persist(docs.filter(col("doc_id") % batchMod === batchRem))
     // standing state: a recurring crawl REUSES the index + corpus its
     // previous run left in outDir (that is what makes the loop
     // incremental — run N's batch near-dedups against every survivor
@@ -284,7 +275,6 @@ object RunIngest {
       Dedup.compactLshIndex(spark, indexPath)
       println(s"[ingest] compacted LSH index: $nSigFiles sig files over threshold $CompactFileThreshold")
     }
-    val vStages = scala.collection.mutable.ArrayBuffer.empty[StageResult]
 
     // ---- embedding leg (round 12, VERDICT r11 #3): the vector side of
     // the same recurring loop. The standing state is the persisted IVF
@@ -300,8 +290,8 @@ object RunIngest {
     val vecsAll = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id").as("t_id"),
         graft.core.Distance.asDouble(col("embedding")).as("t_v"))
-    val vCorpus = vecsAll.filter(col("t_id") % batchMod =!= batchRem).persist()
-    val vBatch = vecsAll.filter(col("t_id") % batchMod === batchRem).persist()
+    val vCorpus = vStages.persist(vecsAll.filter(col("t_id") % batchMod =!= batchRem))
+    val vBatch = vStages.persist(vecsAll.filter(col("t_id") % batchMod === batchRem))
     val ivfPath = s"$outDir/ivf"
     // vec-leg entry reconcile — the IVF twin of the text leg's
     if (Files.exists(Paths.get(s"$outDir/delta_vec")) &&
@@ -317,13 +307,12 @@ object RunIngest {
         .select(col("t_id").as("c_id"), col("t_v").as("c_v"))
       AnnSearch.saveIvfIndex(vCorpus, cent, ivfPath)
     }
-    val vstage = stageIn(vStages) _
-    val vecIn = vstage("vec_in")(vBatch)
-    val vecNew = vstage("vec_id_new") {
+    val vecIn = vStages.frame("vec_in")(vBatch)
+    val vecNew = vStages.frame("vec_id_new") {
       vecIn.join(spark.read.parquet(s"$ivfPath/cells").select(col("t_id")),
         Seq("t_id"), "left_anti")
     }
-    val vecClean = vstage("vec_sem_dup_vs_index") {
+    val vecClean = vStages.frame("vec_sem_dup_vs_index") {
       val dups = AnnSearch.semanticDupsAgainstIndex(spark, ivfPath, vecNew,
           eps = semanticEps, nprobe = 2)
         .select(col("new_id").as("t_id")).distinct()
@@ -338,19 +327,13 @@ object RunIngest {
     // the vec leg's crash-recovery artifact — with an empty frame. A
     // crash between the delta_vec write and the IVF append is repaired
     // on the next run's entry reconcile below.
-    if (vStages.find(_.name == "vec_id_new").exists(_.survivors > 0)) {
+    if (vStages.results.find(_.name == "vec_id_new").exists(_.survivors > 0)) {
       vecClean.write.mode("overwrite").parquet(s"$outDir/delta_vec")
       AnnSearch.appendToIvfIndex(spark,
         spark.read.parquet(s"$outDir/delta_vec"), ivfPath, checkIds = false)
     }
-    val vecKept = vStages.last.survivors
-
-    def funnel(buf: Seq[StageResult]): String =
-      buf.foldLeft((buf.head.survivors, List.empty[String])) {
-        case ((prev, acc), st) =>
-          (st.survivors, acc :+
-            f"  ${st.name} ${st.survivors} ${prev - st.survivors} ${st.wall}%.3f")
-      }._2.mkString("\n")
+    val vecKept = vStages.results.last.survivors
+    vStages.release()
     val report =
       s"""ingest run report (incremental)
          |sfdir: $sfDir
@@ -361,17 +344,16 @@ object RunIngest {
          |batch_kept: $kept
          |kept_ratio: ${f"${kept.toDouble / math.max(1, stages.head.survivors)}%.4f"}
          |funnel: stage survivors dropped sec
-         |${funnel(stages.toSeq)}
+         |${Stages.funnel(stages.head.survivors, stages)}
          |index_appended: $kept docs
          |semantic_eps: $semanticEps
-         |vec_in: ${vStages.head.survivors}
+         |vec_in: ${vStages.results.head.survivors}
          |vec_kept: $vecKept
          |vec funnel: stage survivors dropped sec
-         |${funnel(vStages.toSeq)}
+         |${Stages.funnel(vStages.results.head.survivors, vStages.results)}
          |ivf_appended: $vecKept vecs
          |""".stripMargin
     Files.writeString(Paths.get(s"$outDir/report.txt"), report)
-    spark.catalog.clearCache() // release the per-stage persists
     report
   }
 
@@ -512,14 +494,14 @@ object RunIngest {
       f"threshold $minRecall%.2f, sample 1/$sampleMod, cap $maxBandBucket, " +
       s"banding ${nh}x$rb)"
     if (recall < minRecall) {
-      val t0 = System.nanoTime()
+      val elapsed = Stages.clock()
       val (nDropped, nHot) =
         Dedup.collapseHotBuckets(spark, indexPath, maxBandBucket)
       val (recall2, nTruth2, hits2) =
         Dedup.lshBandedRecall(spark, indexPath, sampleMod, maxBandBucket)
       line += f"\ncollapsed: $nHot hot buckets, $nDropped redundant docs retracted+compacted, " +
         f"recall $recall%.4f -> $recall2%.4f ($hits2 of $nTruth2 live truth pairs) " +
-        f"in ${(System.nanoTime() - t0) / 1e9}%.1f s"
+        f"in ${elapsed()}%.1f s"
     } else line += "\ncollapsed: false"
     val report =
       s"""lsh index maintenance report

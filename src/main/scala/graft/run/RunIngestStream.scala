@@ -72,18 +72,18 @@ object RunIngestStream {
     * production runner's artifact).
     */
   def runWithStages(spark: SparkSession, streamDir: String, outDir: String,
-      nearDupThreshold: Double = 0.95): Seq[(Long, Seq[RunIngest.StageResult], Long)] =
+      nearDupThreshold: Double = 0.95): Seq[(Long, Seq[StageResult], Long)] =
     runCollect(spark, streamDir, outDir, nearDupThreshold, report = false)._2
 
   private def runCollect(spark: SparkSession, streamDir: String, outDir: String,
       nearDupThreshold: Double, report: Boolean = true):
-      (String, Seq[(Long, Seq[RunIngest.StageResult], Long)]) = {
+      (String, Seq[(Long, Seq[StageResult], Long)]) = {
     require(Files.exists(Paths.get(s"$outDir/index/sigs")) &&
       Files.exists(Paths.get(s"$outDir/corpus")),
       s"$outDir holds no standing state — bootstrap with RunIngest first")
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val batches = new java.util.concurrent.ConcurrentLinkedQueue[
-      (Long, Seq[RunIngest.StageResult], Long)]()
+      (Long, Seq[StageResult], Long)]()
     val q = spark.readStream
       .schema(DocSchema)
       .parquet(streamDir)
@@ -100,11 +100,8 @@ object RunIngestStream {
             .map(st => s"${st.name}=${st.survivors}").mkString(" ") +
             s" appended=$kept")
           batches.add((id, stages, kept))
-          // per-batch cache hygiene: ingestDelta persists its stage
-          // frames; this is the job's only query, so a full clear is
-          // safe and keeps long streams from accumulating blocks
-          spark.catalog.clearCache()
         }
+        () // foreachBatch's Scala overload takes a Unit body
       }
       .start()
     q.awaitTermination() // AvailableNow stops when the directory drains
@@ -340,9 +337,10 @@ object RunIngestStream {
         if (!b.isEmpty) {
           val vecs = b.select(col("vec_id").as("t_id"),
             graft.core.Distance.asDouble(col("embedding")).as("t_v"))
-          val fresh = vecs.join(
+          val owned = new Stages
+          val fresh = owned.persist(vecs.join(
             spark.read.parquet(s"$ivfPath/cells").select(col("t_id")),
-            Seq("t_id"), "left_anti").persist()
+            Seq("t_id"), "left_anti"))
           val nNew = fresh.count()
           if (nNew > 0) {
             // batch cell probes computed ONCE (round 16, the text leg's
@@ -377,7 +375,7 @@ object RunIngestStream {
             lines.add(s"micro-batch $id: vec_in=$in vec_id_new=0 appended=0 (replay/no-op)")
             batches.add((id, in, 0L, 0L))
           }
-          spark.catalog.clearCache()
+          owned.release()
         }
       }
       .start()
@@ -582,8 +580,8 @@ object RunIngestStream {
           lines.add(s"micro-batch $id: " +
             report.linesIterator.filter(_.contains("_retracted:"))
               .mkString(" ").trim)
-          spark.catalog.clearCache()
         }
+        ()
       }
       .start()
     q.awaitTermination()

@@ -73,7 +73,7 @@ object RunMonitor {
     Files.createDirectories(Paths.get(outDir))
     // start all five CONCURRENTLY (the one multi-query job a monitoring
     // deployment runs), then drain and stop each
-    val t0 = System.nanoTime()
+    val elapsed = Stages.clock()
     val started = monitors(source, cusumBaselineE6).map { case (name, df) =>
       val q = df.writeStream
         .queryName(s"monitor_$name")
@@ -95,7 +95,7 @@ object RunMonitor {
         if (Files.exists(Paths.get(s"$outDir/$name")))
           spark.read.parquet(s"$outDir/$name").count()
         else 0L
-      MonitorResult(name, rows, batches, (System.nanoTime() - t0) / 1e9)
+      MonitorResult(name, rows, batches, elapsed())
     }
 
     // alert summary: what the rotation reads before any dashboard —

@@ -33,8 +33,6 @@ import graft.rel.Queries
   */
 object RunProfile {
 
-  case class SectionResult(name: String, rows: Long, wall: Double)
-
   def run(spark: SparkSession, sfDir: String, outDir: String): String = {
     Files.createDirectories(Paths.get(outDir))
     val sections = Seq[(String, (SparkSession, String) => DataFrame)](
@@ -48,13 +46,7 @@ object RunProfile {
       "pii_stats" -> graft.llm.Curation.piiStats,
       "pii_pseudonymize" -> graft.llm.Curation.piiPseudonymize,
       "agg_benford" -> Queries.aggBenford)
-    val results = sections.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      val rows = spark.read.parquet(s"$outDir/$name").count()
-      SectionResult(name, rows, (System.nanoTime() - t0) / 1e9)
-    }
+    val results = Stages.sinkSections(spark, sfDir, outDir, sections)
 
     def sunk(name: String): DataFrame = spark.read.parquet(s"$outDir/$name")
     // headline numbers a review meeting reads first — each derived from
@@ -84,7 +76,7 @@ object RunProfile {
     val report =
       s"""data profile report
          |sections: name rows sec
-         |${results.map(r => f"  ${r.name} ${r.rows} ${r.wall}%.3f").mkString("\n")}
+         |${Stages.table(results)}
          |constraint_violations: $violations
          |failing_constraints: ${if (failing.isEmpty) "none" else failing.mkString(",")}
          |k_anonymity: ${kMin.mkString(" ")}

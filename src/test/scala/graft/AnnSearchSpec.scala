@@ -204,18 +204,9 @@ class AnnSearchSpec extends SparkSpecBase {
     } finally r.unpersist()
   }
 
-  test("chunked PQ ≡ unchunked, lazy and eager modes alike") {
+  test("chunked PQ ≡ unchunked") {
     val whole = collectSet(AnnSearch.pqTopK(spark, sfDir))
     assert(collectSet(AnnSearch.pqChunkedTopK(spark, sfDir)) === whole)
-    val e = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), graft.core.Distance.asDouble(col("embedding")).as("v"))
-    val eager = AnnSearch.pqSearchChunked(
-      q = e.filter(col("vec_id") < 20).select(col("vec_id").as("q_id"), col("v")),
-      t = e.filter(col("vec_id") >= 20).select(col("vec_id").as("t_id"), col("v")),
-      cb = e.filter(col("vec_id") >= 20 && col("vec_id") < 36)
-        .select((col("vec_id") - 20).as("j"), col("v")),
-      m = 4, k = 3, blocks = 4, eager = true)
-    assert(collectSet(eager) === whole)
   }
 
   test("embedding_quantize: reconstruction error within the sqrt(dim)·scale/2 bound") {

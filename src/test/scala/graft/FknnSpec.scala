@@ -82,10 +82,6 @@ class FknnSpec extends SparkSpecBase {
     val a = collectSet(Fknn.membershipInit(train, 5, 10))
     val b = collectSet(Fknn.membershipInitChunked(train, 5, 10, blocks = 4))
     assert(a === b)
-    // eager mode (one job per block — the true sequential numIterations
-    // memory bound) must be output-invisible too
-    assert(collectSet(Fknn.membershipInitChunked(train, 5, 10, blocks = 4,
-      eager = true)) === a)
   }
 
   test("chunked classify ≡ unchunked for blocks=1 and blocks=3 (stage-2 numIterations)") {
@@ -98,8 +94,6 @@ class FknnSpec extends SparkSpecBase {
       val global = collectSet(Fknn.classify(mem, train, queries, 5))
       assert(collectSet(Fknn.classifyChunked(mem, train, queries, 5, blocks = 1)) === global)
       assert(collectSet(Fknn.classifyChunked(mem, train, queries, 5, blocks = 3)) === global)
-      assert(collectSet(Fknn.classifyChunked(mem, train, queries, 5, blocks = 3,
-        eager = true)) === global)
       assert(global.nonEmpty)
     } finally mem.unpersist()
   }
