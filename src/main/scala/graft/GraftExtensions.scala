@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{FusedDot, FusedL1, FusedL2}
-import graft.plans.GroupedTopKRewrite
+import graft.plans.{GroupedTopKRewrite, KnnBlockStrategy}
 
 /** Session extension entry point: wires the engine's custom Catalyst
   * pieces into any SparkSession via
@@ -18,7 +18,10 @@ import graft.plans.GroupedTopKRewrite
   *    pure-SQL users get the codegen'd loops:
   *    `SELECT fused_l2(a, b), fused_l1(a, b), fused_dot(a, b)`
   *  - the grouped-top-k optimizer rule (window row_number pattern →
-  *    bounded-heap aggregate, `plans.GroupedTopKRewrite`).
+  *    bounded-heap aggregate, `plans.GroupedTopKRewrite`);
+  *  - the planner strategy of the block kNN operator
+  *    (`plans.KnnBlockStrategy`), which `graft.core.Knn` otherwise adds
+  *    to a session on first use.
   *
   * The declared driver-contract queries do NOT depend on this class (the
   * driver owns its session); it is the packaging a library user installs.
@@ -35,5 +38,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(fn("fused_l1", args => FusedL1(args(0), args(1))))
     ext.injectFunction(fn("fused_dot", args => FusedDot(args(0), args(1))))
     ext.injectOptimizerRule(_ => GroupedTopKRewrite)
+    ext.injectPlannerStrategy(_ => KnnBlockStrategy)
   }
 }

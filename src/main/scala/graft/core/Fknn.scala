@@ -24,13 +24,16 @@ import org.apache.spark.sql.functions._
   * every stage-2 caller reads that table (`membershipInit` and
   * `membershipInitChunked` stay lazy plans).
   *
-  * Everything is one declarative DataFrame pipeline: join + bounded-heap
-  * top-k + hash aggregations. No driver-side collect anywhere. Data
-  * movement at cluster scale: the (small) query-block broadcast in stage 2
-  * and the k-rows-per-query top-k shuffle — mirroring the reference's
-  * broadcast + reduceByKey. The stage-1 self-join deliberately carries NO
-  * broadcast hint (the "query" side there is the whole train set); at
-  * sizes beyond one broadcast, use `membershipInitChunked`.
+  * Both stages find neighbours through `Knn.knn`'s kNN-IS kernel: the
+  * block operator (`graft.plans.KnnBlock`) keeps one heap per query over
+  * each train partition and emits k candidates per query, and the grouped
+  * top-k merges them; the votes are hash aggregations. No driver-side
+  * collect anywhere. Data movement at cluster scale: the query-block
+  * broadcast and the k-rows-per-query-per-partition merge shuffle —
+  * mirroring the reference's broadcast + reduceByKey. The stage-1
+  * self-search deliberately carries NO broadcast hint (the "query" side
+  * there is the whole train set); at sizes beyond one broadcast, use
+  * `membershipInitChunked`.
   *
   * Cross-engine determinism note (gate invariant): neighbor ranking and
   * the argmax order on unrounded doubles. This is safe because the fused
@@ -46,7 +49,7 @@ object Fknn {
   /** The distance metric type — the reference CLI's `distType` option
     * [LINEAGE]: "l2" (Euclidean, the default everywhere) or "l1"
     * (Manhattan). Each Fknn entry point threads it through to the
-    * shared `Knn.pairwise` kernel.
+    * shared `Knn.knn` kernel.
     */
   type Dist = (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
     org.apache.spark.sql.Column
@@ -80,10 +83,9 @@ object Fknn {
   def membershipInit(train: DataFrame, k: Int, nClasses: Int,
       dist: Dist = graft.functions.ArrayDistance.l2): DataFrame = {
     // Self-kNN on train (self-pair excluded). No broadcast hint: the query
-    // side IS the train set — Catalyst size-gates the join strategy.
-    val pairs = Knn.pairwise(train, train, dist = dist, hintBroadcastQ = false)
-      .filter(col("q_id") =!= col("t_id"))
-    membershipFromNn(Knn.topK(pairs, k), train, k, nClasses)
+    // side IS the train set — its size estimate decides the placement.
+    val nn = Knn.search(train, train, k, dist = dist, excludeSelf = true)
+    membershipFromNn(nn, train, k, nClasses)
   }
 
   /** Stage 1 with the query side chunked into `blocks` id-range blocks,
@@ -96,10 +98,8 @@ object Fknn {
       dist: Dist = graft.functions.ArrayDistance.l2): DataFrame = {
     val nb = resolveBlocks(blocks, train)
     val nn = (0 until nb).map { b =>
-      val qBlock = train.filter(col("vec_id") % nb === b)
-      val pairs = Knn.pairwise(qBlock, train, dist = dist, hintBroadcastQ = true)
-        .filter(col("q_id") =!= col("t_id"))
-      Knn.topK(pairs, k)
+      Knn.search(train.filter(col("vec_id") % nb === b), train, k, dist = dist,
+        hintBroadcastQ = true, excludeSelf = true)
     }.reduce(_ unionAll _)
     membershipFromNn(nn, train, k, nClasses)
   }

@@ -6,62 +6,34 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{ArrayDistance, TopKAgg}
 
-/** The distributed-kNN kernel, relationally.
+/** The distributed-kNN kernel.
   *
   * The reference (kNN-IS design, SURVEY.md §2.1 [LINEAGE]) broadcasts test
-  * chunks against cached train partitions, computes local k-nearest in
-  * mapPartitions, and merges candidate lists in reduceByKey. The Spark-first
-  * decomposition of the same dataflow:
+  * chunks against cached train partitions, computes the local k-nearest
+  * per partition in a tight loop, and merges the candidate lists in
+  * reduceByKey. `knn` plans the same dataflow:
   *
-  *   queries crossJoin train                (broadcast when genuinely small)
-  *   + fused distance expression            (= the per-pair hot loop)
-  *   + bounded-heap grouped top-k           (= local top-k + merge-k)
+  *   KnnBlock           (per train partition: k candidates per query,
+  *                       from one heap per query over a flat query block)
+  *   + grouped top-k    (`TopKAgg`: merge the k-row lists per query)
+  *
+  * `graft.plans.KnnBlock` is the block operator. It is used when the
+  * distance is `ArrayDistance.l2` or `l1` over the two vector columns,
+  * with BIGINT ids; any other distance (cosine, the HOF `Distance.*`, a
+  * user column) runs as `topK(pairwise(...))`, one row per pair.
   *
   * Physical placement: when the query side carries an explicit
-  * `broadcast()` hint (a small query block — the kNN-IS chunk analogue),
-  * Catalyst picks BroadcastNestedLoopJoin, exactly the reference's
-  * placement. WITHOUT the hint (e.g. the train self-join in
-  * `Fknn.membershipInit`, where the "query" side is ~the whole dataset),
-  * Catalyst/AQE size-gates the decision itself — small inputs still
-  * broadcast, large ones fall back to a partitioned cartesian, and the
-  * per-query cost is bounded by `TopKAgg`'s map-side combine. For query
-  * sets too big for any single broadcast, chunk by id-range
-  * (`Fknn.membershipInitChunked`, the reference's `numIterations`).
+  * `broadcast()` hint (a small query block — the kNN-IS chunk analogue)
+  * it is broadcast, exactly the reference's placement. WITHOUT the hint
+  * (e.g. the train self-search in `Fknn.membershipInit`, where the
+  * "query" side is ~the whole dataset) the size estimate decides: small
+  * inputs still broadcast, large ones run per (query partition, train
+  * partition) pair. For query sets too big for any single broadcast,
+  * chunk by id-range (`Fknn.membershipInitChunked`, the reference's
+  * `numIterations`).
   */
 object Knn {
 
-  /** All query×train pairs with distance.
-    * Output columns: (q_id, t_id, dist).
-    * `q`/`t` must have columns (idCol, vecCol) with vecCol ARRAY<DOUBLE>.
-    *
-    * @param hintBroadcastQ force-broadcast the query side. Default FALSE
-    *   (round-5 flip): only call sites whose query block is known-small BY
-    *   CONSTRUCTION (a kNN-IS per-block chunk, a literal-bounded filter)
-    *   opt in. Everything else — including "looks small at this SF" splits
-    *   like `vec_id % 10 == 0`, which are corpus-proportional — leaves the
-    *   decision to Catalyst/AQE size gating. A forced broadcast of a
-    *   corpus-proportional side is a guaranteed executor OOM at 100×.
-    */
-  /** Small-file inputs (one parquet footer) arrive as 1 scan partition; a
-    * cross join streamed over 1 partition runs on 1 core no matter how many
-    * the cluster has. Re-spread only when below the session's parallelism —
-    * at real scale inputs already have ≥ that many partitions and this is a
-    * no-op (no shuffle added).
-    *
-    * The split-count estimate is LOGICAL-stats-based (sizeInBytes /
-    * maxPartitionBytes ≈ the file-source split count): touching `df.rdd`
-    * here would force a physical plan outside AQE on every call — this
-    * keeps AQE the sole owner of the physical plan. Two cases the size
-    * estimate cannot see:
-    *  - an EXPLICIT `coalesce(n)`/`repartition(n)` with small n in the
-    *    caller's lineage squeezes a big frame onto few cores while the
-    *    stats still say "big" — those are logical nodes, so they ARE
-    *    detectable, and we re-spread when one caps below target;
-    *  - physically unsplittable opaque inputs (RDD-backed frames,
-    *    non-splittable codecs) are invisible at the logical layer —
-    *    out of contract; the engine's inputs are splittable file
-    *    sources (parquet throughout).
-    */
   /** True when an explicit low-count `coalesce`/`repartition` in the
     * lineage still governs the frame's parallelism: nothing between it
     * and the root re-shuffles. Descent stops at nodes whose execution
@@ -82,6 +54,26 @@ object Knn {
     }
   }
 
+  /** Small-file inputs (one parquet footer) arrive as 1 scan partition; a
+    * cross join streamed over 1 partition runs on 1 core no matter how many
+    * the cluster has. Re-spread only when below the session's parallelism —
+    * at real scale inputs already have ≥ that many partitions and this is a
+    * no-op (no shuffle added).
+    *
+    * The split-count estimate is LOGICAL-stats-based (sizeInBytes /
+    * maxPartitionBytes ≈ the file-source split count): touching `df.rdd`
+    * here would force a physical plan outside AQE on every call — this
+    * keeps AQE the sole owner of the physical plan. Two cases the size
+    * estimate cannot see:
+    *  - an EXPLICIT `coalesce(n)`/`repartition(n)` with small n in the
+    *    caller's lineage squeezes a big frame onto few cores while the
+    *    stats still say "big" — those are logical nodes, so they ARE
+    *    detectable, and we re-spread when one caps below target;
+    *  - physically unsplittable opaque inputs (RDD-backed frames,
+    *    non-splittable codecs) are invisible at the logical layer —
+    *    out of contract; the engine's inputs are splittable file
+    *    sources (parquet throughout).
+    */
   private[graft] def ensureParallelism(df: DataFrame): DataFrame = {
     val sess = df.sparkSession
     val target = sess.sparkContext.defaultParallelism
@@ -91,6 +83,18 @@ object Knn {
     if (cappedBelowTarget(plan, target) || estParts < target) df.repartition(target) else df
   }
 
+  /** All query×train pairs with distance.
+    * Output columns: (q_id, t_id, dist).
+    * `q`/`t` must have columns (idCol, vecCol) with vecCol ARRAY<DOUBLE>.
+    *
+    * @param hintBroadcastQ force-broadcast the query side. Default FALSE
+    *   (round-5 flip): only call sites whose query block is known-small BY
+    *   CONSTRUCTION (a kNN-IS per-block chunk, a literal-bounded filter)
+    *   opt in. Everything else — including "looks small at this SF" splits
+    *   like `vec_id % 10 == 0`, which are corpus-proportional — leaves the
+    *   decision to Catalyst/AQE size gating. A forced broadcast of a
+    *   corpus-proportional side is a guaranteed executor OOM at 100×.
+    */
   def pairwise(
       q: DataFrame,
       t: DataFrame,
@@ -107,7 +111,8 @@ object Knn {
   }
 
   /** Keep the k nearest t_id per q_id — bounded-heap aggregate (partial
-    * top-k before shuffle; the scale path). Output (q_id, t_id, dist, rn).
+    * top-k before shuffle; the merge step of `knn`). Output
+    * (q_id, t_id, dist, rn).
     */
   def topK(pairs: DataFrame, k: Int): DataFrame = TopKAgg.knn(pairs, k)
 
@@ -127,7 +132,10 @@ object Knn {
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
   }
 
-  /** k nearest train rows per query row: (q_id, t_id, dist, rn). */
+  /** k nearest train rows per query row: (q_id, t_id, dist, rn), ranked
+    * by (dist, t_id). Rows and distances equal `topK(pairwise(...))`
+    * (KnnBlockSpec pins it).
+    */
   def knn(
       q: DataFrame,
       t: DataFrame,
@@ -136,5 +144,63 @@ object Knn {
       vecCol: String = "v",
       dist: (Column, Column) => Column = ArrayDistance.l2,
       hintBroadcastQ: Boolean = false): DataFrame =
-    topK(pairwise(q, t, idCol, vecCol, dist, hintBroadcastQ), k)
+    search(q, t, k, idCol, vecCol, dist, hintBroadcastQ, excludeSelf = false)
+
+  /** `knn`, with each query's own row (q_id = t_id) left out of its
+    * candidates when `excludeSelf`: stage 1's search of the train set
+    * against itself. */
+  private[graft] def search(
+      q: DataFrame,
+      t: DataFrame,
+      k: Int,
+      idCol: String = "vec_id",
+      vecCol: String = "v",
+      dist: (Column, Column) => Column = ArrayDistance.l2,
+      hintBroadcastQ: Boolean = false,
+      excludeSelf: Boolean): DataFrame = {
+    val qr = q.select(col(idCol).as("q_id"), col(vecCol).as("q_v"))
+    val tr = ensureParallelism(t.select(col(idCol).as("t_id"), col(vecCol).as("t_v")))
+    block(qr, tr, dist, k, excludeSelf, hintBroadcastQ) match {
+      case Some(candidates) => topK(candidates, k)
+      case None =>
+        val pairs = pairwise(q, t, idCol, vecCol, dist, hintBroadcastQ)
+        topK(if (excludeSelf) pairs.filter(col("q_id") =!= col("t_id")) else pairs, k)
+    }
+  }
+
+  /** The `KnnBlock` candidate frame (q_id, t_id, dist) of (q_id, q_v) ×
+    * (t_id, t_v), when the analyzed `dist` is the fused l2 or l1 of the
+    * two vector columns and the ids are BIGINT; None otherwise.
+    */
+  private def block(qr: DataFrame, tr: DataFrame, dist: (Column, Column) => Column, k: Int,
+      excludeSelf: Boolean, hintBroadcastQ: Boolean): Option[DataFrame] = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference}
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, Project}
+    import org.apache.spark.sql.graftx.PlanBridge
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    import graft.functions.{FusedL1, FusedL2}
+    import graft.plans.{KnnBlock, KnnBlockStrategy}
+    // analyzed as a cross join, so a self-search's two sides get distinct
+    // attribute ids
+    qr.crossJoin(tr).select(dist(col("q_v"), col("t_v")).as("dist"))
+      .queryExecution.analyzed match {
+      case Project(Seq(Alias(d, _)), j: Join) =>
+        val Seq(qId, qv) = j.left.output
+        val Seq(tId, tv) = j.right.output
+        def over(a: Attribute, b: Attribute) = a.exprId == qv.exprId && b.exprId == tv.exprId
+        val l1 = d match {
+          case FusedL2(a: Attribute, b: Attribute) if over(a, b) => Some(false)
+          case FusedL1(a: Attribute, b: Attribute) if over(a, b) => Some(true)
+          case _ => None
+        }
+        l1.filter(_ => qId.dataType == LongType && tId.dataType == LongType).map { isL1 =>
+          val spark = qr.sparkSession
+          KnnBlockStrategy.install(spark)
+          PlanBridge.frame(spark, KnnBlock(j.left, j.right, qId, qv, tId, tv,
+            AttributeReference("dist", DoubleType, nullable = false)(),
+            isL1, k, excludeSelf, hintBroadcastQ))
+        }
+      case _ => None
+    }
+  }
 }

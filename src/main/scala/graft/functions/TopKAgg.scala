@@ -8,12 +8,15 @@ import org.apache.spark.sql.graftx.ColumnBridge
 
 /** Grouped top-k as a bounded-heap aggregate.
   *
-  * This is the Spark-first form of the reference's kNN-IS merge step
-  * (SURVEY.md §2.1 [LINEAGE]): each map task keeps only the k best
-  * candidates per query (partial aggregation / map-side combine), and the
-  * shuffle then moves at most k rows per (query, partition) instead of the
-  * full O(|Q|·|T|) pair stream — the `reduceByKey(mergeKSmallest)` of the
-  * reference, planned as a regular two-phase aggregate.
+  * This is the reference's kNN-IS merge step (SURVEY.md §2.1 [LINEAGE]),
+  * the `reduceByKey(mergeKSmallest)`, planned as a regular two-phase
+  * aggregate. In `Knn.knn` the per-pair work happens before it, in the
+  * block operator (`graft.plans.KnnBlock`), which hands it at most k
+  * candidates per query per train partition; this aggregate merges those
+  * lists into the global k. Over a plain pair stream (`Knn.topK` on
+  * `Knn.pairwise`, other distances) its map-side combine keeps the k best
+  * per query per task, so the shuffle still moves at most k rows per
+  * (query, partition).
   *
   * Versus the window `row_number` formulation (`Knn.topKWindow`): the
   * window must shuffle and fully sort every pair; this aggregator shuffles

@@ -1610,7 +1610,9 @@ object AnnSearch {
       .withColumn("rn", row_number().over(wBeam))
       .filter(col("rn") === 1)
       .select(col("q_id"), col("t_id"), col("dist")))
-    val fallback = q.join(inBucket.select(col("q_id")), Seq("q_id"), "left_anti")
+    // the anti join's left side cannot be its build side, so `qT` goes
+    // there unhinted; the hinted `q` is kept for joins that can build it
+    val fallback = qT.join(inBucket.select(col("q_id")), Seq("q_id"), "left_anti")
       .crossJoin(broadcast(t.agg(min(col("t_id")).as("t_id"))))
       .join(t, "t_id")
       .select(col("q_id"), col("t_id"),

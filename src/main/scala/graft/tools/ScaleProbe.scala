@@ -8,6 +8,7 @@ import graft.core.Fknn
   * table (written to /tmp) to check the O(N²) pair stage scales linearly
   * in pairs with the bounded-heap top-k (no driver collect, no full-sort).
   * usage: tools/run.sh graft.tools.ScaleProbe [nRows] [dim]
+  * (the table goes under `java.io.tmpdir`; set it with -Djava.io.tmpdir)
   *
   * The per-layer split of the kernel (forced distance scan vs top-k) is
   * perfbench's `distance.scan_s` / `topk.self_s`, not timed here: a bare
@@ -23,7 +24,7 @@ object ScaleProbe {
     // (the 4-8× regression this probe exists to measure the absence of)
     val spark = graft.Session()
 
-    val path = s"/tmp/scale_emb_${n}_$dim"
+    val path = s"${System.getProperty("java.io.tmpdir")}/scale_emb_${n}_$dim"
     // deterministic synthetic vectors: hash-seeded, no RNG state
     spark.range(n)
       .select(
@@ -51,20 +52,22 @@ object ScaleProbe {
     println(f"[scale] n=$n dim=$dim selfPairs=$pairs membership=$memRows rows in $tMem%.1f s " +
       f"(${pairs / tMem / 1e6}%.1f Mpairs/s), classify=$predRows rows in $tCls%.1f s")
 
-    // crisp-kNN declared-split path (round-5: no forced broadcast — AQE
-    // owns the placement). The probe reports the physical join AQE
-    // picked so the size gate is DOCUMENTED flipping: a small query
-    // side still broadcasts (the fast plan), one past the threshold
-    // goes partitioned-cartesian + bounded-heap — the shape that
-    // survives a corpus-proportional query side at 100 TB instead of
-    // OOMing an executor on a forced build.
+    // crisp-kNN declared-split path (round-5: no forced broadcast — the
+    // size estimate owns the placement). The probe reports the placement
+    // the block operator got, so the size gate is DOCUMENTED flipping: a
+    // small query side still broadcasts (the fast plan), one past the
+    // threshold runs per partition pair — the shape that survives a
+    // corpus-proportional query side at 100 TB instead of OOMing an
+    // executor on a forced build.
     t0 = System.nanoTime()
     val topk = graft.core.Knn.knn(queries, train, 5)
     val nk = topk.count()
     val tKnn = (System.nanoTime() - t0) / 1e9
     val phys = topk.queryExecution.executedPlan.toString
     val join =
-      if (phys.contains("CartesianProduct")) "cartesian"
+      if (phys.contains("KnnBlock")) {
+        if (phys.contains("broadcast query")) "block-broadcast" else "block-partitioned"
+      } else if (phys.contains("CartesianProduct")) "cartesian"
       else if (phys.contains("BroadcastNestedLoop")) "broadcast-nl"
       else "other"
     val qtPairs = (n * 0.9).toLong * (n / 10)

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The extensions entry point in a dedicated session: SQL function names
-  * resolve to the fused expressions and the top-k rule is installed.
+  * resolve to the fused expressions, and the top-k rule and the block kNN
+  * strategy are installed.
   */
 class GraftExtensionsSpec extends AnyFunSuite {
 
@@ -31,6 +32,11 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(r.getDouble(2) === 11.0)
       assert(spark.sessionState.optimizer.batches.flatMap(_.rules)
         .exists(_ == graft.plans.GroupedTopKRewrite))
+      // the block kNN strategy comes from the extension, so first use
+      // does not add a second copy
+      assert(spark.sessionState.planner.strategies.count(_ == graft.plans.KnnBlockStrategy) === 1)
+      graft.plans.KnnBlockStrategy.install(spark)
+      assert(spark.sessionState.planner.strategies.count(_ == graft.plans.KnnBlockStrategy) === 1)
     } finally {
       // stop + clear so the next suite's getOrCreate builds a fresh,
       // extension-free session

@@ -85,8 +85,13 @@ class KeelAndMlSpec extends SparkSpecBase {
 
   /** Cross joins in a frame's analyzed plan: one per `Knn.pairwise`
     * search, plus stage 1's class densify. */
+  /** Cross joins plus block kNN searches: each is a query × train search
+    * or the class densify. */
   private def crossJoins(df: DataFrame): Int =
-    df.queryExecution.analyzed.collect { case j: Join if j.joinType == Cross => j }.size
+    df.queryExecution.analyzed.collect {
+      case j: Join if j.joinType == Cross => j
+      case b: graft.plans.KnnBlock => b
+    }.size
 
   test("spark.ml FknnClassifier pipeline ≡ direct Fknn calls") {
     val (train, queries) = split()
@@ -167,7 +172,7 @@ class KeelAndMlSpec extends SparkSpecBase {
     val (train, queries) = split()
     val model = new FknnClassifier().setK(5).setNClasses(10).fit(train)
     val direct = collectSet(Fknn.classify(Fknn.membershipInit(train, 5, 10), train, queries, 5))
-    // stage 1 alone plans two cross joins (the self-join and the densify)
+    // stage 1 alone plans two (the self-search and the densify)
     assert(crossJoins(Fknn.membershipInit(train, 5, 10)) === 2)
     (1 to 2).foreach { _ =>
       val out = model.transform(queries)

@@ -68,18 +68,26 @@ class KnnSpec extends SparkSpecBase {
     // 100×. The hint must be absent from the analyzed plan (AQE then
     // size-gates the placement at runtime, which is allowed to broadcast
     // at THIS sf — the invariant is that nothing forces it).
+    // the hint is a ResolvedHint on the cross-join path, and the block
+    // operator's own broadcastQuery flag on the KnnBlock path
+    def forced(df: org.apache.spark.sql.DataFrame): Boolean = {
+      val plan = df.queryExecution.analyzed
+      plan.toString.contains("ResolvedHint") ||
+        plan.collectFirst { case b: graft.plans.KnnBlock if b.broadcastQuery => b }.nonEmpty
+    }
     val q = emb.filter(col("vec_id") % 10 === 0)
     val t = emb.filter(col("vec_id") % 10 =!= 0)
     val topk = Knn.knn(q, t, k = 5)
-    assert(!topk.queryExecution.analyzed.toString.contains("ResolvedHint"),
+    assert(!forced(topk),
       "knn_topk path must not force-broadcast a corpus-proportional query side")
     val classify = graft.core.Fknn.knnClassify(t, q, k = 5)
-    assert(!classify.queryExecution.analyzed.toString.contains("ResolvedHint"),
+    assert(!forced(classify),
       "knn_classify path must not force-broadcast a corpus-proportional query side")
     // and the one legitimately hinted shape (chunked per-block) still hints
     val chunk = q.filter(col("vec_id") % 4 === 0)
-    assert(Knn.knn(chunk, t, k = 5, hintBroadcastQ = true)
-      .queryExecution.analyzed.toString.contains("ResolvedHint"))
+    assert(forced(Knn.knn(chunk, t, k = 5, hintBroadcastQ = true)))
+    assert(forced(Knn.knn(chunk, t, k = 5, dist = graft.functions.ArrayDistance.cosine,
+      hintBroadcastQ = true)))
   }
 
   test("round-5 operators plan with their load-bearing physical shapes") {

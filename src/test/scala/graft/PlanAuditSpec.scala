@@ -7,7 +7,9 @@ package graft
   *
   *  (a) CartesianProduct — never allowed. All intentional cross joins in
   *      the library are one-row or broadcast-tiny and plan as
-  *      BroadcastNestedLoopJoin, so any CartesianProduct is a bug.
+  *      BroadcastNestedLoopJoin, so any CartesianProduct is a bug. The
+  *      same holds for a block kNN search (`KnnBlock`) placed per
+  *      partition pair instead of with a broadcast query block.
   *  (b) BroadcastNestedLoopJoin — allowed ONLY on the whitelist below:
   *      each entry is an intentional one-row-broadcast crossJoin (a
   *      scalar aggregate — centroid norms, corpus totals, min/max range,
@@ -58,11 +60,10 @@ class PlanAuditSpec extends SparkSpecBase {
     "events_time_to_convert",
     // markov: one-row renormalization total + state-count broadcasts
     "events_markov_stationary",
-    // FkNN/kNN: the class-range frame (nClasses rows) and the
-    // literal-bounded (≤20-row) hinted query block
+    // FkNN: the class-range frame (nClasses rows); the neighbour
+    // searches themselves plan as KnnBlock, except `_local`'s
     "fknn_classify", "fknn_classify_chunked", "fknn_classify_local",
     "fknn_membership_chunked", "fknn_membership_init",
-    "knn_classify", "knn_regress", "knn_topk",
     // hits: per-round one-row L1-normalization totals + node-count frame
     "graph_hits",
     // market basket: one-row n_orders total onto the pair stream
@@ -138,8 +139,11 @@ class PlanAuditSpec extends SparkSpecBase {
     }.toMap
 
   test("no declared query plans a CartesianProduct") {
+    // a block kNN search placed per partition pair is the same placement
+    val partitionedBlock = "KnnBlock [^\n]*, partitioned ".r
     val offenders = audited.collect {
-      case (name, (plan, _)) if plan.contains("CartesianProduct") => name
+      case (name, (plan, _))
+        if plan.contains("CartesianProduct") || partitionedBlock.findFirstIn(plan).nonEmpty => name
     }
     assert(offenders.isEmpty, s"CartesianProduct in: ${offenders.toSeq.sorted}")
   }
