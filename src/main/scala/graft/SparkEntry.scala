@@ -181,11 +181,11 @@ object SparkEntry {
 
     // #22b fknn_membership_chunked (CORE): same stage-1 semantics through
     // the kNN-IS `numIterations` physical path — the query side split
-    // into 4 id-range blocks, each individually broadcast (the memory
+    // into 4 id-hash blocks, each individually broadcast (the memory
     // bound for train sets too large for one unhinted self-join). Same
     // oracle as #22: the chunking must be output-invisible.
     "fknn_membership_chunked" -> { (s, d) =>
-      Fknn.membershipInitChunked(embTrain(s, d), K, NClasses, blocks = 4)
+      Fknn.membershipInit(embTrain(s, d), K, NClasses, blocks = 4)
         .select(col("vec_id"), col("class"), round(col("membership"), 6).as("membership"))
     },
 
@@ -225,7 +225,7 @@ object SparkEntry {
     // sets too large for one broadcast). Same oracle as #23: chunking
     // must be output-invisible, mirroring what #22b proves for stage 1.
     "fknn_classify_chunked" -> { (s, d) =>
-      Fknn.classifyChunked(memShared(s, d), embTrain(s, d), embQueries(s, d), K, blocks = 4)
+      Fknn.classify(memShared(s, d), embTrain(s, d), embQueries(s, d), K, blocks = 4)
     },
 
     // #23b fknn_classify_local (CORE): the reference's version=local

@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   *   identical in the DuckDB oracle SQL.)
   *
   * Stage 1 depends on the train set only: `fit` materializes it once and
-  * every stage-2 caller reads that table (`membershipInit` and
-  * `membershipInitChunked` stay lazy plans).
+  * every stage-2 caller reads that table (`membershipInit` stays a lazy
+  * plan).
   *
   * Both stages find neighbours through `Knn.knn`'s kNN-IS kernel: the
   * block operator (`graft.plans.KnnBlock`) keeps one heap per query over
@@ -30,10 +30,11 @@ import org.apache.spark.sql.functions._
   * top-k merges them; the votes are hash aggregations. No driver-side
   * collect anywhere. Data movement at cluster scale: the query-block
   * broadcast and the k-rows-per-query-per-partition merge shuffle —
-  * mirroring the reference's broadcast + reduceByKey. The stage-1
-  * self-search deliberately carries NO broadcast hint (the "query" side
-  * there is the whole train set); at sizes beyond one broadcast, use
-  * `membershipInitChunked`.
+  * mirroring the reference's broadcast + reduceByKey. With `blocks = 1`
+  * (the default) the query side carries NO broadcast hint (in stage 1 it
+  * is the whole train set) and its size estimate decides the placement;
+  * `blocks > 1` (the reference's `numIterations`) splits it with
+  * `Knn.blockwise` into id-hash chunks, each broadcast.
   *
   * Cross-engine determinism note (gate invariant): neighbor ranking and
   * the argmax order on unrounded doubles. This is safe because the fused
@@ -70,39 +71,27 @@ object Fknn {
     ((est + budgetBytes - 1) / budgetBytes).max(1).min(Int.MaxValue).toInt
   }
 
-  /** `blocks = -1` → auto-size from the chunked frame (the reference's
-    * `numIterations = -1`); any positive value is taken literally. */
-  private def resolveBlocks(blocks: Int, chunked: DataFrame): Int =
-    if (blocks == -1) autoBlocks(chunked)
-    else { require(blocks >= 1, s"blocks must be >= 1 or -1 (auto), got $blocks"); blocks }
+  /** The k nearest `t` rows of each `q` row, (q_id, t_id, dist, rn), with
+    * the query side split into `blocks` kNN-IS chunks by `Knn.blockwise`.
+    * A chunk is small by construction, so it carries the broadcast hint;
+    * with `blocks = 1` the query side is searched whole, unhinted.
+    */
+  private def nearest(q: DataFrame, t: DataFrame, k: Int, blocks: Int, dist: Dist,
+      excludeSelf: Boolean): DataFrame =
+    Knn.blockwise(q, "vec_id", blocks)(qb => Knn.search(qb, t, k, dist = dist,
+      hintBroadcastQ = blocks != 1, excludeSelf = excludeSelf))
 
   /** Stage 1: long-form membership table (vec_id, class, membership) for
     * every train row × every class 0..nClasses-1 (densified).
-    * `train` columns: (vec_id, v ARRAY<DOUBLE>, label).
+    * `train` columns: (vec_id, v ARRAY<DOUBLE>, label). `blocks` chunks
+    * the self-search's query side (`nearest`; -1 auto-sizes from the
+    * train set's estimated bytes); the output does not depend on it
+    * (FknnSpec asserts it).
     */
-  def membershipInit(train: DataFrame, k: Int, nClasses: Int,
-      dist: Dist = graft.functions.ArrayDistance.l2): DataFrame = {
-    // Self-kNN on train (self-pair excluded). No broadcast hint: the query
-    // side IS the train set — its size estimate decides the placement.
-    val nn = Knn.search(train, train, k, dist = dist, excludeSelf = true)
-    membershipFromNn(nn, train, k, nClasses)
-  }
-
-  /** Stage 1 with the query side chunked into `blocks` id-range blocks,
-    * each individually broadcast — the relational analogue of kNN-IS's
-    * `numIterations` memory bound (SURVEY §3.2). Identical output to
-    * `membershipInit` (FknnSpec asserts it); use when the train set is too
-    * large for a single unhinted self-join's build side.
-    */
-  def membershipInitChunked(train: DataFrame, k: Int, nClasses: Int, blocks: Int,
-      dist: Dist = graft.functions.ArrayDistance.l2): DataFrame = {
-    val nb = resolveBlocks(blocks, train)
-    val nn = (0 until nb).map { b =>
-      Knn.search(train.filter(col("vec_id") % nb === b), train, k, dist = dist,
-        hintBroadcastQ = true, excludeSelf = true)
-    }.reduce(_ unionAll _)
-    membershipFromNn(nn, train, k, nClasses)
-  }
+  def membershipInit(train: DataFrame, k: Int, nClasses: Int, blocks: Int = 1,
+      dist: Dist = graft.functions.ArrayDistance.l2): DataFrame =
+    membershipFromNn(nearest(train, train, k, blocks, dist, excludeSelf = true),
+      train, k, nClasses)
 
   /** Keller stage-1 init from a (q_id, t_id, …) neighbor table. */
   private def membershipFromNn(nn: DataFrame, train: DataFrame, k: Int, nClasses: Int): DataFrame = {
@@ -127,38 +116,19 @@ object Fknn {
 
   /** Stage 2: (q_id, predicted) for each query row.
     * `memberships` is stage-1 output; `train`/`queries` have (vec_id, v, label).
+    * `blocks` chunks the query side (`nearest`; -1 auto-sizes from the
+    * query set's estimated bytes), bounding each broadcast at |Q|/blocks
+    * rows; the output does not depend on it (FknnSpec asserts it).
     */
   def classify(
       memberships: DataFrame,
       train: DataFrame,
       queries: DataFrame,
       k: Int,
+      blocks: Int = 1,
       dist: Dist = graft.functions.ArrayDistance.l2): DataFrame =
-    argmaxPredicted(classifyScores(memberships, train, queries, k, dist))
-
-  /** Stage 2 with the query side chunked into `blocks` id-hash blocks,
-    * each individually broadcast — the same kNN-IS `numIterations` memory
-    * bound `membershipInitChunked` gives stage 1. Output-identical to
-    * `classify` (FknnSpec + the shared oracle row assert it); use when
-    * the query set is too large for one broadcast — chunking bounds the
-    * in-flight broadcast at |Q|/blocks rows.
-    */
-  def classifyChunked(
-      memberships: DataFrame,
-      train: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      blocks: Int,
-      dist: Dist = graft.functions.ArrayDistance.l2): DataFrame = {
-    val nb = resolveBlocks(blocks, queries)
-    val nn = (0 until nb).map { b =>
-      // per-block query side is known-small by construction (|Q|/blocks) —
-      // the one legitimate forced-broadcast site (kNN-IS chunk placement).
-      Knn.knn(queries.filter(col("vec_id") % nb === b), train, k,
-        dist = dist, hintBroadcastQ = true)
-    }.reduce(_ unionAll _)
-    argmaxPredicted(scoresFromNn(nn, memberships))
-  }
+    argmaxPredicted(scoresFromNn(
+      nearest(queries, train, k, blocks, dist, excludeSelf = false), memberships))
 
   /** Stage-2 score table (q_id, class, u) — the fuzzy membership vote
     * before the argmax; the per-class "probability" surface metrics like
@@ -166,9 +136,8 @@ object Fknn {
     *
     * The query side carries NO broadcast hint (round-3 fix): the declared
     * split makes it 10 % of the corpus, which at 100× is a guaranteed
-    * executor OOM if force-broadcast — Catalyst/AQE size-gates instead,
-    * exactly like the stage-1 self-join. Known-small query blocks go
-    * through `classifyChunked`, whose per-block `Knn.knn` keeps the hint.
+    * executor OOM if force-broadcast — Catalyst/AQE size-gates instead.
+    * Known-small query chunks come from `classify`'s `blocks`.
     */
   def classifyScores(
       memberships: DataFrame,
@@ -176,8 +145,7 @@ object Fknn {
       queries: DataFrame,
       k: Int,
       dist: Dist = graft.functions.ArrayDistance.l2): DataFrame =
-    scoresFromNn(Knn.knn(queries, train, k, dist = dist, hintBroadcastQ = false),
-      memberships)
+    scoresFromNn(Knn.knn(queries, train, k, dist = dist), memberships)
 
   /** Keller stage-2 vote from a (q_id, t_id, dist) neighbor table. */
   private def scoresFromNn(nn: DataFrame, memberships: DataFrame): DataFrame = {
@@ -210,10 +178,11 @@ object Fknn {
     * its own local k-nearest only, skipping the global merge-k; the vote
     * then runs over the union of per-block candidates (k·blocks ⊇ the
     * global top-k, so accuracy ≥ approximation intuition of the papers).
-    * Blocks are a deterministic id-hash (`vec_id % blocks`) rather than
-    * physical partitions, so results are partitioning-independent and
-    * oracle-checkable — the plan still aggregates per (query, block)
-    * before anything shuffles, which is the locality the variant buys.
+    * Blocks are `Knn.blockwise`'s deterministic id-hash of the train side
+    * (-1 auto-sizes from its estimated bytes) rather than physical
+    * partitions, so results are partitioning-independent and
+    * oracle-checkable. Each block is one un-hinted `Knn.knn` search (the
+    * query side is the full query set, size-gated like `classifyScores`).
     */
   def classifyLocal(
       memberships: DataFrame,
@@ -222,15 +191,7 @@ object Fknn {
       k: Int,
       blocks: Int,
       dist: Dist = graft.functions.ArrayDistance.l2): DataFrame = {
-    // un-hinted (round-3 fix): the query side is the full query set here —
-    // Catalyst/AQE size-gates the cross-join placement like classifyScores
-    val nb = resolveBlocks(blocks, train)
-    val qr = Knn.ensureParallelism(queries.select(col("vec_id").as("q_id"), col("v").as("q_v")))
-    val tr = Knn.ensureParallelism(train.select(col("vec_id").as("t_id"), col("v").as("t_v")))
-    val pairs = qr.crossJoin(tr)
-      .select(col("q_id"), col("t_id"), (col("t_id") % nb).as("blk"),
-        dist(col("q_v"), col("t_v")).as("dist"))
-    val nn = graft.functions.TopKAgg.knn(pairs, k, groupCols = Seq("q_id", "blk"))
+    val nn = Knn.blockwise(train, "vec_id", blocks)(tb => Knn.knn(queries, tb, k, dist = dist))
     argmaxPredicted(scoresFromNn(nn, memberships))
   }
 
@@ -252,19 +213,14 @@ object Fknn {
   }
 
   /** Stage 1, materialized now — the reference's `cache()` of the
-    * fuzzified train set (SURVEY §4.1 row 5). `blocks == 1` runs
-    * `membershipInit`, else `membershipInitChunked` (`-1` auto-sizes).
-    * The checkpoint is built outside any enclosing `Ckpt.scoped`, so its
+    * fuzzified train set (SURVEY §4.1 row 5), `membershipInit` chunked
+    * into `blocks` (`-1` auto-sizes). The checkpoint is built outside any enclosing `Ckpt.scoped`, so its
     * holder (a model, a `SharedFrames` memo, a pipeline frame) reads it
     * after that scope ends; ContextCleaner frees it once unreferenced.
     */
   def fit(train: DataFrame, k: Int, nClasses: Int, blocks: Int = 1,
-      dist: Dist = graft.functions.ArrayDistance.l2): DataFrame = {
-    val stage1 =
-      if (blocks == 1) membershipInit(train, k, nClasses, dist)
-      else membershipInitChunked(train, k, nClasses, blocks, dist = dist)
-    Ckpt.untracked(Ckpt.truncate(stage1))
-  }
+      dist: Dist = graft.functions.ArrayDistance.l2): DataFrame =
+    Ckpt.untracked(Ckpt.truncate(membershipInit(train, k, nClasses, blocks, dist)))
 
   /** The full two-stage pipeline. Stage 2 reads `fit`'s table instead of
     * re-evaluating the O(N²) membership subtree inside its join (measured
@@ -272,5 +228,5 @@ object Fknn {
     */
   def classifyPipeline(train: DataFrame, queries: DataFrame, k: Int, nClasses: Int,
       dist: Dist = graft.functions.ArrayDistance.l2): DataFrame =
-    classify(fit(train, k, nClasses, dist = dist), train, queries, k, dist)
+    classify(fit(train, k, nClasses, dist = dist), train, queries, k, dist = dist)
 }

@@ -29,8 +29,8 @@ import graft.functions.{ArrayDistance, TopKAgg}
   * "query" side is ~the whole dataset) the size estimate decides: small
   * inputs still broadcast, large ones run per (query partition, train
   * partition) pair. For query sets too big for any single broadcast,
-  * chunk by id-range (`Fknn.membershipInitChunked`, the reference's
-  * `numIterations`).
+  * callers split the query side into id-hash blocks with `blockwise` and
+  * search each block with the hint (the reference's `numIterations`).
   */
 object Knn {
 
@@ -145,6 +145,23 @@ object Knn {
       dist: (Column, Column) => Column = ArrayDistance.l2,
       hintBroadcastQ: Boolean = false): DataFrame =
     search(q, t, k, idCol, vecCol, dist, hintBroadcastQ, excludeSelf = false)
+
+  /** The kNN-IS block split, the reference's `numIterations`: the union of
+    * `search` over `blocks` disjoint blocks of `df`, a row's block being
+    * `coalesce(pmod(idCol, blocks), 0)`, so negative and null ids land in
+    * exactly one block. `blocks = -1` sizes the count from `df`'s estimated
+    * bytes (`Fknn.autoBlocks`); one block is `search(df)` unchanged.
+    */
+  def blockwise(df: DataFrame, idCol: String, blocks: Int)(
+      search: DataFrame => DataFrame): DataFrame = {
+    require(blocks >= 1 || blocks == -1, s"blocks must be >= 1 or -1 (auto), got $blocks")
+    val nb = if (blocks == -1) Fknn.autoBlocks(df) else blocks
+    if (nb == 1) search(df)
+    else {
+      val block = coalesce(pmod(col(idCol), lit(nb)), lit(0))
+      (0 until nb).map(b => search(df.filter(block === b))).reduce(_ unionAll _)
+    }
+  }
 
   /** `knn`, with each query's own row (q_id = t_id) left out of its
     * candidates when `excludeSelf`: stage 1's search of the train set

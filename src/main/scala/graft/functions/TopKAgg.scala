@@ -110,12 +110,10 @@ object TopKAgg {
   }
 
   /** (q_id, t_id, dist) pairs → (q_id, t_id, dist, rn) with rn ∈ [1,k],
-    * ascending (dist, t_id) per group — same shape as the window top-k.
-    * Native TypedImperativeAggregate path. `groupCols` defaults to the
-    * global-kNN grouping; the local-FkNN variant groups by
-    * (q_id, partition).
+    * ascending (dist, t_id) per q_id — same shape as the window top-k.
+    * Native TypedImperativeAggregate path.
     */
-  def knn(pairs: DataFrame, k: Int, groupCols: Seq[String] = Seq("q_id")): DataFrame = {
+  def knn(pairs: DataFrame, k: Int): DataFrame = {
     // every session running this aggregate needs the raised fallback
     // threshold (the 128-group sort-based path is the 4-8× regression the
     // aggregate exists to avoid); tune() respects any explicit user value
@@ -125,9 +123,7 @@ object TopKAgg {
         ColumnBridge.expression(col("dist")),
         ColumnBridge.expression(col("t_id")),
         k).toAggregateExpression())
-    explodeNn(
-      pairs.groupBy(groupCols.map(col): _*).agg(tk.as("nn")),
-      groupCols)
+    explodeNn(pairs.groupBy(col("q_id")).agg(tk.as("nn")))
   }
 
   /** udaf/Aggregator twin of `knn` — the executable spec (slower: per-row
@@ -139,16 +135,12 @@ object TopKAgg {
     explodeNn(
       pairs.groupBy(col("q_id")).agg(tk(col("dist"), col("t_id")).as("nn"))
         .select(col("q_id"),
-          expr("transform(nn, x -> struct(x._1 AS dist, x._2 AS t_id))").as("nn")),
-      Seq("q_id"))
+          expr("transform(nn, x -> struct(x._1 AS dist, x._2 AS t_id))").as("nn")))
   }
 
-  private def explodeNn(grouped: DataFrame, groupCols: Seq[String]): DataFrame =
+  private def explodeNn(grouped: DataFrame): DataFrame =
     grouped
-      .select(groupCols.map(col) :+ posexplode(col("nn")): _*)
-      .select(
-        groupCols.map(col) ++ Seq(
-          col("col.t_id").as("t_id"),
-          col("col.dist").as("dist"),
-          (col("pos") + 1).cast("int").as("rn")): _*)
+      .select(col("q_id"), posexplode(col("nn")))
+      .select(col("q_id"), col("col.t_id").as("t_id"), col("col.dist").as("dist"),
+        (col("pos") + 1).cast("int").as("rn"))
 }

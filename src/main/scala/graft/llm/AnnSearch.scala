@@ -119,20 +119,34 @@ object AnnSearch {
     (0 until 8).map(i => when(element_at(v, i + 1) >= 0, lit(1 << i)).otherwise(lit(0)))
       .reduce(_ + _)
 
+  /** (q_id, t_id, dist) for every pair of a `q` row and a `t` row in the
+    * same sign-LSH bucket, dist the cosine distance; both sides are
+    * (vec_id, v). The bucket equi-join replaces the cross join.
+    */
+  private def bucketPairs(q: DataFrame, t: DataFrame): DataFrame = {
+    def side(df: DataFrame, p: String) = df.select(col("vec_id").as(s"${p}_id"),
+      col("v").as(s"${p}_v"), bucketCol(col("v")).as("bucket"))
+    side(q, "q").join(side(t, "t"), "bucket")
+      .select(col("q_id"), col("t_id"), cosineDist(col("q_v"), col("t_v")).as("dist"))
+  }
+
+  /** Top-k of each `q` row within its own bucket, self-pairs excluded:
+    * (q_id, t_id, dist, rn), ranked by the bounded-heap (dist, t_id) order.
+    */
+  private def bucketKnn(q: DataFrame, t: DataFrame, k: Int): DataFrame =
+    graft.functions.TopKAgg.knn(bucketPairs(q, t).filter(col("q_id") =!= col("t_id")), k)
+
+  /** The 20-query sign-LSH search: each query (vec_id < 20, broadcast)
+    * probes its own bucket of the rest for its top 3. */
+  private def lshTop3(e: DataFrame): DataFrame =
+    bucketKnn(broadcast(e.filter(col("vec_id") < 20)), e.filter(col("vec_id") >= 20), 3)
+
   /** ANN via LSH bucketing: query probes only its own bucket; top-3 by
     * cosine distance within it. Bucket equi-join replaces the cross join.
     */
-  def lshBucketTopK(s: SparkSession, d: String): DataFrame = {
-    val e = emb(s, d)
-    val q = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"), col("v").as("q_v"), bucketCol(col("v")).as("bucket"))
-    val t = e.filter(col("vec_id") >= 20)
-      .select(col("vec_id").as("t_id"), col("v").as("t_v"), bucketCol(col("v")).as("bucket"))
-    val pairs = broadcast(q).join(t, "bucket")
-      .select(col("q_id"), col("t_id"), cosineDist(col("q_v"), col("t_v")).as("dist"))
-    graft.functions.TopKAgg.knn(pairs, 3)
+  def lshBucketTopK(s: SparkSession, d: String): DataFrame =
+    lshTop3(emb(s, d))
       .select(col("q_id"), col("t_id"), rnd(col("dist"), 6).as("dist"), col("rn"))
-  }
 
   /** ann_range_search — RADIUS search: every train vector within cosine
     * distance ε of each query, not a fixed top-k — the dedup/recall
@@ -152,12 +166,7 @@ object AnnSearch {
     */
   def rangeSearch(s: SparkSession, d: String, eps: Double = 0.8): DataFrame = {
     val e = emb(s, d)
-    val q = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"), col("v").as("q_v"), bucketCol(col("v")).as("bucket"))
-    val t = e.filter(col("vec_id") >= 20)
-      .select(col("vec_id").as("t_id"), col("v").as("t_v"), bucketCol(col("v")).as("bucket"))
-    broadcast(q).join(t, "bucket")
-      .select(col("q_id"), col("t_id"), cosineDist(col("q_v"), col("t_v")).as("dist"))
+    bucketPairs(broadcast(e.filter(col("vec_id") < 20)), e.filter(col("vec_id") >= 20))
       .filter(col("dist") <= eps)
       .select(col("q_id"), col("t_id"), rnd(col("dist"), 6).as("dist"))
   }
@@ -685,24 +694,18 @@ object AnnSearch {
   }
 
   /** The kNN-IS-style chunked container for `pqSearch` — the scaladoc's
-    * "big query sets chunk" made concrete: the query batch splits into
-    * `blocks` id-hash blocks, each runs the full PQ pipeline with a
-    * per-block distance-table side that is known-small by construction
-    * (|Q|/blocks · m·K doubles — inside AQE's broadcast gate), and the
-    * union is output-identical to one big run because per-query top-k
-    * never crosses blocks. Encode runs per block here; a
-    * long chunk loop would hoist `codes` behind a persist/checkpoint,
-    * the same seam the fknn chunked paths expose for stage-1 state.
+    * "big query sets chunk" made concrete: `Knn.blockwise` splits the
+    * query batch into `blocks` id-hash blocks (-1 auto-sizes), each runs
+    * the full PQ pipeline with a per-block distance-table side that is
+    * known-small by construction (|Q|/blocks · m·K doubles — inside AQE's
+    * broadcast gate), and the union is output-identical to one big run
+    * because per-query top-k never crosses blocks. Encode runs per block
+    * here; a long chunk loop would hoist `codes` behind a
+    * persist/checkpoint, as `Fknn.fit` does for stage-1 state.
     */
   def pqSearchChunked(q: DataFrame, t: DataFrame, cb: DataFrame,
-      m: Int, k: Int, blocks: Int): DataFrame = {
-    // blocks = -1 → auto-size from the query side's estimated bytes
-    // (the kNN-IS `numIterations = -1` parity, shared with Fknn)
-    val nb = if (blocks == -1) graft.core.Fknn.autoBlocks(q) else blocks
-    (0 until nb).map { b =>
-      pqSearch(q.filter(pmod(col("q_id"), lit(nb)) === b), t, cb, m, k)
-    }.reduce(_ unionAll _)
-  }
+      m: Int, k: Int, blocks: Int): DataFrame =
+    Knn.blockwise(q, "q_id", blocks)(pqSearch(_, t, cb, m, k))
 
   def pqChunkedTopK(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d)
@@ -1214,15 +1217,7 @@ object AnnSearch {
     val t = e.filter(col("vec_id") >= 20)
     val brute = Knn.knn(q, t, k = 3, dist = cosineDist)
       .select(col("q_id"), col("t_id"))
-    val qb = q.select(col("vec_id").as("q_id"), col("v").as("q_v"),
-      bucketCol(col("v")).as("bucket"))
-    val tb = t.select(col("vec_id").as("t_id"), col("v").as("t_v"),
-      bucketCol(col("v")).as("bucket"))
-    val lsh = graft.functions.TopKAgg.knn(
-        broadcast(qb).join(tb, "bucket")
-          .select(col("q_id"), col("t_id"),
-            cosineDist(col("q_v"), col("t_v")).as("dist")), 3)
-      .select(col("q_id"), col("t_id"))
+    val lsh = lshTop3(e).select(col("q_id"), col("t_id"))
     val hits = brute.join(lsh, Seq("q_id", "t_id"), "left_semi")
       .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
     brute.select(col("q_id")).distinct()
@@ -1250,15 +1245,7 @@ object AnnSearch {
     val t = e.filter(col("vec_id") >= 20)
     val brute = Knn.knn(q, t, k = 3, dist = cosineDist)
       .select(col("q_id"), col("t_id"), (lit(4) - col("rn")).cast("long").as("rel"))
-    val qb = q.select(col("vec_id").as("q_id"), col("v").as("q_v"),
-      bucketCol(col("v")).as("bucket"))
-    val tb = t.select(col("vec_id").as("t_id"), col("v").as("t_v"),
-      bucketCol(col("v")).as("bucket"))
-    val lsh = graft.functions.TopKAgg.knn(
-        broadcast(qb).join(tb, "bucket")
-          .select(col("q_id"), col("t_id"),
-            cosineDist(col("q_v"), col("t_v")).as("dist")), 3)
-      .select(col("q_id"), col("t_id"), col("rn"))
+    val lsh = lshTop3(e).select(col("q_id"), col("t_id"), col("rn"))
     val gains = lsh.join(brute, Seq("q_id", "t_id"), "left")
       .groupBy(col("q_id"))
       .agg(
@@ -1294,16 +1281,9 @@ object AnnSearch {
     * `graphSearch` can build its navigation graph over the target set
     * only (round 13).
     */
-  def knnGraphOf(e0: DataFrame, k: Int): DataFrame = {
-    val e = e0.select(col("vec_id"), col("v"), bucketCol(col("v")).as("bucket"))
-    val pairs = e.select(col("vec_id").as("q_id"), col("v").as("q_v"), col("bucket"))
-      .join(e.select(col("vec_id").as("t_id"), col("v").as("t_v"), col("bucket")), "bucket")
-      .filter(col("q_id") =!= col("t_id"))
-      .select(col("q_id"), col("t_id"), cosineDist(col("q_v"), col("t_v")).as("dist"))
-    graft.functions.TopKAgg.knn(pairs, k)
-      .select(col("q_id").as("src"), col("t_id").as("dst"),
-        rnd(col("dist"), 6).as("dist"), col("rn"))
-  }
+  def knnGraphOf(e0: DataFrame, k: Int): DataFrame =
+    bucketKnn(e0, e0, k).select(col("q_id").as("src"), col("t_id").as("dst"),
+      rnd(col("dist"), 6).as("dist"), col("rn"))
 
   /** True top-k adjacency of the `qNodes` sources over the full `nodes`
     * corpus — `knnGraphOf` with the query side restricted, so the work
@@ -1312,17 +1292,8 @@ object AnnSearch {
     * compares stored adjacency against). Output (src, dst), self-pairs
     * excluded, same bucket/tie conventions as the build.
     */
-  def knnTruthOf(qNodes: DataFrame, nodes: DataFrame, k: Int): DataFrame = {
-    val qb = qNodes.select(col("vec_id").as("q_id"), col("v").as("q_v"),
-      bucketCol(col("v")).as("bucket"))
-    val tb = nodes.select(col("vec_id").as("t_id"), col("v").as("t_v"),
-      bucketCol(col("v")).as("bucket"))
-    val pairs = qb.join(tb, "bucket")
-      .filter(col("q_id") =!= col("t_id"))
-      .select(col("q_id"), col("t_id"), cosineDist(col("q_v"), col("t_v")).as("dist"))
-    graft.functions.TopKAgg.knn(pairs, k)
-      .select(col("q_id").as("src"), col("t_id").as("dst"))
-  }
+  def knnTruthOf(qNodes: DataFrame, nodes: DataFrame, k: Int): DataFrame =
+    bucketKnn(qNodes, nodes, k).select(col("q_id").as("src"), col("t_id").as("dst"))
 
   /** PERSIST the k-NN navigation graph (round 14, VERDICT r13 #6 —
     * the lifecycle LSH and IVF already had: `graphSearchOf` accepted a

@@ -20,10 +20,11 @@ import graft.core.Fknn
   * Parameter parity with the reference's CLI surface (SURVEY §3.1
   * [LINEAGE]): `k`, `nClasses`, plus `version` ("global" exact /
   * "local" per-block approximate — the reference's EP-3 option) and
-  * `numIterations` (the kNN-IS memory bound: > 1 chunks BOTH stages
-  * into that many id-hash blocks, each individually broadcast; -1
-  * auto-sizes from Catalyst statistics, the reference's
-  * `numIterations = -1`; for version=local it is the block count) and
+  * `numIterations` (the kNN-IS memory bound: > 1 splits the query side
+  * of BOTH stages into that many `Knn.blockwise` id-hash blocks, each
+  * individually broadcast; -1 auto-sizes from Catalyst statistics, the
+  * reference's `numIterations = -1`; for version=local it is the train
+  * block count, at least 2) and
   * `distType` ("l2" Euclidean / "l1" Manhattan — the reference CLI's
   * metric option, threaded through both stages). Defaults reproduce
   * the exact single-pass Euclidean pipeline.
@@ -103,16 +104,12 @@ class FknnModel(
 
   override def transform(dataset: Dataset[_]): DataFrame = {
     val queries = dataset.select(col("vec_id"), col("v"), col("label"))
-    val pred = (getVersion, getNumIterations) match {
-      case ("local", -1) =>
-        Fknn.classifyLocal(memberships, train, queries, getK, blocks = -1, dist = distFn)
-      case ("local", n) =>
-        Fknn.classifyLocal(memberships, train, queries, getK, blocks = math.max(n, 2),
-          dist = distFn)
-      case ("global", n) if n > 1 || n == -1 =>
-        Fknn.classifyChunked(memberships, train, queries, getK, blocks = n, dist = distFn)
-      case _ =>
-        Fknn.classify(memberships, train, queries, getK, dist = distFn)
+    val n = getNumIterations
+    val pred = getVersion match {
+      case "local" => Fknn.classifyLocal(memberships, train, queries, getK,
+        blocks = if (n == 1) 2 else n, dist = distFn)
+      case "global" => Fknn.classify(memberships, train, queries, getK, blocks = n,
+        dist = distFn)
     }
     dataset.toDF().join(pred.withColumnRenamed("q_id", "vec_id"), "vec_id")
   }

@@ -20,7 +20,10 @@ import graft.core.{Ckpt, Distance, Fknn, Metrics}
   *   [version=global|chunked|local] [blocks=4|-1]
   * ```
   *
-  * `blocks = -1` auto-sizes the kNN-IS chunk count from Catalyst
+  * `chunked` runs `Fknn.classify` with the query side split into
+  * `blocks` kNN-IS chunks, `local` runs `Fknn.classifyLocal` over
+  * `blocks` train blocks, `global` ignores `blocks`; both splits are
+  * `Knn.blockwise`'s. `blocks = -1` auto-sizes the count from Catalyst
   * statistics (`Fknn.autoBlocks` — the reference's
   * `numIterations = -1`). Stages mirror the reference run: stage 1 =
   * Keller membership init over train (materialized by `Fknn.fit`, the
@@ -61,8 +64,8 @@ object RunFknn {
     // stage 2 — classify through the declared physical version
     val pred = stages.frame("stage2_classify") {
       cfg.version match {
-        case "global" => Fknn.classify(mem, train, queries, cfg.k, dist)
-        case "chunked" => Fknn.classifyChunked(mem, train, queries, cfg.k,
+        case "global" => Fknn.classify(mem, train, queries, cfg.k, dist = dist)
+        case "chunked" => Fknn.classify(mem, train, queries, cfg.k,
           blocks = cfg.blocks, dist = dist)
         case "local" => Fknn.classifyLocal(mem, train, queries, cfg.k,
           blocks = cfg.blocks, dist = dist)

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.{Distance, Fknn, Knn}
+import graft.llm.AnnSearch
+import graft.ml.FknnClassifier
 
 /** Keller/Gray/Givens FkNN semantics against the hand-computed toy2d
   * fixture (FIXTURES.md §B) plus the algebraic invariants — the
@@ -14,16 +16,18 @@ import graft.core.{Distance, Fknn, Knn}
   */
 class FknnSpec extends SparkSpecBase {
 
+  private val schema = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("v", ArrayType(DoubleType)),
+    StructField("label", IntegerType)))
+
+  private def df(rows: Seq[Row]) =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+
   /** FIXTURES.md §B toy2d, min-max normalized by /10 per the KEEL header
     * ranges [0,10]. Classes: A→0, B→1.
     */
   private def fixture: (DataFrame, DataFrame) = {
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("v", ArrayType(DoubleType)),
-      StructField("label", IntegerType)))
-    def df(rows: Seq[Row]) =
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
     val train = df(Seq(
       Row(0L, Array(0.10, 0.10), 0), // A
       Row(1L, Array(0.15, 0.12), 0), // A
@@ -80,7 +84,7 @@ class FknnSpec extends SparkSpecBase {
       .select(col("vec_id"), Distance.asDouble(col("embedding")).as("v"), col("label"))
       .filter(col("vec_id") < 150)
     val a = collectSet(Fknn.membershipInit(train, 5, 10))
-    val b = collectSet(Fknn.membershipInitChunked(train, 5, 10, blocks = 4))
+    val b = collectSet(Fknn.membershipInit(train, 5, 10, blocks = 4))
     assert(a === b)
   }
 
@@ -92,8 +96,8 @@ class FknnSpec extends SparkSpecBase {
     val mem = Fknn.membershipInit(train, 5, 10).persist()
     try {
       val global = collectSet(Fknn.classify(mem, train, queries, 5))
-      assert(collectSet(Fknn.classifyChunked(mem, train, queries, 5, blocks = 1)) === global)
-      assert(collectSet(Fknn.classifyChunked(mem, train, queries, 5, blocks = 3)) === global)
+      assert(collectSet(Fknn.classify(mem, train, queries, 5, blocks = 1)) === global)
+      assert(collectSet(Fknn.classify(mem, train, queries, 5, blocks = 3)) === global)
       assert(global.nonEmpty)
     } finally mem.unpersist()
   }
@@ -110,16 +114,44 @@ class FknnSpec extends SparkSpecBase {
     assert(b16k >= b64k && b16k >= 1)
     // the auto path must be output-invisible, exactly like manual chunking
     val manual = collectSet(Fknn.membershipInit(train, 5, 10))
-    assert(collectSet(Fknn.membershipInitChunked(train, 5, 10, blocks = -1)) === manual)
+    assert(collectSet(Fknn.membershipInit(train, 5, 10, blocks = -1)) === manual)
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), Distance.asDouble(col("embedding")).as("v"), col("label"))
     val tr = e.filter(col("vec_id") % 10 =!= 0 && col("vec_id") < 300)
     val q = e.filter(col("vec_id") % 10 === 0 && col("vec_id") < 300)
     val mem = Fknn.membershipInit(tr, 5, 10).persist()
     try {
-      assert(collectSet(Fknn.classifyChunked(mem, tr, q, 5, blocks = -1)) ===
+      assert(collectSet(Fknn.classify(mem, tr, q, 5, blocks = -1)) ===
         collectSet(Fknn.classify(mem, tr, q, 5)))
     } finally mem.unpersist()
+  }
+
+  test("blocked paths keep negative and null ids: each row lands in exactly one block") {
+    // `vec_id % n` is negative for negative ids, so a `% n === b` block
+    // split would drop them; `Knn.blockwise` uses pmod and puts null in 0
+    def vec(x: Double) = Array(math.sin(x * 0.37), math.cos(x * 0.53), (x % 7) / 7.0)
+    val train = df((-30 until 30).map(i => Row(i.toLong, vec(i), Math.floorMod(i, 3))))
+    val queries = df((-12 until 0).map(i => Row(i * 10L, vec(i + 0.5), 0)) :+
+      Row(null, vec(40.5), 0))
+    assert(collectSet(Fknn.membershipInit(train, 5, 3, blocks = 4)) ===
+      collectSet(Fknn.membershipInit(train, 5, 3)))
+    val mem = Fknn.membershipInit(train, 5, 3).persist()
+    try {
+      val global = collectSet(Fknn.classify(mem, train, queries, 5))
+      assert(global.size === 13 && global.exists(_.head == null))
+      assert(collectSet(Fknn.classify(mem, train, queries, 5, blocks = 3)) === global)
+    } finally mem.unpersist()
+    def viaMl(n: Int) = collectSet(new FknnClassifier().setK(5).setNClasses(3)
+      .setNumIterations(n).fit(train).transform(queries).select(col("vec_id"), col("predicted")))
+    val chunked = viaMl(3)
+    assert(chunked.size === 12, "every negative-id query is classified")
+    assert(chunked === viaMl(1))
+    // blocks = 0 is rejected up front, not as an empty union
+    intercept[IllegalArgumentException] {
+      AnnSearch.pqSearchChunked(queries.select(col("vec_id").as("q_id"), col("v")),
+        train.select(col("vec_id").as("t_id"), col("v")),
+        train.select(col("vec_id").as("j"), col("v")), m = 1, k = 3, blocks = 0)
+    }
   }
 
   test("distType=l1 threads through both stages and changes the metric, not the shape") {

@@ -5,8 +5,9 @@ import java.nio.file.Files
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Pmod
 import org.apache.spark.sql.catalyst.plans.Cross
-import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, Union}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -83,14 +84,20 @@ class KeelAndMlSpec extends SparkSpecBase {
       e.filter(col("vec_id") % 10 === 0 && col("vec_id") < 300))
   }
 
-  /** Cross joins in a frame's analyzed plan: one per `Knn.pairwise`
-    * search, plus stage 1's class densify. */
   /** Cross joins plus block kNN searches: each is a query × train search
     * or the class densify. */
   private def crossJoins(df: DataFrame): Int =
     df.queryExecution.analyzed.collect {
       case j: Join if j.joinType == Cross => j
       case b: graft.plans.KnnBlock => b
+    }.size
+
+  /** `Knn.blockwise`'s split in a frame's analyzed plan: the union of the
+    * blocks and each block's `pmod` id filter. */
+  private def blockSplits(df: DataFrame): Int =
+    df.queryExecution.analyzed.collect {
+      case u: Union => u
+      case f: Filter if f.condition.exists(_.isInstanceOf[Pmod]) => f
     }.size
 
   test("spark.ml FknnClassifier pipeline ≡ direct Fknn calls") {
@@ -180,6 +187,20 @@ class KeelAndMlSpec extends SparkSpecBase {
         out.queryExecution.analyzed.treeString)
       assert(collectSet(out.select(col("vec_id").as("q_id"), col("predicted"))) === direct)
     }
+  }
+
+  test("blocks = 1 plans no block split; local FkNN searches each train block with KnnBlock") {
+    val (train, queries) = split()
+    val model = new FknnClassifier().setK(5).setNClasses(10).fit(train)
+    val mem = model.memberships
+    for (df <- Seq(Fknn.membershipInit(train, 5, 10), Fknn.classify(mem, train, queries, 5),
+        model.transform(queries)))
+      assert(blockSplits(df) === 0, df.queryExecution.analyzed.treeString)
+    assert(blockSplits(Fknn.classify(mem, train, queries, 5, blocks = 4)) > 0)
+    val local = Fknn.classifyLocal(mem, train, queries, 5, blocks = 4).queryExecution.analyzed
+    assert(local.collect { case b: graft.plans.KnnBlock => b }.size === 4, local.treeString)
+    assert(!local.exists { case j: Join => j.joinType == Cross; case _ => false },
+      local.treeString)
   }
 
   test("a model fitted inside Ckpt.scoped still transforms after the scope exits") {

@@ -61,7 +61,7 @@ class PlanAuditSpec extends SparkSpecBase {
     // markov: one-row renormalization total + state-count broadcasts
     "events_markov_stationary",
     // FkNN: the class-range frame (nClasses rows); the neighbour
-    // searches themselves plan as KnnBlock, except `_local`'s
+    // searches themselves, `_local`'s per-block ones too, plan as KnnBlock
     "fknn_classify", "fknn_classify_chunked", "fknn_classify_local",
     "fknn_membership_chunked", "fknn_membership_init",
     // hits: per-round one-row L1-normalization totals + node-count frame
