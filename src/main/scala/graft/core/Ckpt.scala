@@ -3,6 +3,7 @@ package graft.core
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftx.PlanBridge
 import org.apache.spark.storage.StorageLevel
 
 /** The ONE checkpoint seam for every iterative/fan-out lineage truncation
@@ -15,7 +16,8 @@ import org.apache.spark.storage.StorageLevel
   * analysis blows up exponentially (measured in `Dedup.connectedComponents`:
   * round walls 3.6 s → 11.7 s → driver OOM building the plan string at
   * sf0.1). Checkpointing replaces the subtree with a `LogicalRDD`, so
-  * every round plans against a constant-size tree.
+  * every round plans against a constant-size tree, and `truncate` gives
+  * that `LogicalRDD` its stored size as its size estimate.
   *
   * Why a seam: `localCheckpoint()` stores blocks on executors — fine on
   * local[n] and for tests, but NOT fault-tolerant: on a 1000-executor
@@ -152,13 +154,27 @@ object Ckpt {
     * when a checkpoint dir is configured on the SparkContext, else
     * `localCheckpoint()`. Both eager — iterative callers need the round
     * computed NOW, not re-planned inside next round's tree.
+    *
+    * The result's size estimate is its stored size: the checkpoint's
+    * block bytes (memory + disk) on the local path, the cached frame's
+    * block bytes on the reliable one, read from the block manager master
+    * (no job). Spark would otherwise keep the estimate of the plan the
+    * checkpoint replaced, which compounds through checkpoints built on
+    * checkpoints (a 500-row score table over a membership checkpoint
+    * estimated 2.3·10²⁵ bytes) and made the planner add a runtime bloom
+    * filter and a sort-merge join against tables small enough to
+    * broadcast.
     */
   def truncate(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
       val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
       val out = cached.checkpoint()
+      val bytes = PlanBridge.cachedBytes(cached)
       cached.unpersist(blocking = false)
-      out
+      out.queryExecution.analyzed match {
+        case lr: LogicalRDD => PlanBridge.sized(out.sparkSession, lr, bytes)
+        case _ => out
+      }
     } else {
       val out = df.localCheckpoint()
       out.queryExecution.analyzed match {
@@ -168,9 +184,9 @@ object Ckpt {
             case Some(buf) :: _ => buf += lr.rdd
             case _ => ()
           }
-        case _ => ()
+          PlanBridge.sized(out.sparkSession, lr, PlanBridge.storedBytes(lr.rdd))
+        case _ => out
       }
-      out
     }
 
   /** Release the storage behind a frame previously returned by

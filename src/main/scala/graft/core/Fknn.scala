@@ -61,7 +61,8 @@ object Fknn {
     * ergonomic (compute #iterations from the data size) re-expressed
     * over Catalyst statistics instead of HDFS block counts. With parquet
     * scans the estimate is the file-size-based `sizeInBytes` (column
-    * pruning included), so blocks grows linearly with the SF; the 64 MiB
+    * pruning included) and for a `Ckpt.truncate` result its stored size,
+    * so blocks grows linearly with the SF; the 64 MiB
     * default budget is the classic broadcast comfort zone (well under
     * Spark's 8 GB hard cap, small enough that `blocks` concurrent block
     * results spill nothing). Always ≥ 1 — tiny inputs run unchunked.

@@ -60,27 +60,36 @@ object Knn {
     * at real scale inputs already have ≥ that many partitions and this is a
     * no-op (no shuffle added).
     *
-    * The split-count estimate is LOGICAL-stats-based (sizeInBytes /
-    * maxPartitionBytes ≈ the file-source split count): touching `df.rdd`
-    * here would force a physical plan outside AQE on every call — this
-    * keeps AQE the sole owner of the physical plan. Two cases the size
-    * estimate cannot see:
-    *  - an EXPLICIT `coalesce(n)`/`repartition(n)` with small n in the
-    *    caller's lineage squeezes a big frame onto few cores while the
-    *    stats still say "big" — those are logical nodes, so they ARE
-    *    detectable, and we re-spread when one caps below target;
-    *  - physically unsplittable opaque inputs (RDD-backed frames,
-    *    non-splittable codecs) are invisible at the logical layer —
-    *    out of contract; the engine's inputs are splittable file
-    *    sources (parquet throughout).
+    * The partition count is read from the logical plan, not `df.rdd`:
+    * touching `df.rdd` here would force a physical plan outside AQE on
+    * every call — this keeps AQE the sole owner of the physical plan.
+    *  - When every leaf is a `LogicalRDD` (a `Ckpt.truncate` result, an
+    *    RDD-backed frame), the leaves report their real partition counts,
+    *    and their sum is the count. A checkpoint's size estimate is its
+    *    stored size, so the size rule below would re-spread every small
+    *    checkpoint on every call, however many partitions it has.
+    *  - Otherwise the count is estimated as sizeInBytes /
+    *    maxPartitionBytes ≈ the file-source split count.
+    *
+    * An EXPLICIT `coalesce(n)`/`repartition(n)` with small n in the
+    * caller's lineage squeezes a big frame onto few cores while the
+    * stats still say "big" — those are logical nodes, so they ARE
+    * detectable, and we re-spread when one caps below target.
+    * Physically unsplittable opaque inputs (non-splittable codecs) are
+    * invisible at the logical layer — out of contract; the engine's
+    * inputs are splittable file sources (parquet throughout).
     */
   private[graft] def ensureParallelism(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.execution.LogicalRDD
     val sess = df.sparkSession
     val target = sess.sparkContext.defaultParallelism
-    val maxPartBytes = sess.sessionState.conf.filesMaxPartitionBytes
     val plan = df.queryExecution.optimizedPlan
-    val estParts = plan.stats.sizeInBytes / maxPartBytes + 1
-    if (cappedBelowTarget(plan, target) || estParts < target) df.repartition(target) else df
+    val leaves = plan.collectLeaves()
+    val rdds = leaves.collect { case lr: LogicalRDD => lr.rdd }
+    val parts =
+      if (rdds.size == leaves.size) rdds.map(r => BigInt(r.getNumPartitions)).sum
+      else plan.stats.sizeInBytes / sess.sessionState.conf.filesMaxPartitionBytes + 1
+    if (cappedBelowTarget(plan, target) || parts < target) df.repartition(target) else df
   }
 
   /** All query×train pairs with distance.

@@ -3,9 +3,12 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.PlanBridge
 
-import graft.core.Ckpt
+import graft.core.{Ckpt, Distance, Fknn}
 
 /** The checkpoint seam: `Ckpt.truncate` must use reliable `checkpoint()`
   * exactly when a checkpoint dir is configured, and the iterative
@@ -13,6 +16,48 @@ import graft.core.Ckpt
   * changes no values — only lineage and fault tolerance).
   */
 class CkptSpec extends SparkSpecBase {
+
+  private def rddOf(df: DataFrame): org.apache.spark.rdd.RDD[_] =
+    df.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.rdd }.get
+
+  private def estimate(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
+
+  /** `n` rows of (id, 8 doubles). */
+  private def vectors(s: SparkSession, n: Int): DataFrame =
+    s.range(n).select(col("id"), array((1 to 8).map(i => sin(col("id") * i)): _*).as("v"))
+
+  /** Within 8× either way: a local checkpoint stores deserialized rows,
+    * about 70 bytes of object overhead a row above the payload. */
+  private def assertNear(est: BigInt, bytes: BigInt, what: String): Unit = {
+    info(s"$what: estimate $est, $bytes bytes")
+    assert(est > 0 && est <= bytes * 8 && est * 8 >= bytes, s"$what: estimate $est vs $bytes bytes")
+  }
+
+  /** Stage 2's score table over a fitted membership checkpoint: a
+    * checkpoint of a frame that reads a checkpoint. Its estimate must be
+    * near its own stored size, not the product of the join's inputs. */
+  private def assertScoresDoNotCompound(s: SparkSession): Unit = {
+    val e = Tables.embeddings(s, sfDir)
+      .select(col("vec_id"), Distance.asDouble(col("embedding")).as("v"), col("label"))
+    val train = e.filter(col("vec_id") % 10 =!= 0 && col("vec_id") < 300)
+    val queries = e.filter(col("vec_id") % 10 === 0 && col("vec_id") < 300)
+    val mem = Fknn.fit(train, 5, 10)
+    val scores = Ckpt.truncate(Fknn.classifyScores(mem, train, queries, 5))
+    // both are (id BIGINT, class INT, value DOUBLE): 20 payload bytes a row
+    assertNear(estimate(mem), BigInt(mem.count() * 20), "memberships")
+    assertNear(estimate(scores), BigInt(scores.count() * 20), "scores")
+    Seq(scores, mem).foreach(Ckpt.release)
+  }
+
+  test("a local checkpoint's estimate is its stored block bytes, and does not compound") {
+    val ck = Ckpt.truncate(vectors(spark, 20000))
+    assert(estimate(ck) === PlanBridge.storedBytes(rddOf(ck)))
+    // 72 payload bytes a row
+    assertNear(estimate(ck), BigInt(20000 * 72), "vectors")
+    assert(Ckpt.isTruncated(ck) && ck.queryExecution.analyzed.isInstanceOf[LogicalRDD])
+    Ckpt.release(ck)
+    assertScoresDoNotCompound(spark)
+  }
 
   test("truncate without a checkpoint dir takes the local path") {
     import spark.implicits._
@@ -28,12 +73,6 @@ class CkptSpec extends SparkSpecBase {
     // assertions target the SPECIFIC frames this test creates — a global
     // pinned-count baseline is flaky because the ContextCleaner reclaims
     // earlier suites' frames asynchronously mid-test
-    def rddOf(df: org.apache.spark.sql.DataFrame): org.apache.spark.rdd.RDD[_] =
-      df.queryExecution.analyzed
-        .collectLeaves()
-        .collectFirst { case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd }
-        .get
-
     // pure-lazy build: scoped must NOT materialize — the result stays a
     // plain plan (count-prunable)
     val lazyRes = Ckpt.scoped {
@@ -110,6 +149,14 @@ class CkptSpec extends SparkSpecBase {
       // pinned once truncate returns
       assert(s2.sparkContext.getPersistentRDDs.isEmpty,
         "Ckpt.truncate leaked a persisted RDD on the reliable path")
+
+      // the estimate is near the checkpoint's stored bytes, its files
+      val ck = Ckpt.truncate(vectors(s2, 20000))
+      def bytesUnder(f: File): Long =
+        if (f.isDirectory) f.listFiles.map(bytesUnder).sum else f.length
+      val files = new File(new java.net.URI(rddOf(ck).getCheckpointFile.get))
+      assertNear(estimate(ck), BigInt(bytesUnder(files)), "reliable vectors")
+      assertScoresDoNotCompound(s2)
 
       // full iterative operators on the reliable path match the local path
       val reliableCc = graft.llm.Dedup.connectedComponents(pairs)

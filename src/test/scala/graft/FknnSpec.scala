@@ -126,6 +126,20 @@ class FknnSpec extends SparkSpecBase {
     } finally mem.unpersist()
   }
 
+  test("numIterations = -1 on a checkpointed input sizes blocks from the stored bytes") {
+    // a join checkpoint: Spark's estimate of the join it replaced is the
+    // product of its sides' sizes, hundreds of GB for these few MB
+    val n = 20000
+    val vecs = spark.range(n).select(col("id").as("vec_id"),
+      array((1 to 16).map(i => sin(col("id") * i)): _*).as("v"))
+    val labels = spark.range(n).select(col("id").as("vec_id"), (col("id") % 10).cast("int").as("label"))
+    val ck = graft.core.Ckpt.truncate(vecs.join(labels, "vec_id").repartition(4))
+    assert(Fknn.autoBlocks(ck) === 1)
+    val blocked = Knn.blockwise(ck, "vec_id", -1)(identity)
+    assert(blocked eq ck, blocked.queryExecution.analyzed.treeString)
+    graft.core.Ckpt.release(ck)
+  }
+
   test("blocked paths keep negative and null ids: each row lands in exactly one block") {
     // `vec_id % n` is negative for negative ids, so a `% n === b` block
     // split would drop them; `Knn.blockwise` uses pmod and puts null in 0

@@ -189,6 +189,28 @@ class KeelAndMlSpec extends SparkSpecBase {
     }
   }
 
+  test("transform plans no runtime bloom filter and no sort-merge join against the memberships") {
+    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val (train, queries) = split()
+    val model = new FknnClassifier().setK(5).setNClasses(10).fit(train)
+    val out = model.transform(queries)
+    out.collect()
+    val plan = out.queryExecution.executedPlan
+    val nodes = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(plan) { case p => p }
+    val bloom = nodes.filter(_.expressions.exists(_.exists {
+      case _: BloomFilterMightContain | _: BloomFilterAggregate => true
+      case _ => false
+    }))
+    assert(bloom.isEmpty, plan.toString)
+    val smjOnTId = nodes.collect {
+      case j: SortMergeJoinExec if j.leftKeys.exists(_.references.exists(_.name == "t_id")) => j
+    }
+    assert(smjOnTId.isEmpty, plan.toString)
+  }
+
   test("blocks = 1 plans no block split; local FkNN searches each train block with KnnBlock") {
     val (train, queries) = split()
     val model = new FknnClassifier().setK(5).setNClasses(10).fit(train)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.core.{Distance, Knn}
+import graft.core.{Ckpt, Distance, Knn}
 
 /** The bounded-heap TopK aggregator against its window-function executable
   * spec, plus the physical-plan properties the 100×-scale design depends
@@ -27,6 +27,20 @@ class KnnSpec extends SparkSpecBase {
     // an adequate explicit repartition also clears it
     val respread = squeezed.repartition(target)
     assert(!cappedBelowTarget(respread.queryExecution.optimizedPlan, target))
+  }
+
+  test("a checkpoint train side is re-spread by its partition count, not its size") {
+    val target = spark.sparkContext.defaultParallelism
+    val q = emb.filter(col("vec_id") % 10 === 0)
+    def respreads(t: org.apache.spark.sql.DataFrame) =
+      Knn.knn(q, t, 5).queryExecution.executedPlan.toString.contains("RoundRobinPartitioning")
+    val wide = Ckpt.truncate(emb.repartition(target))
+    val narrow = Ckpt.truncate(emb.coalesce(1))
+    try {
+      assert(wide.rdd.getNumPartitions === target && narrow.rdd.getNumPartitions === 1)
+      assert(!respreads(wide), "a checkpoint with the session's parallelism is re-spread")
+      assert(respreads(narrow), "a one-partition checkpoint is not re-spread")
+    } finally Seq(wide, narrow).foreach(Ckpt.release)
   }
 
   private def emb = Tables.embeddings(spark, sfDir)
