@@ -34,7 +34,7 @@ object Bench {
     System.gc() // warmup allocation debt collected before anything is timed
   }
 
-  /** Cold-build accounting (round 11, VERDICT r10 #5): ten shared
+  /** Cold-build accounting (round 11, VERDICT r10 #5): nine shared
     * frames (`graft.core.SharedFrames`) are built once per (session,
     * dir), so their dependents' per-query numbers are warm-hit reads and
     * the build cost would otherwise vanish into whichever query ran

@@ -33,40 +33,34 @@ object SparkEntry {
   private val K = 5
   private val NClasses = 10
 
-  /** Stage 1 over the embeddings train split, fitted once per (session,
-    * data dir): read by `fknn_classify`, `_chunked`, `_local` and `scores`. */
+  /** Stage 1 over the embeddings train split, `Fknn.fit`'s table fitted
+    * once per (session, data dir): read by `fknn_classify`, `_chunked`,
+    * `_local` and `scores`. */
   private def memShared(s: SparkSession, d: String): DataFrame =
     SharedFrames(s, d, "memberships") { Fknn.fit(embTrain(s, d), K, NClasses) }
 
-  /** Shared classify-scores materialization for the metrics family
-    * (round 10, VERDICT r9 #1). Every metric row — accuracy, confusion
-    * matrix, class report, AUC, PR-AUC, logloss, brier, kappa, mcc,
-    * calibration — consumes the SAME stage-2 score table (q_id, class, u);
-    * round 9 had each lambda rebuild the O(N²) classify pipeline from scratch
-    * (family 2.76 s → 6.13 s driver after the per-metric eager persist
-    * fix). Here stage 2 runs ONCE per (session, data dir) over the shared
-    * membership table, and the memo retains the checkpointed result —
-    * bounded at |queries| × nClasses rows (≈ 6 k at sf0.1).
+  /** Shared stage-2 scores for the metrics family (round 10, VERDICT r9
+    * #1), wide (q_id, u): every metric row reads the SAME vote, where
+    * round 9 had each rebuild the O(N²) classify pipeline (family 2.76 s →
+    * 6.13 s driver). Stage 2 runs ONCE per (session, data dir) over the
+    * shared fitted table; the memo keeps the checkpoint, |queries| rows.
     */
   private def scoresShared(s: SparkSession, d: String): DataFrame =
     SharedFrames(s, d, "scores") {
-      Ckpt.truncate(Fknn.classifyScores(memShared(s, d), embTrain(s, d), embQueries(s, d), K))
+      Ckpt.truncate(Fknn.scores(memShared(s, d), embQueries(s, d), K))
     }
 
-  /** Predictions derived from the shared score frame —
-    * `predictedFromScores(classifyScores(...))` ≡ `classifyPipeline(...)`
-    * by construction (Fknn.classify IS that composition), so every
-    * prediction-consuming metric row hash-matches its unchanged oracle.
-    * Memoized + truncated like the scores (five consumers would each
-    * re-run the argmax window otherwise); |queries| rows.
-    */
+  /** The shared scores' long view (q_id, class, u). */
+  private def scoreRows(s: SparkSession, d: String): DataFrame =
+    Fknn.scoreRows(scoresShared(s, d))
+
+  /** Predictions projected from the shared scores by `Fknn.predict`'s
+    * argmax rule, so every prediction row matches its unchanged oracle. */
   private def predShared(s: SparkSession, d: String): DataFrame =
-    SharedFrames(s, d, "pred") {
-      Ckpt.truncate(Fknn.predictedFromScores(scoresShared(s, d)))
-    }
+    Fknn.argmax(scoresShared(s, d))
 
-  /** Release the shared membership, score and prediction frames. */
-  def releaseShared(): Unit = SharedFrames.release("pred", "scores", "memberships")
+  /** Release the shared fitted table and scores. */
+  def releaseShared(): Unit = SharedFrames.release("scores", "memberships")
 
   // ---- DuckDB SQL fragments (shared across oracle twins) ---------------
 
@@ -216,7 +210,7 @@ object SparkEntry {
     // #23 fknn_classify (CORE): the flagship two-stage pipeline — stage 2
     // over the shared stage-1 table, fitted once (SURVEY §4.1 row 5).
     "fknn_classify" -> { (s, d) =>
-      Fknn.classify(memShared(s, d), embTrain(s, d), embQueries(s, d), K)
+      Fknn.predict(memShared(s, d), embQueries(s, d), K)
     },
 
     // #23c fknn_classify_chunked (CORE): stage 2 through the kNN-IS
@@ -225,14 +219,14 @@ object SparkEntry {
     // sets too large for one broadcast). Same oracle as #23: chunking
     // must be output-invisible, mirroring what #22b proves for stage 1.
     "fknn_classify_chunked" -> { (s, d) =>
-      Fknn.classify(memShared(s, d), embTrain(s, d), embQueries(s, d), K, blocks = 4)
+      Fknn.predict(memShared(s, d), embQueries(s, d), K, blocks = 4)
     },
 
     // #23b fknn_classify_local (CORE): the reference's version=local
     // approximate variant (SURVEY §3.1 EP-3) — per-block local top-k,
     // vote over the union of block candidates; 4 deterministic id-blocks.
     "fknn_classify_local" -> { (s, d) =>
-      Fknn.classifyLocal(memShared(s, d), embTrain(s, d), embQueries(s, d), K, blocks = 4)
+      Fknn.classifyLocal(memShared(s, d), embQueries(s, d), K, blocks = 4)
     },
 
     // ingest_stream (round 14, VERDICT r13 #3): the streamed
@@ -266,9 +260,9 @@ object SparkEntry {
     // cosine neighbors (rationale at RunEmbed.embedNnQuery)
     "graph_embed_nn" -> graft.run.RunEmbed.embedNnQuery,
 
-    // The ten rows below all read `scoresShared`/`predShared` — stage 2
-    // runs once per (session, dir) over `memShared` and each metric is
-    // a small aggregate over the checkpointed 6 k-row score frame
+    // The ten rows below all read `scoresShared` — stage 2 runs once per
+    // (session, dir) over `memShared` and each metric is a small
+    // aggregate over a view of the checkpointed score frame
     // (round 10, VERDICT r9 #1; family was 6.13 s driver at r9 with five
     // independent pipeline rebuilds).
 
@@ -286,14 +280,14 @@ object SparkEntry {
     // (class 0) over the fuzzy score table — rank-statistic AUC with
     // averaged ties.
     "auc_binary" -> { (s, d) =>
-      Metrics.aucBinary(scoresShared(s, d).filter(col("class") === 0),
+      Metrics.aucBinary(scoreRows(s, d).filter(col("class") === 0),
         emb(s, d).select("vec_id", "label"), posLabel = 0)
     },
 
     // #20e metrics_pr_auc (EXT): binned average precision over the same
     // class-0 score slice — the imbalanced-class companion to #20b.
     "metrics_pr_auc" -> { (s, d) =>
-      Metrics.prAucBinned(scoresShared(s, d).filter(col("class") === 0),
+      Metrics.prAucBinned(scoreRows(s, d).filter(col("class") === 0),
         emb(s, d).select("vec_id", "label"), posLabel = 0)
     },
 
@@ -306,12 +300,12 @@ object SparkEntry {
     // probabilities — the metric a training-data pipeline alerts on when
     // a classifier drifts but accuracy hasn't moved yet.
     "metrics_logloss" -> { (s, d) =>
-      Metrics.logLoss(scoresShared(s, d), emb(s, d).select("vec_id", "label"))
+      Metrics.logLoss(scoreRows(s, d), emb(s, d).select("vec_id", "label"))
     },
 
     // #20e metrics_brier (EXT): squared-error proper score, same frame.
     "metrics_brier" -> { (s, d) =>
-      Metrics.brier(scoresShared(s, d), emb(s, d).select("vec_id", "label"))
+      Metrics.brier(scoreRows(s, d), emb(s, d).select("vec_id", "label"))
     },
 
     // #20f metrics_kappa (EXT): chance-corrected agreement in exact
@@ -330,7 +324,7 @@ object SparkEntry {
     // time". Confidence rounded 6dp BEFORE binning so bin edges compare
     // identical doubles cross-engine.
     "metrics_calibration" -> { (s, d) =>
-      Metrics.calibrationBins(scoresShared(s, d), emb(s, d).select("vec_id", "label"))
+      Metrics.calibrationBins(scoreRows(s, d), emb(s, d).select("vec_id", "label"))
     },
   )
 

@@ -79,7 +79,7 @@ object Ckpt {
     * rounds, power iterations) cannot leak per-round blocks through ANY
     * of its query rows: bench_detail r13 measured 36 rows leaving more
     * than the ambient 6 blocksets, each a hand-missed tail. Frames made
-    * through `untracked` (`SharedFrames` builds, `Fknn.fit`'s membership
+    * through `untracked` (`SharedFrames` builds, `Fknn.fit`'s fitted
     * table) are exempt — they outlive the query by design and
     * their owner frees them. Only meaningful around builders that
     * checkpoint internally: wrapping a pure lazy scan would just

@@ -194,21 +194,22 @@ object Metrics {
       out
     }
 
-  /** An input that IS a bare checkpoint (or a projection of one — the
-    * shapes `Ckpt.truncate` produces) is already materialized storage:
-    * re-persisting it buys nothing and costs a cache round-trip per
-    * metric (round 10 — the shared metrics materialization feeds every
-    * scalar metric from one checkpointed score frame, so this skip is
-    * the common path there; expensive lazy pipelines still get the
-    * persist). Same narrow plan match as `Ckpt.release`.
+  /** An input that IS a bare checkpoint, or a row-wise view of one (the
+    * shapes `Ckpt.truncate` produces, and the long score view that
+    * explodes a checkpointed wide score table), is already materialized
+    * storage: re-persisting it buys nothing and costs a cache round-trip
+    * per metric (round 10 — the shared metrics materialization feeds
+    * every scalar metric from one checkpointed score frame, so this skip
+    * is the common path there; expensive lazy pipelines still get the
+    * persist).
     */
-  private def isCheckpointBacked(df: DataFrame): Boolean =
-    df.queryExecution.analyzed match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => true
-      case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
-        p.child.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-      case _ => false
+  private def isCheckpointBacked(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, Project}
+    !df.queryExecution.analyzed.exists {
+      case _: Project | _: Generate | _: org.apache.spark.sql.execution.LogicalRDD => false
+      case _ => true
     }
+  }
 
   /** Multi-class log loss −mean(ln p_label) over normalized fuzzy
     * scores, clamped at 1e-15 (the sklearn convention — a zero
@@ -221,8 +222,8 @@ object Metrics {
     * query's true class — the truth join is inner, so a (q_id, label)
     * pair absent from the score table silently drops that query from
     * the mean instead of clamp-penalizing it as sklearn does. The wired
-    * FkNN pipeline densifies all classes (membershipFromNn's class
-    * cross join), so this holds by construction there; direct library
+    * FkNN pipeline scores every class (each u vector holds nClasses
+    * entries), so this holds by construction there; direct library
     * callers with sparse score tables must densify first (join the
     * class range with u = 0) or accept dropped-query semantics.
     */

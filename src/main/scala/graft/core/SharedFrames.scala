@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** The cross-query memo for shared frames: a value several declared rows
-  * consume (FkNN memberships, scores and predictions, dedup clusters, graph
+  * consume (the FkNN fitted table and its scores, dedup clusters, graph
   * edges and walks, ingest pairs, the subword vocab, the BPE merges) is
   * built once per (session, data dir, name) and read by every later caller.
   *

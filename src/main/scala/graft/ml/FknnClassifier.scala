@@ -12,10 +12,11 @@ import graft.core.Fknn
 /** spark.ml Pipeline wrapper for the FkNN core — the "MLlib pipeline +
   * DataFrame operations" surface named in BASELINE.json. `fit` is eager,
   * as spark.ml estimators are: it runs stage 1 (Keller class-membership
-  * degrees over train) once and materializes the table through
-  * `Fknn.fit`; `transform` runs only stage 2 against any query
-  * frame. This is the reference's fit-once serving shape (SURVEY §4.1
-  * row 5): one train-side pass amortised over every query batch.
+  * degrees over train) once and materializes `Fknn.fit`'s table, each
+  * train row with its membership vector; `transform` runs only stage 2,
+  * searching that table, against any query frame. This is the
+  * reference's fit-once serving shape (SURVEY §4.1 row 5): one
+  * train-side pass amortised over every query batch.
   *
   * Parameter parity with the reference's CLI surface (SURVEY §3.1
   * [LINEAGE]): `k`, `nClasses`, plus `version` ("global" exact /
@@ -51,9 +52,7 @@ trait FknnParams extends Params {
   def getVersion: String = $(version)
   def getNumIterations: Int = $(numIterations)
   def getDistType: String = $(distType)
-  protected def distFn: Fknn.Dist =
-    if (getDistType == "l1") graft.functions.ArrayDistance.l1
-    else graft.functions.ArrayDistance.l2
+  protected def distFn: Fknn.Dist = Fknn.distType(getDistType)
   setDefault(k -> 5, nClasses -> 10, version -> "global", numIterations -> 1,
     distType -> "l2")
 
@@ -73,17 +72,16 @@ class FknnClassifier(override val uid: String) extends Estimator[FknnModel] with
   def setNumIterations(value: Int): this.type = set(numIterations, value)
   def setDistType(value: String): this.type = set(distType, value)
 
-  /** Runs stage 1 now through `Fknn.fit`. The model owns the membership
-    * checkpoint (a local one, or a reliable one when a checkpoint dir is
-    * set), so a model fitted inside a `Ckpt.scoped` query still
+  /** Runs stage 1 now through `Fknn.fit`. The model owns the fitted
+    * table's checkpoint (a local one, or a reliable one when a checkpoint
+    * dir is set), so a model fitted inside a `Ckpt.scoped` query still
     * transforms after the scope ends. ContextCleaner frees the local
     * blocks once the model is unreachable; reliable checkpoint files
     * follow the file-lifetime rule in `Ckpt`'s scaladoc.
     */
   override def fit(dataset: Dataset[_]): FknnModel = {
     val train = dataset.select(col("vec_id"), col("v"), col("label"))
-    val model = new FknnModel(uid, train,
-      Fknn.fit(train, getK, getNClasses, getNumIterations, distFn))
+    val model = new FknnModel(uid, Fknn.fit(train, getK, getNClasses, getNumIterations, distFn))
     copyValues(model.setParent(this))
   }
 
@@ -91,45 +89,46 @@ class FknnClassifier(override val uid: String) extends Estimator[FknnModel] with
   override def copy(extra: ParamMap): FknnClassifier = defaultCopy(extra)
 }
 
-/** A fitted FkNN classifier: the train frame stage 2 searches, and the
-  * stage-1 membership table. After `fit` that table is a materialized
-  * checkpoint (after `FknnModel.load`, a parquet scan), so `transform`
-  * never recomputes stage 1.
+/** A fitted FkNN classifier: `Fknn.fit`'s table, each train row
+  * (vec_id, v, label) with its stage-1 membership vector u. Stage 2
+  * searches that table and reads u from it. After `fit` the table is a
+  * materialized checkpoint (after `FknnModel.load`, a plan over parquet
+  * scans), so `transform` never recomputes stage 1.
   */
 class FknnModel(
     override val uid: String,
-    private val train: DataFrame,
-    val memberships: DataFrame)
+    val fitted: DataFrame)
   extends Model[FknnModel] with FknnParams {
 
   override def transform(dataset: Dataset[_]): DataFrame = {
     val queries = dataset.select(col("vec_id"), col("v"), col("label"))
     val n = getNumIterations
     val pred = getVersion match {
-      case "local" => Fknn.classifyLocal(memberships, train, queries, getK,
+      case "local" => Fknn.classifyLocal(fitted, queries, getK,
         blocks = if (n == 1) 2 else n, dist = distFn)
-      case "global" => Fknn.classify(memberships, train, queries, getK, blocks = n,
-        dist = distFn)
+      case "global" => Fknn.predict(fitted, queries, getK, blocks = n, dist = distFn)
     }
     dataset.toDF().join(pred.withColumnRenamed("q_id", "vec_id"), "vec_id")
   }
 
   override def transformSchema(schema: StructType): StructType = validate(schema)
   override def copy(extra: ParamMap): FknnModel =
-    copyValues(new FknnModel(uid, train, memberships)).setParent(parent)
+    copyValues(new FknnModel(uid, fitted)).setParent(parent)
 
   /** Persist the fitted model — fit once, serve later (round 9, the
     * `saveIvfIndex` discipline applied to the classifier): the train
-    * frame and the stage-1 membership table as parquet plus the params
-    * as one JSON row. Parquet/JSON via Spark writers, so the model
+    * rows (vec_id, v, label) and the long membership view
+    * (vec_id, class, membership) as parquet plus the params as one JSON
+    * row. Parquet/JSON via Spark writers, so the model
     * round-trips on any storage a cluster can reach (object store,
     * HDFS), not just the local FS.
     */
   def save(path: String): Unit = {
-    val spark = train.sparkSession
+    val spark = fitted.sparkSession
     import spark.implicits._
-    train.write.mode("overwrite").parquet(s"$path/train")
-    memberships.write.mode("overwrite").parquet(s"$path/memberships")
+    fitted.select(col("vec_id"), col("v"), col("label"))
+      .write.mode("overwrite").parquet(s"$path/train")
+    Fknn.memberships(fitted).write.mode("overwrite").parquet(s"$path/memberships")
     Seq((uid, getK, getNClasses, getVersion, getNumIterations, getDistType))
       .toDF("uid", "k", "nClasses", "version", "numIterations", "distType")
       .coalesce(1).write.mode("overwrite").json(s"$path/params")
@@ -143,16 +142,16 @@ class FknnModel(
 }
 
 object FknnModel {
-  /** Load a model previously written by `FknnModel.save`. The returned
-    * frames are lazy over the parquet files — `transform` composes
-    * against them exactly as against the fit-time frames
+  /** Load a model previously written by `FknnModel.save`, by this
+    * version or an earlier one (the files are the same). The fitted table
+    * is `Fknn.widen` of the two parquet directories, lazy — `transform`
+    * composes against it exactly as against the fit-time table
     * (KeelAndMlSpec pins save → load → transform ≡ the original).
     */
   def load(spark: SparkSession, path: String): FknnModel = {
     val p = spark.read.json(s"$path/params").head()
     new FknnModel(p.getAs[String]("uid"),
-      spark.read.parquet(s"$path/train"),
-      spark.read.parquet(s"$path/memberships"))
+      Fknn.widen(spark.read.parquet(s"$path/memberships"), spark.read.parquet(s"$path/train")))
       .withParams(p.getAs[Long]("k").toInt, p.getAs[Long]("nClasses").toInt,
         p.getAs[String]("version"), p.getAs[Long]("numIterations").toInt,
         p.getAs[String]("distType"))

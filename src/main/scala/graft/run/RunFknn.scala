@@ -20,14 +20,14 @@ import graft.core.{Ckpt, Distance, Fknn, Metrics}
   *   [version=global|chunked|local] [blocks=4|-1]
   * ```
   *
-  * `chunked` runs `Fknn.classify` with the query side split into
+  * `chunked` runs `Fknn.predict` with the query side split into
   * `blocks` kNN-IS chunks, `local` runs `Fknn.classifyLocal` over
   * `blocks` train blocks, `global` ignores `blocks`; both splits are
   * `Knn.blockwise`'s. `blocks = -1` auto-sizes the count from Catalyst
-  * statistics (`Fknn.autoBlocks` — the reference's
+  * statistics (`Knn.autoBlocks` — the reference's
   * `numIterations = -1`). Stages mirror the reference run: stage 1 =
-  * Keller membership init over train (materialized by `Fknn.fit`, the
-  * reference's cache of the fuzzified train set), stage 2 = the fuzzy
+  * Keller membership init over train (the table `Fknn.fit` materializes,
+  * the reference's cache of the fuzzified train set), stage 2 = the fuzzy
   * classify through the chosen physical version, then the metric
   * read-outs. Timings are per-stage because each stage is forced
   * eagerly — exactly the boundaries the reference reports [LINEAGE].
@@ -46,12 +46,7 @@ object RunFknn {
   /** Run the full pipeline, write `report.txt` + `predictions/` under
     * `cfg.outDir`, and return the report text (spec hook). */
   def run(spark: SparkSession, cfg: Config): String = {
-    val dist: Fknn.Dist = cfg.distType match {
-      case "l2" => graft.functions.ArrayDistance.l2
-      case "l1" => graft.functions.ArrayDistance.l1
-      case other => throw new IllegalArgumentException(
-        s"distType must be l2 or l1, got $other")
-    }
+    val dist = Fknn.distType(cfg.distType)
     val e = graft.Tables.embeddings(spark, cfg.sfDir)
       .select(col("vec_id"), Distance.asDouble(col("embedding")).as("v"), col("label"))
     val queries = e.filter(col("vec_id") % 10 === 0)
@@ -59,16 +54,15 @@ object RunFknn {
     val truth = e.select(col("vec_id"), col("label"))
 
     val stages = new Stages
-    // stage 1 — membership init, materialized by fit (released at end)
-    val (mem, t1) = Stages.timed { Fknn.fit(train, cfg.k, cfg.nClasses, dist = dist) }
+    // stage 1 — the fitted table, materialized by fit (released at end)
+    val (fitted, t1) = Stages.timed { Fknn.fit(train, cfg.k, cfg.nClasses, dist = dist) }
     // stage 2 — classify through the declared physical version
     val pred = stages.frame("stage2_classify") {
       cfg.version match {
-        case "global" => Fknn.classify(mem, train, queries, cfg.k, dist = dist)
-        case "chunked" => Fknn.classify(mem, train, queries, cfg.k,
-          blocks = cfg.blocks, dist = dist)
-        case "local" => Fknn.classifyLocal(mem, train, queries, cfg.k,
-          blocks = cfg.blocks, dist = dist)
+        case "global" => Fknn.predict(fitted, queries, cfg.k, dist = dist)
+        case "chunked" => Fknn.predict(fitted, queries, cfg.k, blocks = cfg.blocks, dist = dist)
+        case "local" => Fknn.classifyLocal(fitted, queries, cfg.k, blocks = cfg.blocks,
+          dist = dist)
         case other => throw new IllegalArgumentException(
           s"version must be global, chunked or local, got $other")
       }
@@ -77,7 +71,7 @@ object RunFknn {
     // metrics — the reference's reported read-outs
     val (lines, t3) = Stages.timed {
       val acc = Metrics.accuracy(pred, truth).collect()(0).getDouble(0)
-      val scores0 = Fknn.classifyScores(mem, train, queries, cfg.k, dist)
+      val scores0 = Fknn.classifyScores(fitted, queries, cfg.k, dist)
         .filter(col("class") === 0)
       val aucRow = Metrics.aucBinary(scores0, truth, posLabel = 0).collect()(0)
       val auc = if (aucRow.isNullAt(0)) Double.NaN else aucRow.getDouble(0)
@@ -95,7 +89,7 @@ object RunFknn {
 
     graft.sources.Sinks.writePartitioned(
       pred, s"${cfg.outDir}/predictions", Seq("predicted"))
-    Ckpt.release(mem)
+    Ckpt.release(fitted)
     stages.release()
 
     val report =

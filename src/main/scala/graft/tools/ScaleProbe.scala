@@ -37,8 +37,9 @@ object ScaleProbe {
     val queries = e.filter(col("vec_id") % 10 === 0)
 
     // stage 1 forced through sum(membership), as perfbench forces
-    // `fknn.membership_s`: under a bare count() Catalyst drops the densify
-    // left-join (unique aggregate keys), so the O(N²) chain never runs
+    // `fknn.membership_s`: under a bare count() Catalyst could drop the
+    // neighbour-label left join (unique aggregate keys), so the O(N²)
+    // chain would never run
     var t0 = System.nanoTime()
     val memRows = Fknn.membershipInit(train, 5, 10)
       .agg(count(lit(1)), sum(col("membership"))).head().getLong(0)

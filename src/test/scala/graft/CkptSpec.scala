@@ -42,9 +42,12 @@ class CkptSpec extends SparkSpecBase {
     val train = e.filter(col("vec_id") % 10 =!= 0 && col("vec_id") < 300)
     val queries = e.filter(col("vec_id") % 10 === 0 && col("vec_id") < 300)
     val mem = Fknn.fit(train, 5, 10)
-    val scores = Ckpt.truncate(Fknn.classifyScores(mem, train, queries, 5))
-    // both are (id BIGINT, class INT, value DOUBLE): 20 payload bytes a row
-    assertNear(estimate(mem), BigInt(mem.count() * 20), "memberships")
+    val scores = Ckpt.truncate(Fknn.classifyScores(mem, queries, 5))
+    // the fitted table is (vec_id BIGINT, v dim DOUBLEs, label INT, u 10
+    // DOUBLEs); the long scores are (q_id BIGINT, class INT, u DOUBLE),
+    // 20 payload bytes a row
+    val dim = train.head().getSeq[Double](1).size
+    assertNear(estimate(mem), BigInt(mem.count() * (8 + 8 * dim + 4 + 80)), "fitted table")
     assertNear(estimate(scores), BigInt(scores.count() * 20), "scores")
     Seq(scores, mem).foreach(Ckpt.release)
   }

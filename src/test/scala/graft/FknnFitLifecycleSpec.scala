@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions.col
 
-import graft.core.{Distance, Fknn}
+import graft.core.{Ckpt, Distance, Fknn}
 
 /** Stage 1 is owned by `Fknn.fit`'s checkpoint, not by a cached plan: the
   * three declared FkNN rows and `Fknn.classifyPipeline` leave the
@@ -20,7 +20,9 @@ class FknnFitLifecycleSpec extends SparkSpecBase {
     val t = e.filter(col("vec_id") % 10 =!= 0)
     val mem = Fknn.membershipInit(t, 5, 10)
     val global = collectSet(Fknn.classify(mem, t, q, 5))
-    val local = collectSet(Fknn.classifyLocal(mem, t, q, 5, blocks = 4))
+    val fitted = Fknn.fit(t, 5, 10)
+    val local = collectSet(Fknn.classifyLocal(fitted, q, 5, blocks = 4))
+    Ckpt.release(fitted)
     assert(spark.sharedState.cacheManager.isEmpty)
 
     def row(name: String) = collectSet(SparkEntry.queries(name)(spark, sfDir))

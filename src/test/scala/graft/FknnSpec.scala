@@ -70,13 +70,17 @@ class FknnSpec extends SparkSpecBase {
     val train = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), Distance.asDouble(col("embedding")).as("v"), col("label"))
       .filter(col("vec_id") < 200)
-    val mem = Fknn.membershipInit(train, k = 5, nClasses = 10)
-    val sums = mem.groupBy("vec_id").agg(sum("membership").as("s"))
-      .filter(abs(col("s") - 1.0) > 1e-9)
-    assert(sums.count() === 0, "Σ_j u_j(x) must be 1.0 (Σ_j n_j = k)")
-    val own = mem.join(train.select(col("vec_id"), col("label")), "vec_id")
-      .filter(col("class") === col("label") && col("membership") < 0.51)
-    assert(own.count() === 0, "own-class membership must be ≥ 0.51")
+    // the lazy stage-1 view and the long view of the fitted table alike
+    val fitted = Fknn.fit(train, k = 5, nClasses = 10)
+    for (mem <- Seq(Fknn.membershipInit(train, k = 5, nClasses = 10), Fknn.memberships(fitted))) {
+      val sums = mem.groupBy("vec_id").agg(sum("membership").as("s"), count(lit(1)).as("n"))
+        .filter(abs(col("s") - 1.0) > 1e-9 || col("n") =!= 10)
+      assert(sums.count() === 0, "Σ_j u_j(x) must be 1.0 (Σ_j n_j = k) over 10 classes")
+      val own = mem.join(train.select(col("vec_id"), col("label")), "vec_id")
+        .filter(col("class") === col("label") && col("membership") < 0.51)
+      assert(own.count() === 0, "own-class membership must be ≥ 0.51")
+    }
+    graft.core.Ckpt.release(fitted)
   }
 
   test("chunked membershipInit ≡ unchunked (kNN-IS numIterations analogue)") {
@@ -108,9 +112,9 @@ class FknnSpec extends SparkSpecBase {
       .filter(col("vec_id") < 150)
     // a huge budget → 1 block (tiny inputs run unchunked); shrinking the
     // budget must grow the count monotonically, ~linearly in 1/budget
-    assert(Fknn.autoBlocks(train, budgetBytes = 1L << 40) === 1)
-    val b64k = Fknn.autoBlocks(train, budgetBytes = 64L << 10)
-    val b16k = Fknn.autoBlocks(train, budgetBytes = 16L << 10)
+    assert(Knn.autoBlocks(train, budgetBytes = 1L << 40) === 1)
+    val b64k = Knn.autoBlocks(train, budgetBytes = 64L << 10)
+    val b16k = Knn.autoBlocks(train, budgetBytes = 16L << 10)
     assert(b16k >= b64k && b16k >= 1)
     // the auto path must be output-invisible, exactly like manual chunking
     val manual = collectSet(Fknn.membershipInit(train, 5, 10))
@@ -134,7 +138,7 @@ class FknnSpec extends SparkSpecBase {
       array((1 to 16).map(i => sin(col("id") * i)): _*).as("v"))
     val labels = spark.range(n).select(col("id").as("vec_id"), (col("id") % 10).cast("int").as("label"))
     val ck = graft.core.Ckpt.truncate(vecs.join(labels, "vec_id").repartition(4))
-    assert(Fknn.autoBlocks(ck) === 1)
+    assert(Knn.autoBlocks(ck) === 1)
     val blocked = Knn.blockwise(ck, "vec_id", -1)(identity)
     assert(blocked eq ck, blocked.queryExecution.analyzed.treeString)
     graft.core.Ckpt.release(ck)
@@ -199,10 +203,71 @@ class FknnSpec extends SparkSpecBase {
     val queries = e.filter(col("vec_id") % 10 === 0 && col("vec_id") < 300)
     val mem = Fknn.membershipInit(train, 5, 10)
     val global = collectSet(Fknn.classify(mem, train, queries, 5))
-    val local1 = collectSet(Fknn.classifyLocal(mem, train, queries, 5, blocks = 1))
+    val fitted = Fknn.fit(train, 5, 10)
+    val local1 = collectSet(Fknn.classifyLocal(fitted, queries, 5, blocks = 1))
     assert(local1 === global, "one block = no locality = exact global FkNN")
-    val local4 = Fknn.classifyLocal(mem, train, queries, 5, blocks = 4)
+    val local4 = Fknn.classifyLocal(fitted, queries, 5, blocks = 4)
     assert(local4.count() === queries.count(), "one prediction per query")
+    graft.core.Ckpt.release(fitted)
+  }
+
+  test("the fitted table's u and each query's vote equal a plain-Scala Keller fold, exactly") {
+    val e = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), Distance.asDouble(col("embedding")).as("v"), col("label"))
+    val train = e.filter(col("vec_id") % 10 =!= 0 && col("vec_id") < 300)
+    val queries = e.filter(col("vec_id") % 10 === 0 && col("vec_id") < 300)
+    val (k, nc) = (5, 10)
+    val fitted = Fknn.fit(train, k, nc)
+    val rows = fitted.collect().map(r =>
+      r.getLong(0) -> (r.getSeq[Double](1).toArray, r.getInt(2), r.getSeq[Double](3).toArray)).toMap
+    // FusedL2's element-order fold
+    def l2(a: Array[Double], b: Array[Double]): Double = {
+      var acc = 0.0
+      a.indices.foreach { i => val d = a(i) - b(i); acc = acc + d * d }
+      math.sqrt(acc)
+    }
+    def nearest(v: Array[Double], exclude: Long): Seq[(Double, Long)] =
+      rows.toSeq.collect { case (t, (tv, _, _)) if t != exclude => (l2(v, tv), t) }.sorted.take(k)
+    // stage 1: u_j = 0.49·n_j/k, + 0.51 on the own class
+    rows.foreach { case (id, (v, label, u)) =>
+      val n = nearest(v, id).map { case (_, t) => rows(t)._2 }
+      val want = Array.tabulate(nc)(j =>
+        0.49 * n.count(_ == j) / k.toDouble + (if (j == label) 0.51 else 0.0))
+      assert(u.toSeq === want.toSeq, s"train row $id")
+    }
+    // stage 2: Σ u·w / Σ w folded over the neighbours in (dist, t_id) order
+    val votes = queries.collect().map { r =>
+      val (num, den) = nearest(r.getSeq[Double](1).toArray, Long.MinValue)
+        .foldLeft((Array.fill(nc)(0.0), 0.0)) { case ((s, ws), (d, t)) =>
+          val g = math.max(d, Fknn.DistEps)
+          val w = 1.0 / (g * g)
+          (s.zip(rows(t)._3).map { case (a, m) => a + m * w }, ws + w)
+        }
+      r.getLong(0) -> num.map(_ / den).toSeq
+    }.toMap
+    val scores = Fknn.classifyScores(fitted, queries, k).collect()
+      .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq }
+    assert(scores === votes)
+    val argmax = votes.map { case (q, u) => q -> u.indexOf(u.max) }
+    assert(Fknn.predict(fitted, queries, k).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap ===
+      argmax)
+    graft.core.Ckpt.release(fitted)
+  }
+
+  test("an exact tie between two classes predicts the lower class") {
+    // two train rows at distance 1 from the query, one voting all for
+    // class 2, one all for class 1: u(q) = (0, 0.5, 0.5) exactly. The
+    // class-2 row has the lower id, so it is folded first.
+    val fitted = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, Array(1.0, 0.0), 2, Array(0.0, 0.0, 1.0)),
+      Row(2L, Array(-1.0, 0.0), 1, Array(0.0, 1.0, 0.0)),
+      Row(3L, Array(9.0, 9.0), 0, Array(1.0, 0.0, 0.0))), 2),
+      StructType(schema.fields :+ StructField("u", ArrayType(DoubleType))))
+    val q = df(Seq(Row(10L, Array(0.0, 0.0), 0)))
+    assert(Fknn.classifyScores(fitted, q, k = 2).collect()
+      .map(r => r.getInt(1) -> r.getDouble(2)).toMap === Map(0 -> 0.0, 1 -> 0.5, 2 -> 0.5))
+    assert(Fknn.predict(fitted, q, k = 2).collect().map(r => r.getLong(0) -> r.getInt(1)).toSeq ===
+      Seq(10L -> 1))
   }
 
   test("crisp kNN majority vote on the fixture") {

@@ -84,8 +84,7 @@ class KeelAndMlSpec extends SparkSpecBase {
       e.filter(col("vec_id") % 10 === 0 && col("vec_id") < 300))
   }
 
-  /** Cross joins plus block kNN searches: each is a query × train search
-    * or the class densify. */
+  /** Cross joins plus block kNN searches: each is a query × train search. */
   private def crossJoins(df: DataFrame): Int =
     df.queryExecution.analyzed.collect {
       case j: Join if j.joinType == Cross => j
@@ -124,12 +123,13 @@ class KeelAndMlSpec extends SparkSpecBase {
     assert(collectSet(chunked) === collectSet(exact))
 
     // version=local runs the per-block approximate variant ≡ classifyLocal
-    val mem = Fknn.membershipInit(train, 5, 10)
+    val fitted = Fknn.fit(train, 5, 10)
     val local = new FknnClassifier().setK(5).setNClasses(10)
       .setVersion("local").setNumIterations(4).fit(train).transform(queries)
       .select(col("vec_id").as("q_id"), col("predicted"))
-    val directLocal = Fknn.classifyLocal(mem, train, queries, 5, blocks = 4)
+    val directLocal = Fknn.classifyLocal(fitted, queries, 5, blocks = 4)
     assert(collectSet(local) === collectSet(directLocal))
+    Ckpt.release(fitted)
 
     // invalid variant rejected at set time
     intercept[IllegalArgumentException] {
@@ -168,7 +168,7 @@ class KeelAndMlSpec extends SparkSpecBase {
     val model =
       try new FknnClassifier().setK(5).setNClasses(10).fit(train)
       finally sc.clearJobGroup()
-    assert(Ckpt.isTruncated(model.memberships))
+    assert(Ckpt.isTruncated(model.fitted))
     // the job records reach the status store through the listener bus
     eventually(timeout(10.seconds), interval(50.millis)) {
       assert(sc.statusTracker.getJobIdsForGroup(group).nonEmpty, "fit ran no job")
@@ -179,8 +179,8 @@ class KeelAndMlSpec extends SparkSpecBase {
     val (train, queries) = split()
     val model = new FknnClassifier().setK(5).setNClasses(10).fit(train)
     val direct = collectSet(Fknn.classify(Fknn.membershipInit(train, 5, 10), train, queries, 5))
-    // stage 1 alone plans two (the self-search and the densify)
-    assert(crossJoins(Fknn.membershipInit(train, 5, 10)) === 2)
+    // stage 1 alone plans one (the self-search)
+    assert(crossJoins(Fknn.membershipInit(train, 5, 10)) === 1)
     (1 to 2).foreach { _ =>
       val out = model.transform(queries)
       assert(crossJoins(out) === 1, "only the query × train search: " +
@@ -214,15 +214,45 @@ class KeelAndMlSpec extends SparkSpecBase {
   test("blocks = 1 plans no block split; local FkNN searches each train block with KnnBlock") {
     val (train, queries) = split()
     val model = new FknnClassifier().setK(5).setNClasses(10).fit(train)
-    val mem = model.memberships
-    for (df <- Seq(Fknn.membershipInit(train, 5, 10), Fknn.classify(mem, train, queries, 5),
+    val fitted = model.fitted
+    for (df <- Seq(Fknn.membershipInit(train, 5, 10), Fknn.predict(fitted, queries, 5),
         model.transform(queries)))
       assert(blockSplits(df) === 0, df.queryExecution.analyzed.treeString)
-    assert(blockSplits(Fknn.classify(mem, train, queries, 5, blocks = 4)) > 0)
-    val local = Fknn.classifyLocal(mem, train, queries, 5, blocks = 4).queryExecution.analyzed
+    assert(blockSplits(Fknn.predict(fitted, queries, 5, blocks = 4)) > 0)
+    val local = Fknn.classifyLocal(fitted, queries, 5, blocks = 4).queryExecution.analyzed
     assert(local.collect { case b: graft.plans.KnnBlock => b }.size === 4, local.treeString)
     assert(!local.exists { case j: Join => j.joinType == Cross; case _ => false },
       local.treeString)
+  }
+
+  test("the fitted table spans defaultParallelism partitions; no search re-spreads it") {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val (train, queries) = split()
+    val model = new FknnClassifier().setK(5).setNClasses(10).fit(train)
+    val rdd = model.fitted.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.rdd }.get
+    assert(rdd.getNumPartitions >= spark.sparkContext.defaultParallelism)
+    def executed(df: DataFrame): Seq[SparkPlan] = {
+      df.collect()
+      new AdaptiveSparkPlanHelper {}.collectWithSubqueries(df.queryExecution.executedPlan) {
+        case p => p
+      }
+    }
+    def roundRobins(nodes: Seq[SparkPlan]): Int = nodes.count {
+      case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
+      case _ => false
+    }
+    val out = model.transform(queries)
+    val nodes = executed(out)
+    assert(roundRobins(nodes) === 0, out.queryExecution.executedPlan.toString)
+    assert(!nodes.exists(_.isInstanceOf[WindowExec]), out.queryExecution.executedPlan.toString)
+    // version=local over the fitted table: one search per train block
+    val local = Fknn.classifyLocal(model.fitted, queries, 5, blocks = 4)
+    assert(local.queryExecution.analyzed.collect { case b: graft.plans.KnnBlock => b }.size === 4)
+    assert(roundRobins(executed(local)) === 0, local.queryExecution.executedPlan.toString)
   }
 
   test("a model fitted inside Ckpt.scoped still transforms after the scope exits") {
@@ -235,7 +265,7 @@ class KeelAndMlSpec extends SparkSpecBase {
     })
     // the scope released nothing the model reads: its membership blocks
     // are still pinned, and a transform after the scope finds them
-    val rdd = model.memberships.queryExecution.analyzed.collectFirst {
+    val rdd = model.fitted.queryExecution.analyzed.collectFirst {
       case lr: LogicalRDD => lr.rdd
     }.get
     assert(rdd.getStorageLevel != StorageLevel.NONE)

@@ -31,14 +31,14 @@ class MetricsSpec extends SparkSpecBase {
   }
 
   test("bucketed AUC matches exact within bucket tolerance on the real score table") {
-    import graft.core.{Distance, Fknn}
+    import graft.core.{Ckpt, Distance, Fknn}
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), Distance.asDouble(col("embedding")).as("v"), col("label"))
     val t = e.filter(col("vec_id") % 10 =!= 0)
     val q = e.filter(col("vec_id") % 10 === 0)
-    val mem = Fknn.membershipInit(t, 5, 10).persist()
+    val fitted = Fknn.fit(t, 5, 10)
     try {
-      val sc0 = Fknn.classifyScores(mem, t, q, 5).filter(col("class") === 0).persist()
+      val sc0 = Fknn.classifyScores(fitted, q, 5).filter(col("class") === 0).persist()
       val truth = e.select(col("vec_id"), col("label"))
       val exact = Metrics.aucBinary(sc0, truth, posLabel = 0).collect().head.getDouble(0)
       val approx = Metrics.aucBinaryBucketed(sc0, truth, posLabel = 0).collect().head.getDouble(0)
@@ -47,7 +47,7 @@ class MetricsSpec extends SparkSpecBase {
       // that one mis-ranked pair's worth of slack
       assert(math.abs(exact - approx) < 0.01, s"exact=$exact approx=$approx")
       sc0.unpersist()
-    } finally mem.unpersist()
+    } finally Ckpt.release(fitted)
   }
 
   test("bucketed AUC at buckets=1 degrades to 0.5 (everything tied), exact stays put") {

@@ -48,14 +48,18 @@ class PropertySpec extends SparkSpecBase {
       val df = vecs.zip(labels).zipWithIndex
         .map { case ((v, l), i) => (i.toLong, v.toArray, l) }
         .toDF("vec_id", "v", "label")
-      val mem = Fknn.membershipInit(df, k = 3, nClasses = nc).collect()
+      // the long view of the fitted table, which must equal the lazy one
+      val fitted = Fknn.fit(df, k = 3, nClasses = nc)
+      val mem = Fknn.memberships(fitted).collect()
+      val lazyOk = mem.toSet == Fknn.membershipInit(df, k = 3, nClasses = nc).collect().toSet
+      graft.core.Ckpt.release(fitted)
       val byId = mem.groupBy(_.getLong(0))
       val sumsOk = byId.values.forall(rs => math.abs(rs.map(_.getDouble(2)).sum - 1.0) < 1e-9)
       val rangeOk = mem.forall(r => r.getDouble(2) >= 0.0 && r.getDouble(2) <= 1.0)
       val ownOk = mem.forall { r =>
         r.getInt(1) != labels(r.getLong(0).toInt) || r.getDouble(2) >= 0.51
       }
-      sumsOk && rangeOk && ownOk
+      sumsOk && rangeOk && ownOk && lazyOk
     }, min = 5)
   }
 

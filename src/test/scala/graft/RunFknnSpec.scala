@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.core.{Distance, Fknn, Metrics}
+import graft.core.{Ckpt, Distance, Fknn, Metrics}
 import graft.run.RunFknn
 
 /** End-to-end spec for the reference-parity CLI runner (SURVEY §3.1
@@ -42,10 +42,11 @@ class RunFknnSpec extends SparkSpecBase {
       val acc = Metrics.accuracy(pred, truth).collect()(0).getDouble(0)
       assert(kv("accuracy").toDouble === acc)
       assert(kv("n_test").toLong === pred.count())
-      val mem = Fknn.membershipInit(t, 5, 10)
+      val fitted = Fknn.fit(t, 5, 10)
       val auc = Metrics.aucBinary(
-        Fknn.classifyScores(mem, t, q, 5).filter(col("class") === 0),
+        Fknn.classifyScores(fitted, q, 5).filter(col("class") === 0),
         truth, posLabel = 0).collect()(0).getDouble(0)
+      Ckpt.release(fitted)
       assert(kv("auc_class0").toDouble === auc)
       // confusion rows in the report sum to n_test
       val confN = report.linesIterator
