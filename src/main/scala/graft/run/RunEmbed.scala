@@ -131,64 +131,56 @@ object RunEmbed {
       .setVectorSize(8).setMinCount(1).setSeed(13L)
       .setWindowSize(2).setNumPartitions(1)
       .fit(walkSentences(walks))
-    val tmp = Files.createTempDirectory("graft_embed").toString
-    model.getVectors
-      .select(col("word"),
-        org.apache.spark.ml.functions.vector_to_array(col("vector"), "float64").as("vector"))
-      .write.mode("overwrite").parquet(s"$tmp/vectors")
-    val vecs = spark.read.parquet(s"$tmp/vectors")
-    // read-out seeds = start nodes of the SAMPLED walks, refined by the
-    // md5-u16 seed budget (the HarmonicSeedBudget mechanism — rows-only
-    // row, so no DuckDB twin is owed): the ranking join stays
-    // ≤ budget·|vocab| at any SF
-    val seeds0 = walks.filter(col("step") === 0)
-      .select(col("node").cast("string").as("w1")).distinct()
-    val nSeeds = seeds0.count()
-    val seeds =
-      if (nSeeds <= seedBudget) seeds0
-      else {
-        val u16 = conv(substring(md5(col("w1")), 1, 4), 16, 10).cast("long")
-        seeds0.filter(pmod(u16, lit((nSeeds + seedBudget - 1) / seedBudget)) === 0)
-      }
-    // Per-SIDE norms + a wide streamed side (round 17, guide §1.2 step
-    // 2 / §2.5): the ranking join is a broadcast nested-loop over
-    // |seeds|·|vocab| pairs, and the old projection evaluated BOTH
-    // norm folds per PAIR — 2/3 of the HOF work recomputed |vocab|
-    // (resp. |seeds|) times — while the streamed vocab side inherited
-    // the temp-parquet scan's 1-2 partitions, so ~4 M interpreted HOF
-    // evals ran in ONE task (OPTIMIZATION_r17.md change 3: a single 2.6 s single-task
-    // job = the whole row's wall). Norms are now computed once per row
-    // on each side (same fold over the same values — bit-identical
-    // doubles), the seed side is broadcast explicitly (≤ seedBudget
-    // rows by construction), and the vocab side is spread to the
-    // session's shuffle width. Values and emitted rows are unchanged.
-    val q = broadcast(vecs.join(seeds, vecs("word") === seeds("w1"))
-      .select(col("word").as("w1"), col("vector").as("v1"),
-        expr("sqrt(aggregate(vector, 0d, (acc, x) -> acc + x * x))").as("nrm1")))
-    val t = vecs.select(col("word").as("w2"), col("vector").as("v2"),
-        expr("sqrt(aggregate(vector, 0d, (acc, x) -> acc + x * x))").as("nrm2"))
-      .repartition(graft.Session.width(vecs))
-    val dot = expr("aggregate(zip_with(v1, v2, (x, y) -> x * y), 0d, (acc, x) -> acc + x)")
-    val out = Ckpt.truncate(
-      q.join(t, col("w1") =!= col("w2"))
-        .select(col("w1"), col("w2"), (dot / (col("nrm1") * col("nrm2"))).as("cos"))
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("w1"))
-            .orderBy(col("cos").desc, col("w2"))))
-        .filter(col("rk") <= k)
-        .select(col("w1").cast("long").as("node"),
-          col("w2").cast("long").as("neighbor"), col("rk"),
-          graft.rel.Queries.rnd(col("cos"), 6).as("cos")))
-    // the result is materialized — the persisted-vector round-trip is
-    // complete and the temp state is disposable
-    deleteRec(Paths.get(tmp))
-    out
-  }
-
-  private def deleteRec(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(p))
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete(_))
+    Stages.withTempDir("graft_embed") { tmp =>
+      model.getVectors
+        .select(col("word"),
+          org.apache.spark.ml.functions.vector_to_array(col("vector"), "float64").as("vector"))
+        .write.mode("overwrite").parquet(s"$tmp/vectors")
+      val vecs = spark.read.parquet(s"$tmp/vectors")
+      // read-out seeds = start nodes of the SAMPLED walks, refined by the
+      // md5-u16 seed budget (the HarmonicSeedBudget mechanism — rows-only
+      // row, so no DuckDB twin is owed): the ranking join stays
+      // ≤ budget·|vocab| at any SF
+      val seeds0 = walks.filter(col("step") === 0)
+        .select(col("node").cast("string").as("w1")).distinct()
+      val nSeeds = seeds0.count()
+      val seeds =
+        if (nSeeds <= seedBudget) seeds0
+        else {
+          val u16 = conv(substring(md5(col("w1")), 1, 4), 16, 10).cast("long")
+          seeds0.filter(pmod(u16, lit((nSeeds + seedBudget - 1) / seedBudget)) === 0)
+        }
+      // Per-SIDE norms + a wide streamed side (round 17, guide §1.2 step
+      // 2 / §2.5): the ranking join is a broadcast nested-loop over
+      // |seeds|·|vocab| pairs, and the old projection evaluated BOTH
+      // norm folds per PAIR — 2/3 of the HOF work recomputed |vocab|
+      // (resp. |seeds|) times — while the streamed vocab side inherited
+      // the temp-parquet scan's 1-2 partitions, so ~4 M interpreted HOF
+      // evals ran in ONE task (OPTIMIZATION_r17.md change 3: a single 2.6 s single-task
+      // job = the whole row's wall). Norms are now computed once per row
+      // on each side (same fold over the same values — bit-identical
+      // doubles), the seed side is broadcast explicitly (≤ seedBudget
+      // rows by construction), and the vocab side is spread to the
+      // session's shuffle width. Values and emitted rows are unchanged.
+      val q = broadcast(vecs.join(seeds, vecs("word") === seeds("w1"))
+        .select(col("word").as("w1"), col("vector").as("v1"),
+          expr("sqrt(aggregate(vector, 0d, (acc, x) -> acc + x * x))").as("nrm1")))
+      val t = vecs.select(col("word").as("w2"), col("vector").as("v2"),
+          expr("sqrt(aggregate(vector, 0d, (acc, x) -> acc + x * x))").as("nrm2"))
+        .repartition(graft.Session.width(vecs))
+      val dot = expr("aggregate(zip_with(v1, v2, (x, y) -> x * y), 0d, (acc, x) -> acc + x)")
+      // materialized, so the temp vectors are disposable once it returns
+      Ckpt.truncate(
+        q.join(t, col("w1") =!= col("w2"))
+          .select(col("w1"), col("w2"), (dot / (col("nrm1") * col("nrm2"))).as("cos"))
+          .withColumn("rk", row_number().over(
+            org.apache.spark.sql.expressions.Window.partitionBy(col("w1"))
+              .orderBy(col("cos").desc, col("w2"))))
+          .filter(col("rk") <= k)
+          .select(col("w1").cast("long").as("node"),
+            col("w2").cast("long").as("neighbor"), col("rk"),
+            graft.rel.Queries.rnd(col("cos"), 6).as("cos")))
+    }
   }
 
   def run(spark: SparkSession, sfDir: String, outDir: String,

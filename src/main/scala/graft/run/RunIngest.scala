@@ -41,7 +41,8 @@ import graft.llm.{AnnSearch, Curation, Dedup, TextAnalysis}
   * Round 12 adds the EMBEDDING leg of the same loop (VERDICT r11 #3):
   * the batch's vectors near-dedup against the persisted IVF index
   * (`semanticDupsAgainstIndex`, nprobe = 2) and survivors append via
-  * `appendToIvfIndex` — see the funnel comment at the stage.
+  * `appendToIvfIndex` — one `ingestVecDelta`, the unit the vector
+  * stream runs per micro-batch.
   *
   * RECURRING mode: if `outdir` already holds an index from a previous
   * run, it is REUSED (with the appended corpus as the standing state)
@@ -234,6 +235,72 @@ object RunIngest {
     (stages.results, stages.results.last.survivors)
   }
 
+  /** ONE vector ingest delta against the persisted IVF index at
+    * `outDir/ivf` — the vector twin of `ingestDelta`. `vecs` is the
+    * batch as (t_id, t_v). The funnel:
+    *   vec_in → vec_id_new (re-crawl guard vs stored ids) →
+    *   vec_sem_dup_vs_index (drop batch vectors with a cosine-ε cross
+    *   pair against any INDEXED vector — `semanticDupsAgainstIndex`)
+    * then the survivors are written to `outDir/delta_vec` and appended
+    * (`appendToIvfIndex`, centroids never retrained), so the next batch
+    * probes against them. `run` invokes it once after its bootstrap;
+    * `RunIngestStream.runVec` invokes it per micro-batch. Returns the
+    * per-stage funnel and the kept count.
+    *
+    * Crash discipline, as the text leg's: delta_vec is the recovery
+    * artifact — the entry reconcile re-appends it if a crash landed
+    * between its write and the IVF append — and a batch with no id-fresh
+    * vector (a re-crawl, or a checkpoint replay) writes nothing and
+    * records 0 for every later stage without running it.
+    */
+  private[run] def ingestVecDelta(spark: SparkSession, vecs: DataFrame,
+      outDir: String, eps: Double, nprobe: Int): (Seq[StageResult], Long) = {
+    val ivfPath = s"$outDir/ivf"
+    if (Files.exists(Paths.get(s"$outDir/delta_vec")) &&
+        Files.exists(Paths.get(s"$ivfPath/cells"))) {
+      val repaired = AnnSearch.reconcileIvfIndex(spark,
+        spark.read.parquet(s"$outDir/delta_vec"), ivfPath)
+      if (repaired > 0)
+        println(s"[ingest] reconciled IVF index: re-appended $repaired t_ids from delta_vec")
+    }
+    val stages = new Stages
+    stages("vec_in")(((), vecs.count()))
+    val fresh = stages.frame("vec_id_new") {
+      vecs.join(spark.read.parquet(s"$ivfPath/cells").select(col("t_id")),
+        Seq("t_id"), "left_anti")
+    }
+    if (stages.results.last.survivors > 0) {
+      // the batch's cell probes computed ONCE: the semantic-dedup pass
+      // reads all nprobe rows, the append reads the rn = 1 slice (the
+      // primary cell — identical tie-break to assignCells, spec-pinned).
+      // Checkpointed so the append, which runs after the delta_vec
+      // write, reads materialized bytes, not a lineage through the
+      // pre-append cells table.
+      val probes = graft.core.Ckpt.truncate(
+        AnnSearch.assignCellsMultiRanked(fresh,
+          spark.read.parquet(s"$ivfPath/centroids"), nprobe))
+      // the stage's survivors are delta_vec as written; the append reads
+      // it back, never a frame whose recomputation reads the appended
+      // state (the text leg's lineage-severing rule). checkIds = false:
+      // vec_id_new just anti-joined the stored ids.
+      stages("vec_sem_dup_vs_index") {
+        val dups = AnnSearch.semanticDupsAgainstIndex(spark, ivfPath, fresh,
+            eps = eps, nprobe = nprobe,
+            probesIn = Some(probes.select(col("t_id"), col("cell"))))
+          .select(col("new_id").as("t_id")).distinct()
+        fresh.join(dups, Seq("t_id"), "left_anti")
+          .write.mode("overwrite").parquet(s"$outDir/delta_vec")
+        ((), spark.read.parquet(s"$outDir/delta_vec").count())
+      }
+      AnnSearch.appendToIvfIndex(spark, spark.read.parquet(s"$outDir/delta_vec"),
+        ivfPath, checkIds = false,
+        assign = Some(probes.filter(col("rn") === 1).select(col("t_id"), col("cell"))))
+      graft.core.Ckpt.release(probes)
+    } else stages.record("vec_sem_dup_vs_index", 0L, 0.0)
+    stages.release()
+    (stages.results, stages.results.last.survivors)
+  }
+
   def run(spark: SparkSession, sfDir: String, outDir: String,
       batchMod: Int = 5, batchRem: Int = 3,
       nearDupThreshold: Double = 0.8,
@@ -241,10 +308,10 @@ object RunIngest {
     Files.createDirectories(Paths.get(outDir))
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
-    // the vec funnel's recorder; it also owns this run's input persists
-    val vStages = new Stages
-    val corpus = vStages.persist(docs.filter(col("doc_id") % batchMod =!= batchRem))
-    val batch = vStages.persist(docs.filter(col("doc_id") % batchMod === batchRem))
+    // owns this run's input persists
+    val inputs = new Stages
+    val corpus = inputs.persist(docs.filter(col("doc_id") % batchMod =!= batchRem))
+    val batch = inputs.persist(docs.filter(col("doc_id") % batchMod === batchRem))
     // standing state: a recurring crawl REUSES the index + corpus its
     // previous run left in outDir (that is what makes the loop
     // incremental — run N's batch near-dedups against every survivor
@@ -277,63 +344,23 @@ object RunIngest {
     }
 
     // ---- embedding leg (round 12, VERDICT r11 #3): the vector side of
-    // the same recurring loop. The standing state is the persisted IVF
-    // index (built from the corpus split's vectors on the first run,
-    // REUSED afterwards — centroids are never retrained on append, the
-    // `appendToIvfIndex` discipline); the batch's vectors run:
-    //   vec_in → vec_id_new (re-crawl guard vs stored ids) →
-    //   vec_sem_dup_vs_index (drop batch vectors with a cosine-ε cross
-    //   pair against any INDEXED vector — `semanticDupsAgainstIndex`,
-    //   nprobe = 2, the dedup_semantic2 straddle setting) → append
-    //   (`appendToIvfIndex`), so the next crawl's batch probes against
-    //   them. Same funnel/report/lineage discipline as the text leg.
+    // the same recurring loop, one `ingestVecDelta` at nprobe = 2 (the
+    // dedup_semantic2 straddle setting). The standing state is the
+    // persisted IVF index, built from the corpus split's vectors on the
+    // first run and REUSED afterwards.
     val vecsAll = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id").as("t_id"),
         graft.core.Distance.asDouble(col("embedding")).as("t_v"))
-    val vCorpus = vStages.persist(vecsAll.filter(col("t_id") % batchMod =!= batchRem))
-    val vBatch = vStages.persist(vecsAll.filter(col("t_id") % batchMod === batchRem))
+    val vCorpus = inputs.persist(vecsAll.filter(col("t_id") % batchMod =!= batchRem))
+    val vBatch = inputs.persist(vecsAll.filter(col("t_id") % batchMod === batchRem))
     val ivfPath = s"$outDir/ivf"
-    // vec-leg entry reconcile — the IVF twin of the text leg's
-    if (Files.exists(Paths.get(s"$outDir/delta_vec")) &&
-        Files.exists(Paths.get(s"$ivfPath/cells"))) {
-      val repaired = AnnSearch.reconcileIvfIndex(spark,
-        spark.read.parquet(s"$outDir/delta_vec"), ivfPath)
-      if (repaired > 0)
-        println(s"[ingest] reconciled IVF index: re-appended $repaired t_ids from delta_vec")
-    }
-    val firstVecRun = !Files.exists(Paths.get(s"$ivfPath/centroids"))
-    if (firstVecRun) {
+    if (!Files.exists(Paths.get(s"$ivfPath/centroids"))) {
       val cent = vCorpus.filter(col("t_id") % 40 === 0)
         .select(col("t_id").as("c_id"), col("t_v").as("c_v"))
       AnnSearch.saveIvfIndex(vCorpus, cent, ivfPath)
     }
-    val vecIn = vStages.frame("vec_in")(vBatch)
-    val vecNew = vStages.frame("vec_id_new") {
-      vecIn.join(spark.read.parquet(s"$ivfPath/cells").select(col("t_id")),
-        Seq("t_id"), "left_anti")
-    }
-    val vecClean = vStages.frame("vec_sem_dup_vs_index") {
-      val dups = AnnSearch.semanticDupsAgainstIndex(spark, ivfPath, vecNew,
-          eps = semanticEps, nprobe = 2)
-        .select(col("new_id").as("t_id")).distinct()
-      vecNew.join(dups, Seq("t_id"), "left_anti")
-    }
-    // same delta-file lineage severing as the text leg: the append must
-    // not depend on frames whose recomputation reads the appended state.
-    // checkIds = false: vec_id_new just anti-joined the stored ids —
-    // the guard's second full-index scan would be pure redundancy here.
-    // The write is GUARDED like the text leg (round-12 ADVICE): a pure
-    // re-crawl batch (vec_id_new = 0) must not overwrite delta_vec —
-    // the vec leg's crash-recovery artifact — with an empty frame. A
-    // crash between the delta_vec write and the IVF append is repaired
-    // on the next run's entry reconcile below.
-    if (vStages.results.find(_.name == "vec_id_new").exists(_.survivors > 0)) {
-      vecClean.write.mode("overwrite").parquet(s"$outDir/delta_vec")
-      AnnSearch.appendToIvfIndex(spark,
-        spark.read.parquet(s"$outDir/delta_vec"), ivfPath, checkIds = false)
-    }
-    val vecKept = vStages.results.last.survivors
-    vStages.release()
+    val (vecStages, vecKept) = ingestVecDelta(spark, vBatch, outDir, semanticEps, nprobe = 2)
+    inputs.release()
     val report =
       s"""ingest run report (incremental)
          |sfdir: $sfDir
@@ -347,10 +374,10 @@ object RunIngest {
          |${Stages.funnel(stages.head.survivors, stages)}
          |index_appended: $kept docs
          |semantic_eps: $semanticEps
-         |vec_in: ${vStages.results.head.survivors}
+         |vec_in: ${vecStages.head.survivors}
          |vec_kept: $vecKept
          |vec funnel: stage survivors dropped sec
-         |${Stages.funnel(vStages.results.head.survivors, vStages.results)}
+         |${Stages.funnel(vecStages.head.survivors, vecStages)}
          |ivf_appended: $vecKept vecs
          |""".stripMargin
     Files.writeString(Paths.get(s"$outDir/report.txt"), report)

@@ -65,6 +65,20 @@ private[run] object Stages {
     (a, elapsed())
   }
 
+  /** Run `body` on a fresh temp dir named `prefix…`, deleted afterwards
+    * whether `body` returns or throws; what `body` returns must no
+    * longer read the dir.
+    */
+  def withTempDir[A](prefix: String)(body: String => A): A = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix)
+    try body(tmp.toString)
+    finally {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+  }
+
   /** Report lines `  name count sec`. */
   def table(stages: Seq[StageResult]): String =
     stages.map(st => f"  ${st.name} ${st.survivors} ${st.wall}%.3f").mkString("\n")

@@ -467,6 +467,25 @@ class RunIngestSpec extends SparkSpecBase {
     assert(ids === Set(1L, 101L, 103L), s"cells hold $ids")
   }
 
+  test("the declared stream rows delete their temp state when they fail") {
+    import graft.run.RunIngestStream
+    val tmpDir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def rowDirs(): Set[String] = {
+      import scala.jdk.CollectionConverters._
+      val ls = java.nio.file.Files.list(tmpDir)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.matches("graft_.*_stream.*")).toSet
+      finally ls.close()
+    }
+    val before = rowDirs()
+    val missing = s"$tmpDir/graft_no_such_sf_dir"
+    Seq[(org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame](
+      RunIngestStream.ingestStreamQuery, RunIngestStream.retractStreamQuery,
+      RunIngestStream.ingestVecStreamQuery, RunIngestStream.retractVecStreamQuery,
+    ).foreach(row => intercept[Exception](row(spark, missing)))
+    assert(rowDirs() -- before === Set.empty[String])
+  }
+
   test("ingest_vec_stream: the declared row's funnel is internally consistent and id-guard non-vacuous") {
     // the exact values are the DuckDB oracle's job (gated at 3 SFs);
     // this pins the row's structural contract: five ordered stages, a
@@ -650,8 +669,27 @@ class RunIngestSpec extends SparkSpecBase {
       "delta_vec must equal the inline cross-pair semantic dedup of the batch")
     assert(report.contains(s"vec_kept: ${expectVec.size}"))
     assert(report.contains(s"ivf_appended: ${expectVec.size} vecs"))
-    Seq("vec_in", "vec_id_new", "vec_sem_dup_vs_index").foreach { st =>
-      assert(report.contains(s"  $st "), s"vec funnel must report stage $st")
+    val batchCounts = Seq("vec_in", "vec_id_new", "vec_sem_dup_vs_index").map { st =>
+      val line = report.linesIterator.find(_.startsWith(s"  $st "))
+      assert(line.isDefined, s"vec funnel must report stage $st")
+      line.get.trim.split(" ")(1).toLong
+    }
+
+    // batch ≡ stream: a second standing state bootstrapped the same way,
+    // the same batch vectors drained through the vector stream as one drop
+    val outS = java.nio.file.Files.createTempDirectory("ingestvs").toString
+    AnnSearch.saveIvfIndex(t, cent, s"$outS/ivf")
+    Tables.embeddings(spark, sfDir).filter(col("vec_id") % 5 === 3)
+      .select(col("vec_id"), col("embedding"))
+      .coalesce(1).write.parquet(s"$outS/drops")
+    val r = graft.run.RunIngestStream.runVec(spark, s"$outS/drops", outS,
+      eps = 0.75, nprobe = 2)
+    val Seq(in, fresh, kept) = batchCounts
+    assert(r.contains(s"micro-batch 0: vec_in=$in vec_id_new=$fresh appended=$kept\n"), r)
+    Seq("delta_vec", "ivf/cells").foreach { tbl =>
+      val (b, st) = (spark.read.parquet(s"$out/$tbl"), spark.read.parquet(s"$outS/$tbl"))
+      assert(b.exceptAll(st).isEmpty && st.exceptAll(b).isEmpty,
+        s"$tbl: the stream must write what the batch runner wrote")
     }
 
     // append visibility: an exact copy of an appended SURVIVOR under a
